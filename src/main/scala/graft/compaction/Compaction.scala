@@ -67,8 +67,7 @@ final class Compaction(
       // sortBy) — otherwise a rewrite would destroy the disjoint file
       // bounds the sorted writes paid a range exchange to create
       val config1 =
-        if (config0.sortBy.nonEmpty || config0.zOrderBy.nonEmpty ||
-            config0.useExactRolling) config0
+        if (config0.sortBy.nonEmpty || config0.zOrderBy.nonEmpty) config0
         else graft.core.WriteOrderCodec.of(Some(snap)) match {
           case Nil   => config0
           case order => config0.copy(sortBy = order)
@@ -215,7 +214,6 @@ final class Compaction(
             // curve, not a lexicographic order: no stamp.
             sortedBy =
               if (config.sortBy.nonEmpty && config.zOrderBy.isEmpty &&
-                  !config.useExactRolling &&
                   (executor eq SparkCompactionExecutor))
                 graft.core.WriteOrderCodec.encode(config.sortBy)
               else "")
@@ -225,7 +223,8 @@ final class Compaction(
         // leaf files read plainly; an empty rewrite validates as 0 rows
         // instead of crashing the schema-less parquet read.
         if (config.enableValidateCompaction) {
-          val input = liveRowsFor(tasks, snap.schemas, snap.schemaId)
+          val input = SparkCompactionExecutor.liveRows(spark, tasks,
+            schemas = snap.schemas, currentSchemaId = snap.schemaId)
           // validate the ADDED files against the rewritten inputs' live
           // rows (for Incremental, untouched data files are out of scope
           // on both sides)
@@ -321,16 +320,6 @@ final class Compaction(
           Map.empty[String, String]))
     }.toMap
   }
-
-  /** Merge-on-read live rows for the given tasks (steps 3-4) — shared
-    * with the validator re-scan, delegating to the Spark executor's
-    * assembly. */
-  def liveRowsFor(tasks: InputFileScanTasks,
-      schemas: Seq[graft.core.TableSchema] = Nil,
-      currentSchemaId: Long = -1L): DataFrame =
-    if (graft.plans.SchemaReconcile.needed(schemas, currentSchemaId, tasks))
-      graft.plans.SchemaReconcile.liveRows(spark, tasks, schemas, currentSchemaId)
-    else SparkCompactionExecutor.liveRows(spark, tasks)
 
   /** [[Maintenance.shouldCompact]] gate in front of [[compact]] — the
     * call a scheduled maintenance tick makes: None means the table did

@@ -227,15 +227,11 @@ object DeleteCompaction {
           .readDataFiles(spark, tasks.dataFiles,
             needSeqNum = true, needFilePathAndPos = true)
           .as("d")
-        val runs = ScanPlanner.consecutiveRuns(tasks.equalityDeleteFiles)(_.equalityIds)
         ScanPlanner.readEqualityDeletes(spark, tasks.equalityDeleteFiles)
-          .zip(runs).map { case ((delDf, ids), run) =>
-            val bytes = run.map(_.lengthBytes).sum
-            val del0 = delDf.as("del")
-            val del =
-              if (bytes > 0 && bytes < broadcastThreshold(spark)) broadcast(del0)
-              else del0
-            val eqCond = ids.map(c => col(s"del.$c") === col(s"d.$c"))
+          .map { eq =>
+            val del0 = eq.df.as("del")
+            val del = if (eq.broadcastHint) broadcast(del0) else del0
+            val eqCond = eq.equalityIds.map(c => col(s"del.$c") === col(s"d.$c"))
               .reduceOption(_ && _)
             val seqCond = col(s"d.$SysHiddenSeqNum") < col(s"del.$SysHiddenSeqNum")
             data.join(del, eqCond.fold(seqCond)(_ && seqCond), "left_semi")
@@ -274,10 +270,4 @@ object DeleteCompaction {
   ): TableSnapshot =
     new graft.txn.CommitManager(tableDir, retry, catalog = catalog)
       .replaceFiles(added, removedDeletePaths, requiredDataPaths, expectedSchemaId)
-
-  private def broadcastThreshold(spark: SparkSession): Long = {
-    val raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    raw.toLongOption.getOrElse(
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw))
-  }
 }

@@ -1,11 +1,11 @@
 package graft.compaction
 
 import graft.core._
-import graft.plans.MergeOnRead
-import graft.plans.MergeOnRead.EqDeleteTable
+import graft.plans.{MergeOnRead, SchemaReconcile}
 import graft.sinks.RollingWriter
 import graft.sources.ScanPlanner
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Pluggable rewrite executor — reference `trait CompactionExecutor`
   * (core/src/executor/mod.rs:33-36,77-87): given a bare
@@ -24,31 +24,13 @@ object SparkCompactionExecutor extends CompactionExecutor {
 
   override def rewriteFiles(spark: SparkSession, request: RewriteFilesRequest,
       sequenceNumber: Long): RewriteFilesResponse = {
-    val config = request.config
-    require(!(config.useExactRolling && config.partitionSpec.nonEmpty),
-      "useExactRolling does not support partition fanout; use the declarative writer")
-    require(!(config.useExactRolling && config.zOrderBy.nonEmpty),
-      "useExactRolling does not support z-order layout; use the declarative writer")
-    require(!(config.useExactRolling && config.sortBy.nonEmpty),
-      "useExactRolling does not support sort layout; use the declarative writer")
     // on an evolved table the rewrite reads through schema reconciliation,
     // so the output files carry the CURRENT schema — compaction migrates
     // old-layout files as a side effect
-    val live =
-      if (graft.plans.SchemaReconcile.needed(
-          request.schemas, request.currentSchemaId, request.tasks))
-        graft.plans.SchemaReconcile.liveRows(
-          spark, request.tasks, request.schemas, request.currentSchemaId)
-      else liveRows(spark, request.tasks)
-    val written =
-      if (config.useExactRolling)
-        graft.sinks.ExactRollingWriter.write(
-          live.repartition(config.targetPartitions), request.outputDir,
-          config.targetFileSizeBytes, config.parquetCompression,
-          config.maxRecordBatchRows, sequenceNumber,
-          bloomColumns = config.bloomColumns)
-      else RollingWriter.write(live, request, sequenceNumber,
-        partitionSpec = config.partitionSpec)
+    val live = liveRows(spark, request.tasks,
+      schemas = request.schemas, currentSchemaId = request.currentSchemaId)
+    val written = RollingWriter.write(live, request, sequenceNumber,
+      partitionSpec = request.config.partitionSpec)
     RewriteFilesResponse(
       dataFiles = written,
       stat = RewriteFilesStat(
@@ -64,45 +46,102 @@ object SparkCompactionExecutor extends CompactionExecutor {
     * their file bytes are under the session broadcast threshold.
     * `keepLineage` retains `sys_hidden_file_path`/`sys_hidden_pos` in
     * the output — the DELETE FROM path selects matching positions from
-    * them. */
+    * them.
+    *
+    * With a schema history (`schemas` + `currentSchemaId`) every file —
+    * data and equality-delete alike — is reconciled to the CURRENT
+    * schema by field id before the delete chain applies:
+    *
+    *  - data files are grouped by schema id — one scan per PHYSICAL
+    *    layout (not per file), each projected by id onto the current
+    *    schema ([[SchemaReconcile.project]]: renames alias, added
+    *    columns fill, dropped ids vanish), then a unionByName. At
+    *    100 TB a table has a handful of historical layouts, so this adds
+    *    a constant number of scan nodes, each column-pruned and
+    *    filter-pushed independently by Catalyst;
+    *  - equality-delete keys recorded under an old schema are translated
+    *    id-wise, so a delete keyed on a since-renamed column still kills
+    *    exactly the rows it targeted; a key the current schema dropped
+    *    fails with [[CompactionError.Config]].
+    *
+    * When no live file was written under a non-current schema there is
+    * one data group, no projection and no key translation — the plan is
+    * exactly the history-less one. */
   def liveRows(spark: SparkSession, tasks: InputFileScanTasks,
-      keepLineage: Boolean = false): DataFrame = {
+      keepLineage: Boolean = false,
+      schemas: Seq[TableSchema] = Nil,
+      currentSchemaId: Long = -1L): DataFrame = {
+    // (schema of a file, current schema) when any file needs reconciling
+    val reconcile: Option[(FileScanTask => TableSchema, TableSchema)] =
+      if (!SchemaReconcile.needed(schemas, currentSchemaId, tasks)) None
+      else {
+        val byId = schemas.map(s => s.schemaId -> s).toMap
+        val current = byId.getOrElse(currentSchemaId,
+          throw CompactionError.Config(
+            s"current schema id $currentSchemaId not in schema history " +
+              s"(${schemas.map(_.schemaId).mkString(", ")})"))
+        val schemaOf = (t: FileScanTask) =>
+          if (t.schemaId < 0 || t.schemaId == currentSchemaId) current
+          else byId.getOrElse(t.schemaId, throw CompactionError.Config(
+            s"file ${t.filePath} written under unknown schema id ${t.schemaId}"))
+        Some((schemaOf, current))
+      }
+
     val needSeq = tasks.equalityDeleteFiles.nonEmpty
     val needPos = keepLineage || tasks.positionDeleteFiles.nonEmpty
-    val data = ScanPlanner.readDataFiles(spark, tasks.dataFiles, needSeq, needPos)
-    val userCols = data.columns.filterNot(MergeOnRead.HiddenCols.contains).toSeq ++
+    // one scan per physical layout, projected by id onto the current one
+    val data = tasks.dataFiles
+      .groupBy(t => reconcile.map(_._1(t).schemaId)).toSeq.sortBy(_._1)
+      .map { case (sid, group) =>
+        val df = ScanPlanner.readDataFiles(spark, group, needSeq, needPos)
+        reconcile match {
+          case Some((schemaOf, current)) if !sid.contains(current.schemaId) =>
+            SchemaReconcile.project(df, schemaOf(group.head), current)
+          case _ => df
+        }
+      }.reduce(_ unionByName _)
+    val userCols = reconcile.fold(
+      data.columns.filterNot(MergeOnRead.HiddenCols.contains).toSeq)(
+      _._2.fields.map(_.name)) ++
       (if (keepLineage) Seq(MergeOnRead.SysHiddenFilePath, MergeOnRead.SysHiddenPos)
        else Nil)
-    val posDel = ScanPlanner.readPositionDeletes(spark, tasks.positionDeleteFiles)
-    // Broadcast gate for position deletes mirrors the equality-delete gate
-    // below: a heavily-deleted table can carry tens of GB of position
+
+    // Broadcast gate for position deletes mirrors the equality-delete
+    // gate: a heavily-deleted table can carry tens of GB of position
     // deletes, and a forced broadcast would OOM the executors — over the
     // threshold, fall back to a shuffled anti-join (AQE may still convert
     // it back at runtime if the actual size turns out small). Reference J1
     // (datafusion_processor.rs:315-345) delegates the same choice to its
     // engine at any delete volume.
-    val posDelBytes = tasks.positionDeleteFiles.map(_.lengthBytes).sum
-    val broadcastPos = posDelBytes > 0 && posDelBytes < broadcastThreshold(spark)
+    val posDel = ScanPlanner.readPositionDeletes(spark, tasks.positionDeleteFiles)
+    val broadcastPos = ScanPlanner.broadcastable(spark,
+      tasks.positionDeleteFiles.map(_.lengthBytes).sum)
 
-    val runs = ScanPlanner.consecutiveRuns(tasks.equalityDeleteFiles)(_.equalityIds)
-    val eqTables = ScanPlanner.readEqualityDeletes(spark, tasks.equalityDeleteFiles)
-      .zip(runs)
-      .map { case ((df, ids), run) =>
-        val bytes = run.map(_.lengthBytes).sum
-        EqDeleteTable(df, ids,
-          broadcastHint = bytes > 0 && bytes < broadcastThreshold(spark))
-      }
+    val eqTables = reconcile.fold(
+      ScanPlanner.readEqualityDeletes(spark, tasks.equalityDeleteFiles)) {
+      case (schemaOf, current) =>
+        ScanPlanner.readEqualityDeletes(spark, tasks.equalityDeleteFiles,
+          t => translateKeys(t, schemaOf(t), current))
+    }
     MergeOnRead.liveRows(data, userCols, posDel, eqTables,
       broadcastPosDeletes = broadcastPos)
   }
 
-  private def broadcastThreshold(spark: SparkSession): Long = {
-    // Spark's own byte-string parser handles every valid suffix
-    // (k/m/g/t/p, with or without trailing b) — don't re-implement it
-    val raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    raw.toLongOption.getOrElse(
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw))
-  }
+  /** An equality-delete file's keys, written under `fileSchema`, as
+    * (current name, column read from the file under its physical name
+    * and cast to the current type). */
+  private def translateKeys(t: FileScanTask, fileSchema: TableSchema,
+      current: TableSchema): Seq[(String, Column)] =
+    t.equalityIds.map { n =>
+      val id = fileSchema.idByName.getOrElse(n,
+        throw CompactionError.Config(
+          s"equality column '$n' of ${t.filePath} not in its schema " +
+            s"${fileSchema.schemaId}"))
+      val cur = current.fieldById.getOrElse(id, throw CompactionError.Config(
+        s"equality-delete ${t.filePath} keys on field $id ('$n'), which " +
+          "the current schema dropped — the delete cannot apply"))
+      cur.name -> col(n).cast(cur.dataType).as(cur.name)
+    }
 }
 
 /** Mock executor — reference core/src/executor/mock.rs:22-29: performs no

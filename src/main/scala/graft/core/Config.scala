@@ -23,32 +23,26 @@ object CompactionType {
 /** Engine configuration.
   *
   * Defaults mirror the reference's `CompactionConfig`
-  * (reference: core/src/config/mod.rs:21-55): batch_parallelism=4,
-  * target_partitions=4, data_file_prefix, target_file_size=1GiB,
-  * enable_validate_compaction=false, max_record_batch_rows=1024,
-  * SNAPPY parquet compression (core/src/config/mod.rs:28-34).
+  * (reference: core/src/config/mod.rs:21-55): target_partitions=4,
+  * data_file_prefix, target_file_size=1GiB,
+  * enable_validate_compaction=false, SNAPPY parquet compression
+  * (core/src/config/mod.rs:28-34). The reference's batch_parallelism
+  * and max_record_batch_rows have no Spark counterpart: scan
+  * parallelism and reader batch size belong to Spark's own planner.
   *
   * Spark mapping: `targetPartitions` governs the output repartition
-  * (reference X2, datafusion_processor.rs:144-155) = `df.repartition(n)`;
-  * `maxRecordBatchRows` maps to `spark.sql.parquet.columnarReaderBatchSize`
-  * and is otherwise internal to Spark's vectorized reader.
+  * (reference X2, datafusion_processor.rs:144-155) = `df.repartition(n)`.
   */
 final case class CompactionConfig(
-    batchParallelism: Int = 4,
     targetPartitions: Int = 4,
     dataFilePrefix: String = "graft-compaction",
     targetFileSizeBytes: Long = 1024L * 1024 * 1024,
     enableValidateCompaction: Boolean = false,
-    maxRecordBatchRows: Int = 1024,
     parquetCompression: String = "snappy",
     /** Keep output data files at the *starting* snapshot's sequence number
       * so deletes committed concurrently still apply
       * (reference: core/src/compaction/mod.rs:268-281,546-566). */
     useStartingSequenceNumber: Boolean = true,
-    /** Use the byte-exact W2 rolling writer (per-batch size feedback,
-      * graft.sinks.ExactRollingWriter) instead of the declarative
-      * maxRecordsPerFile approximation. Flat schemas only. */
-    useExactRolling: Boolean = false,
     /** Partition spec for fanout writes (reference S8): output data files
       * are routed to per-partition-value directories, with values computed
       * by [[PartitionTransform]]s (identity / bucket / truncate / day). */
@@ -115,10 +109,8 @@ final case class CompactionConfig(
 ) {
   require(partialProgressMaxCommits > 0,
     "partialProgressMaxCommits must be > 0")
-  require(batchParallelism > 0, "batchParallelism must be > 0")
   require(targetPartitions > 0, "targetPartitions must be > 0")
   require(targetFileSizeBytes > 0, "targetFileSizeBytes must be > 0")
-  require(maxRecordBatchRows > 0, "maxRecordBatchRows must be > 0")
   require(splitTargetBytes > 0, "splitTargetBytes must be > 0")
   require(zOrderBy.isEmpty || zOrderBy.size == 2,
     "zOrderBy takes exactly two columns (Morton interleave is 2-D here)")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Merge-on-read live-row assembly — the heart of the engine.
   *
   * Re-expresses the reference's single generated query
-  * (`SqlBuilder::build_merge_on_read_sql`,
+  * (`build_merge_on_read_sql`,
   * core/src/executor/datafusion/datafusion_processor.rs:238-399) as
   * declarative DataFrame combinators, letting Catalyst pick the physical
   * join strategy (broadcast-hash anti-join for small delete sides, shuffled
@@ -38,12 +38,6 @@ object MergeOnRead {
   val SysHiddenFilePath = "sys_hidden_file_path"
   val SysHiddenPos = "sys_hidden_pos"
   val HiddenCols: Seq[String] = Seq(SysHiddenSeqNum, SysHiddenFilePath, SysHiddenPos)
-
-  /** SQL table naming (reference datafusion_processor.rs:694-712). */
-  def dataFileTableName(prefix: String) = s"${prefix}_data_file_table"
-  def positionDeleteTableName(prefix: String) = s"${prefix}_position_delete_table"
-  def equalityDeleteTableName(prefix: String, idx: Int) =
-    s"${prefix}_equality_delete_table_$idx"
 
   /** One registered equality-delete table: rows carry the equality-key
     * columns plus `sys_hidden_seq_num`. `broadcastHint` marks the table

@@ -1,29 +1,23 @@
 package graft.plans
 
 import graft.core._
-import graft.plans.MergeOnRead.{EqDeleteTable, SysHiddenSeqNum}
-import graft.sources.ScanPlanner
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Merge-on-read assembly for tables WITH a schema history: every file —
-  * data and equality-delete alike — is reconciled to the CURRENT schema
-  * by field id before the delete chain applies.
+/** Field-id schema reconciliation for tables WITH a schema history: a
+  * file written under an older schema is read under its physical names
+  * and projected onto the CURRENT schema by field id.
   *
   *  - rename: old files are read under their physical name and aliased
   *    to the current one (a projection — stays in whole-stage codegen,
   *    pushes scans' column pruning to the OLD names automatically);
   *  - add: files predating the column scan without it and null-fill via
   *    a literal (constant-folded);
-  *  - drop: dropped ids are simply not projected;
-  *  - equality-delete keys recorded under an old schema are translated
-  *    id-wise, so a delete keyed on a since-renamed column still kills
-  *    exactly the rows it targeted.
+  *  - drop: dropped ids are simply not projected.
   *
-  * Data files are grouped by schema id — one scan per PHYSICAL layout
-  * (not per file), then a unionByName: at 100 TB a table has a handful
-  * of historical layouts, so this adds a constant number of scan nodes,
-  * each column-pruned and filter-pushed independently by Catalyst.
+  * The live-row builder
+  * ([[graft.compaction.SparkCompactionExecutor.liveRows]]) applies it
+  * per physical layout and translates equality-delete keys id-wise.
   */
 object SchemaReconcile {
 
@@ -35,71 +29,12 @@ object SchemaReconcile {
       (tasks.dataFiles ++ tasks.equalityDeleteFiles)
         .exists(t => t.schemaId >= 0 && t.schemaId != currentSchemaId)
 
-  /** The reconciled twin of
-    * [[graft.compaction.SparkCompactionExecutor.liveRows]]. */
-  def liveRows(
-      spark: SparkSession,
-      tasks: InputFileScanTasks,
-      schemas: Seq[TableSchema],
-      currentSchemaId: Long
-  ): DataFrame = {
-    val byId = schemas.map(s => s.schemaId -> s).toMap
-    val current = byId.getOrElse(currentSchemaId,
-      throw CompactionError.Config(
-        s"current schema id $currentSchemaId not in schema history " +
-          s"(${schemas.map(_.schemaId).mkString(", ")})"))
-    def schemaOf(t: FileScanTask): TableSchema =
-      if (t.schemaId < 0 || t.schemaId == currentSchemaId) current
-      else byId.getOrElse(t.schemaId, throw CompactionError.Config(
-        s"file ${t.filePath} written under unknown schema id ${t.schemaId}"))
-
-    val needSeq = tasks.equalityDeleteFiles.nonEmpty
-    val needPos = tasks.positionDeleteFiles.nonEmpty
-
-    // -------- data: one scan per historical layout, projected by id
-    val data = tasks.dataFiles.groupBy(schemaOf(_).schemaId).toSeq
-      .sortBy(_._1).map { case (sid, group) =>
-        val df = ScanPlanner.readDataFiles(spark, group, needSeq, needPos)
-        if (sid == current.schemaId) df else project(df, byId(sid), current)
-      }.reduce(_ unionByName _)
-
-    // -------- deletes: translate keys id-wise, one table per file
-    val eqTables = tasks.equalityDeleteFiles.map { t =>
-      val fileSchema = schemaOf(t)
-      val ids = t.equalityIds.map { n =>
-        val id = fileSchema.idByName.getOrElse(n,
-          throw CompactionError.Config(
-            s"equality column '$n' of ${t.filePath} not in its schema " +
-              s"${fileSchema.schemaId}"))
-        current.fieldById.getOrElse(id, throw CompactionError.Config(
-          s"equality-delete ${t.filePath} keys on field $id ('$n'), which " +
-            "the current schema dropped — the delete cannot apply")).name
-      }
-      val df = spark.read.parquet(t.filePath)
-        .select(t.equalityIds.zip(ids).map { case (o, n) =>
-          val cur = current.fieldById(fileSchema.idByName(o))
-          col(o).cast(cur.dataType).as(n)
-        }: _*)
-        .withColumn(SysHiddenSeqNum, lit(t.sequenceNumber))
-      EqDeleteTable(df, ids,
-        broadcastHint = t.lengthBytes > 0 &&
-          t.lengthBytes < broadcastThreshold(spark))
-    }
-
-    val posDel = ScanPlanner.readPositionDeletes(spark, tasks.positionDeleteFiles)
-    val posDelBytes = tasks.positionDeleteFiles.map(_.lengthBytes).sum
-    MergeOnRead.liveRows(
-      data, current.fields.map(_.name), posDel, eqTables,
-      broadcastPosDeletes =
-        posDelBytes > 0 && posDelBytes < broadcastThreshold(spark))
-  }
-
   /** Project a frame read under `from` onto `to`, by field id; hidden
     * MoR columns ride along untouched. A column the file predates fills
     * its frozen initial-DEFAULT when one exists (constant-folded
     * literal — canonical text from [[graft.core.ColumnDefaults]]),
     * null otherwise. */
-  private def project(df: DataFrame, from: TableSchema, to: TableSchema): DataFrame = {
+  def project(df: DataFrame, from: TableSchema, to: TableSchema): DataFrame = {
     val oldById = from.fieldById
     val cols: Seq[Column] = to.fields.map { f =>
       oldById.get(f.id) match {
@@ -111,11 +46,5 @@ object SchemaReconcile {
     }
     val hidden = df.columns.filter(MergeOnRead.HiddenCols.contains).map(col).toSeq
     df.select(cols ++ hidden: _*)
-  }
-
-  private def broadcastThreshold(spark: SparkSession): Long = {
-    val raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    raw.toLongOption.getOrElse(
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw))
   }
 }

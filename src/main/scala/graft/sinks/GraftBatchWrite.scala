@@ -26,10 +26,10 @@ import org.apache.spark.sql.types.StructType
   * straight into a rolling parquet writer — rows stay in Spark's unsafe
   * format until each field is consumed (no `df.rdd` deserialization),
   * and files roll on the reference's W2 byte policy
-  * ([[RollingPolicy.needBuildNewFile]]) exactly like
-  * [[ExactRollingWriter]]'s task loop.
+  * ([[RollingPolicy.needBuildNewFile]]); rows convert to parquet
+  * through [[ParquetRowCodec]].
   *
-  * Commit safety mirrors ExactRollingWriter: every task ATTEMPT writes
+  * Commit safety: every task ATTEMPT writes
   * under its own `_attempt-<taskId>/` directory and reports its file
   * list in its commit message; Spark's commit coordinator guarantees one
   * winning attempt per partition, the driver renames only the winners
@@ -113,9 +113,10 @@ object GraftBatchWrite {
   def validateSchema(tableDir: String, querySchema: StructType,
       catalog: TableCatalog = FileTableCatalog): Long = {
     querySchema.fields.foreach { f =>
-      if (!ExactRollingWriter.supportedType(f.dataType))
+      if (!ParquetRowCodec.supportedType(f.dataType))
         throw CompactionError.Config(
-          s"graft writes flat primitive schemas; ${f.name}: ${f.dataType} is not supported")
+          s"graft writes primitive and array/struct/map columns; " +
+            s"${f.name}: ${f.dataType} is not supported")
     }
     val snap = catalog.loadOrThrow(tableDir)
     val tableCols: Option[Set[String]] =
@@ -319,8 +320,9 @@ final class GraftDsv2BatchWrite(
     // constraint bind — a second catalog round-trip per write build is
     // a network RPC on a REST/object-store catalog
     val snap = catalog.load(tableDir)
-    // ship the driver's hadoop conf to tasks (same rationale as
-    // ExactRollingWriter: object-store credentials/endpoints)
+    // ship the driver's hadoop conf to tasks (object-store
+    // credentials/endpoints; FileIO.hadoopConfEntries explains why a
+    // bare executor Configuration breaks non-local dirs)
     new GraftDataWriterFactory(writeDir, schema, targetFileSizeBytes,
       compression, GraftBatchWrite.writeConfEntries(snap), partitionSpec,
       constraints = graft.core.Constraints.bindAll(
@@ -686,11 +688,14 @@ final class GraftStreamingDataWriterFactory(
   }
 }
 
-/** Per-task rolling writer: W2 policy consulted once per `batchRows`
-  * rows with a running bytes-per-row estimate (the streaming twin of
-  * [[ExactRollingWriter]]'s buffered loop — no buffering needed here
-  * because DSv2 hands rows one at a time and the parquet writer consumes
-  * each immediately). */
+/** Per-task rolling writer — the runtime realization of the reference's
+  * W2 policy (rolling_iceberg_writer.rs:26-132): before every
+  * `batchRows`-row batch, [[RollingPolicy.needBuildNewFile]] sees (current
+  * writer bytes, estimated incoming bytes, target) and rolls the file when
+  * it fires. The incoming estimate is a running bytes-per-row average of
+  * what this writer has already absorbed (seeded at 256 B/row). No
+  * buffering: DSv2 hands rows one at a time and the parquet writer
+  * consumes each immediately. */
 final class GraftDataWriter(
     attemptDir: String,
     partitionId: Int,
@@ -705,7 +710,7 @@ final class GraftDataWriter(
 ) extends DataWriter[InternalRow] {
 
   private val taskConf = FileIO.confFrom(confEntries)
-  private val message = ExactRollingWriter.toMessageType(schema)
+  private val message = ParquetRowCodec.toMessageType(schema)
   private val factory = new SimpleGroupFactory(message)
   private val codec = CompressionCodecName.valueOf(compression.toUpperCase)
 
@@ -770,7 +775,7 @@ final class GraftDataWriter(
         closeCurrent(); newWriter()
       } else { rowsSinceCheck = 0; bytesAtCheck = writer.getDataSize }
     }
-    writer.write(ExactRollingWriter.rowToGroup(factory, schema, row))
+    writer.write(ParquetRowCodec.rowToGroup(factory, schema, row))
     var s = 0
     while (s < sketchSlots.length) {
       val (i, dt) = sketchSlots(s)

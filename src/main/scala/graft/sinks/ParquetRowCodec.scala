@@ -1,156 +1,18 @@
 package graft.sinks
 
-import graft.core.DataFileMeta
-import graft.operators.RollingPolicy
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type, Types}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
-/** Byte-exact rolling parquet writer — the runtime realization of the
-  * reference's W2 policy (rolling_iceberg_writer.rs:26-132), which the
-  * declarative [[RollingWriter]] can only approximate via
-  * `maxRecordsPerFile`:
-  *
-  * each Spark write task streams its partition through a parquet writer,
-  * and before every `batchRows`-row batch applies
-  * [[RollingPolicy.needBuildNewFile]] to (current writer bytes, estimated
-  * incoming bytes, target) — closing the file and opening the next when
-  * the ported predicate fires. The incoming-size estimate is a running
-  * bytes-per-row average of what this writer has already absorbed
-  * (seeded at 256 B/row), mirroring the reference's use of the incoming
-  * batch's byte size.
-  *
-  * Parallelism is one writer chain per partition (reference X4: one
-  * writer per output stream). Scope: flat schemas (the engine's table
-  * model); a real deployment wraps the output in the commit protocol
-  * ([[graft.txn.CommitManager]]), which this writer leaves untouched.
-  *
-  * Commit safety (the part Spark's own committer would otherwise do):
-  * each task ATTEMPT writes into its own `_attempt-<taskAttemptId>/`
-  * subdirectory and returns the metadata of the files it wrote; the
-  * driver receives exactly ONE surviving attempt per partition from
-  * Spark, renames only those files into `outDir`, and deletes every
-  * attempt directory. A failed-then-retried or speculative attempt can
-  * therefore never leak orphan files into the committed set — the result
-  * is the returned file list, never a directory listing.
+/** Spark InternalRow → parquet codec shared by graft's own parquet
+  * writers (the DSv2 [[GraftDataWriter]] and the catalog's schema
+  * checks): the supported type lattice, the Spark→parquet schema
+  * mapping, and the per-row conversion into parquet example `Group`s.
   */
-object ExactRollingWriter {
-
-  def write(
-      df: DataFrame,
-      outDir: String,
-      targetFileSizeBytes: Long,
-      compression: String = "snappy",
-      batchRows: Int = 1024,
-      sequenceNumber: Long = 0L,
-      /** Parquet bloom filters to emit per output file
-        * ([[graft.core.BloomColumns]]) — compaction preserves the
-        * table's configured point-lookup blooms through rewrites. */
-      bloomColumns: Seq[graft.core.BloomColumns.Spec] = Nil
-  ): Seq[DataFileMeta] = {
-    val schema = df.schema
-    schema.fields.foreach { f =>
-      require(supportedType(f.dataType),
-        s"ExactRollingWriter supports primitive and array/struct/map columns; " +
-          s"${f.name}: ${f.dataType} is not")
-    }
-    graft.io.FileIO.mkdirs(outDir)
-    val codec = CompressionCodecName.valueOf(compression.toUpperCase)
-    // ship the driver's hadoop conf entries to the write tasks
-    // (FileIO.hadoopConfEntries scaladoc explains why a bare
-    // Configuration in the executor breaks non-local dirs)
-    val confEntries: Array[(String, String)] = graft.io.FileIO.hadoopConfEntries()
-
-    // one element per partition: the winning attempt's (path, rowCount)s.
-    // The partition stream is the UNSAFE row representation
-    // (queryExecution.toRdd): no Tungsten -> external-Row deserialization,
-    // no per-field boxing — rows stay in Spark's binary format until the
-    // parquet writer consumes each field. Buffered rows are copy()-ed
-    // (one array copy per UnsafeRow) because the iterator reuses its row.
-    val perTask: Array[Seq[(String, Long)]] =
-      df.queryExecution.toRdd.mapPartitions { rows =>
-        val tc = TaskContext.get()
-        val pid = tc.partitionId()
-        val attemptDir = s"$outDir/_attempt-${tc.taskAttemptId()}"
-        val taskConf = graft.io.FileIO.confFrom(confEntries)
-        val message = toMessageType(schema)
-        val factory = new SimpleGroupFactory(message)
-        val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-        var fileIdx = 0
-        var curPath: String = null
-        var writer: ParquetWriter[Group] = null
-        var rowsInWriter = 0L
-
-        def newWriter(): Unit = {
-          curPath = s"$attemptDir/part-$pid-$fileIdx.parquet"
-          val conf = new Configuration(taskConf)
-          conf.set("parquet.example.schema", message.toString)
-          writer = GraftBatchWrite.applyBloom(
-            ExampleParquetWriter.builder(new HPath(curPath))
-              .withConf(conf)
-              .withCompressionCodec(codec)
-              .withWriteMode(org.apache.parquet.hadoop.ParquetFileWriter.Mode.OVERWRITE),
-            bloomColumns, schema.fieldNames.toSet)
-            .build()
-          rowsInWriter = 0L
-          fileIdx += 1
-        }
-        def close(): Unit = if (writer != null) {
-          writer.close()
-          files += ((curPath, rowsInWriter))
-          writer = null
-        }
-
-        val batch = new Array[InternalRow](batchRows)
-        var bytesPerRow = 256.0
-        while (rows.hasNext) {
-          var n = 0
-          while (n < batchRows && rows.hasNext) { batch(n) = rows.next().copy(); n += 1 }
-          val estIncoming = (bytesPerRow * n).toLong
-          if (writer == null) newWriter()
-          else if (RollingPolicy.needBuildNewFile(
-              writer.getDataSize, estIncoming, targetFileSizeBytes)) {
-            close(); newWriter()
-          }
-          val before = writer.getDataSize
-          var i = 0
-          while (i < n) { writer.write(rowToGroup(factory, schema, batch(i))); i += 1 }
-          rowsInWriter += n
-          // refine the running bytes-per-row estimate from observed growth
-          val grew = writer.getDataSize - before
-          if (grew > 0 && n > 0)
-            bytesPerRow = 0.5 * bytesPerRow + 0.5 * (grew.toDouble / n)
-        }
-        close()
-        Iterator.single(files.toSeq)
-      }.collect()
-
-    // publish the winners under stable names; drop every attempt dir
-    // (losing/speculative attempts' files die here, unreferenced)
-    import graft.io.FileIO
-    val metas = perTask.flatten.map { case (attemptPath, rowCount) =>
-      val name = attemptPath.substring(attemptPath.lastIndexOf('/') + 1)
-      val target = s"$outDir/$name"
-      if (!FileIO.rename(attemptPath, target))
-        throw graft.core.CompactionError.Io(
-          s"failed to publish $attemptPath -> $target")
-      DataFileMeta(target, FileIO.fileLength(target), rowCount, sequenceNumber)
-    }
-    FileIO.listDirectories(outDir)
-      .filter(p => p.substring(p.lastIndexOf('/') + 1).startsWith("_attempt-"))
-      .foreach(FileIO.deleteRecursive)
-    metas.sortBy(_.filePath).toSeq
-  }
+object ParquetRowCodec {
 
   /** Type support of the engine's table model (shared with the DSv2
     * batch writer's up-front schema validation): the primitive lattice

@@ -107,7 +107,7 @@ object GraftBatchScan {
       case BooleanType => g.getBoolean(gi, 0)
       case BinaryType  => g.getBinary(gi, 0).getBytes
       case d: DecimalType =>
-        // physical ladder mirrors [[graft.sinks.ExactRollingWriter
+        // physical ladder mirrors [[graft.sinks.ParquetRowCodec
         // .toMessageType]]: INT32/INT64 carry the unscaled value,
         // FLBA/BINARY a two's-complement big-endian encoding
         g.getType.getType(gi).asPrimitiveType().getPrimitiveTypeName match {
@@ -121,7 +121,7 @@ object GraftBatchScan {
               new java.math.BigInteger(bytes), d.scale), d.precision, d.scale)
         }
       // nested compositions (the writer's standard 3-level LIST / MAP /
-      // struct group shapes, ExactRollingWriter.toParquetType) build
+      // struct group shapes, ParquetRowCodec.toParquetType) build
       // CATALYST values directly — unlike the primitive cases there is
       // no later [[toCatalyst]] boxing pass inside an array
       case ArrayType(et, _) =>

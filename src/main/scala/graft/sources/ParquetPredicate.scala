@@ -25,7 +25,7 @@ import org.apache.spark.sql.types._
   *    absent columns rather than ignoring them;
   *  - the physical type is derived from the table's Spark type through
   *    the engine writer's fixed mapping
-  *    ([[graft.sinks.ExactRollingWriter.toMessageType]]); a foreign file
+  *    ([[graft.sinks.ParquetRowCodec.toMessageType]]); a foreign file
   *    with a different physical layout makes the reader drop the filter
   *    at open time (it wraps the row-group filtering in a fallback);
   *  - NaN comparisons are never pushed (parquet stats ignore NaN, and

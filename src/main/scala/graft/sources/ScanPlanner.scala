@@ -4,7 +4,7 @@ import graft.core._
 import graft.io.FileIO
 import graft.operators.BinPack
 import graft.plans.MergeOnRead._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scan planning: the Spark analog of the reference's S1-S5 layer.
@@ -200,26 +200,44 @@ object ScanPlanner {
   }
 
   /** Read equality-delete files as joinable delete tables: grouped by
-    * CONSECUTIVE runs of identical `equalityIds` (the reference groups
+    * CONSECUTIVE runs of identical key columns (the reference groups
     * consecutive runs, not global distinct —
     * datafusion_processor.rs:481-504) with each FILE's sequence number
     * attached as `sys_hidden_seq_num` (without it the seq-aware
-    * anti-join cannot enforce `data.seq < delete.seq`). */
+    * anti-join cannot enforce `data.seq < delete.seq`). Each run makes
+    * one broadcast decision from its files' bytes ([[broadcastable]]).
+    *
+    * `keys` maps a delete file to its key columns as (table column
+    * name, expression over the file's own columns); by default a file's
+    * `equalityIds` are read as written. The live-row builder passes a
+    * field-id translation for files written under an older schema, so
+    * deletes keyed on a renamed column's old and new name share a run. */
   def readEqualityDeletes(
       spark: SparkSession,
-      tasks: Seq[FileScanTask]
-  ): Seq[(DataFrame, Seq[String])] = {
-    import org.apache.spark.sql.functions._
-    import graft.plans.MergeOnRead.SysHiddenSeqNum
-    consecutiveRuns(tasks)(_.equalityIds).map { run =>
-      val ids = run.head.equalityIds
-      val df = run.map { t =>
+      tasks: Seq[FileScanTask],
+      keys: FileScanTask => Seq[(String, Column)] =
+        t => t.equalityIds.map(n => n -> col(n))
+  ): Seq[EqDeleteTable] =
+    consecutiveRuns(tasks.map(t => (t, keys(t))))(_._2.map(_._1)).map { run =>
+      val df = run.map { case (t, ks) =>
         spark.read.parquet(t.filePath)
-          .select(ids.map(col): _*)
+          .select(ks.map(_._2): _*)
           .withColumn(SysHiddenSeqNum, lit(t.sequenceNumber))
       }.reduce(_ unionByName _)
-      (df, ids)
+      EqDeleteTable(df, run.head._2.map(_._1),
+        broadcastHint = broadcastable(spark, run.map(_._1.lengthBytes).sum))
     }
+
+  /** The delete-side broadcast gate: a delete table whose files total
+    * `bytes` is broadcast iff it is non-empty and under the session's
+    * `spark.sql.autoBroadcastJoinThreshold` (-1 disables). Spark's own
+    * byte-string parser handles every valid suffix (k/m/g/t/p, with or
+    * without trailing b). */
+  def broadcastable(spark: SparkSession, bytes: Long): Boolean = {
+    val raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    val threshold = raw.toLongOption.getOrElse(
+      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw))
+    bytes > 0 && bytes < threshold
   }
 
   /** Group consecutive elements sharing a key, preserving order. */
@@ -230,37 +248,4 @@ object ScanPlanner {
         case _                                     => acc :+ Vector(it)
       }
     }
-
-  /** Register the scan-side tables as temp views under the reference's
-    * naming scheme (S4, file_scan_task_table_provider.rs +
-    * datafusion_processor.rs:694-712): `{prefix}_data_file_table`,
-    * `{prefix}_position_delete_table`,
-    * `{prefix}_equality_delete_table_{i}` — one eq view per consecutive
-    * equality-ids run. Returns the data table name, the optional
-    * position-delete table name, and (name, equalityIds) per eq table,
-    * ready for [[graft.plans.SqlBuilder]] text or `spark.sql`. */
-  def registerTables(
-      spark: SparkSession,
-      prefix: String,
-      tasks: InputFileScanTasks
-  ): (String, Option[String], Seq[(String, Seq[String])]) = {
-    import graft.plans.MergeOnRead._
-    val needSeq = tasks.equalityDeleteFiles.nonEmpty
-    val needPos = tasks.positionDeleteFiles.nonEmpty
-    val dataName = dataFileTableName(prefix)
-    readDataFiles(spark, tasks.dataFiles, needSeq, needPos)
-      .createOrReplaceTempView(dataName)
-    val posName = readPositionDeletes(spark, tasks.positionDeleteFiles).map { df =>
-      val n = positionDeleteTableName(prefix)
-      df.createOrReplaceTempView(n)
-      n
-    }
-    val eqNames = readEqualityDeletes(spark, tasks.equalityDeleteFiles)
-      .zipWithIndex.map { case ((df, ids), i) =>
-        val n = equalityDeleteTableName(prefix, i)
-        df.createOrReplaceTempView(n)
-        (n, ids)
-      }
-    (dataName, posName, eqNames)
-  }
 }

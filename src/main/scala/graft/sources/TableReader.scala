@@ -157,10 +157,8 @@ object TableReader {
         Some(filter.fold(empty)(empty.filter))
       }
     } else {
-      val live =
-        if (SchemaReconcile.needed(snap.schemas, snap.schemaId, tasks))
-          SchemaReconcile.liveRows(spark, tasks, snap.schemas, snap.schemaId)
-        else SparkCompactionExecutor.liveRows(spark, tasks)
+      val live = SparkCompactionExecutor.liveRows(spark, tasks,
+        schemas = snap.schemas, currentSchemaId = snap.schemaId)
       Some(filter.fold(live)(live.filter))
     }
   }
@@ -256,9 +254,8 @@ object TableReader {
     def live(snap: TableSnapshot, files: Seq[FileEntry]): Option[DataFrame] = {
       val tasks = ScanPlanner.toInputTasks(files.map(_.toTask))
       if (tasks.dataFiles.isEmpty) None
-      else if (SchemaReconcile.needed(snap.schemas, snap.schemaId, tasks))
-        Some(SchemaReconcile.liveRows(spark, tasks, snap.schemas, snap.schemaId))
-      else Some(SparkCompactionExecutor.liveRows(spark, tasks))
+      else Some(SparkCompactionExecutor.liveRows(spark, tasks,
+        schemas = snap.schemas, currentSchemaId = snap.schemaId))
     }
     // When the interval straddles the FIRST schema evolution, the before
     // snapshot predates a schema history, so its files still carry
@@ -716,14 +713,6 @@ object TableReader {
       .select((userCols :+ "_commit_version" :+ "_change").map(col): _*))
   }
 
-  /** Parsed broadcast-size gate (mirrors the executor's join gate). */
-  private def broadcastableBytes(spark: SparkSession, bytes: Long): Boolean = {
-    val raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    val thr = raw.toLongOption.getOrElse(
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw))
-    bytes > 0 && bytes < thr
-  }
-
   /** Change rows of a PURE equality-delete commit: before-live rows
     * matching any added delete file's keys, as `-` rows — one scan +
     * per-file (broadcast-gated) semi-joins instead of the two-scan
@@ -793,7 +782,7 @@ object TableReader {
     live0Opt.map { live0 =>
       var remaining = live0
       val dying = keyFrames.map { case (ids, keys0, bytes) =>
-        val keys = if (broadcastableBytes(spark, bytes))
+        val keys = if (ScanPlanner.broadcastable(spark, bytes))
           broadcast(keys0) else keys0
         val d = remaining.as("d")
         val k = keys.as("k")
@@ -840,7 +829,7 @@ object TableReader {
     val posTasks = added.map(_.toTask)
     val pos0 = ScanPlanner.readPositionDeletes(spark, posTasks)
       .getOrElse(return None)
-    val pos = if (broadcastableBytes(spark, added.map(_.sizeBytes).sum))
+    val pos = if (ScanPlanner.broadcastable(spark, added.map(_.sizeBytes).sum))
       broadcast(pos0) else pos0
     val userCols = rows.columns.toSeq.filterNot(c =>
       c == graft.plans.MergeOnRead.SysHiddenFilePath ||
@@ -863,9 +852,8 @@ object TableReader {
         if (f.schemaId >= 0) f else f.copy(schemaId = snap.schemaId))
     val tasks = ScanPlanner.toInputTasks(stamped.map(_.toTask))
     if (tasks.dataFiles.isEmpty) None
-    else if (SchemaReconcile.needed(snap.schemas, snap.schemaId, tasks))
-      Some(SchemaReconcile.liveRows(spark, tasks, snap.schemas, snap.schemaId))
-    else Some(SparkCompactionExecutor.liveRows(spark, tasks))
+    else Some(SparkCompactionExecutor.liveRows(spark, tasks,
+      schemas = snap.schemas, currentSchemaId = snap.schemaId))
   }
 
   /** `after − before` as `+` rows and `before − after` as `-` rows,

@@ -30,11 +30,18 @@ object StreamTuning {
   private val EnvKey = "SPARK_GRAFT_STREAM_STATE_PARTITIONS"
   private val ShuffleKey = "spark.sql.shuffle.partitions"
 
-  def statePartitions(spark: SparkSession): Int = {
-    val session = spark.conf.get(ShuffleKey).toInt
-    sys.env.get(EnvKey).map(_.toInt).filter(_ > 0)
-      .getOrElse(math.min(8, session))
-  }
+  def statePartitions(spark: SparkSession): Int =
+    parseStatePartitions(sys.env.get(EnvKey), spark.conf.get(ShuffleKey).toInt)
+
+  /** The state-partition count from the raw env value (if set) and the
+    * session's shuffle-partition count. A non-positive override falls
+    * back to the default; a non-integer one fails naming the variable
+    * and the value, not with a bare NumberFormatException. */
+  def parseStatePartitions(env: Option[String], sessionPartitions: Int): Int =
+    env.map { raw =>
+      raw.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
+        s"$EnvKey must be an integer partition count, got '$raw'"))
+    }.filter(_ > 0).getOrElse(math.min(8, sessionPartitions))
 
   /** Run `body` (a stateful streaming query: start + awaitTermination)
     * with the session shuffle-partition conf scoped to the state

@@ -119,7 +119,7 @@ object IcebergFormat {
 
   /** Parquet type → Iceberg type JSON, resolving the standard 3-level
     * LIST / MAP group encodings (the shapes
-    * [[graft.sinks.ExactRollingWriter]] emits) and plain groups as
+    * [[graft.sinks.ParquetRowCodec]] emits) and plain groups as
     * structs. */
   private def parquetTypeToIceberg(t: PType, nextId: () => Int): JsonNode =
     if (t.isPrimitive)

@@ -378,25 +378,6 @@ class CompactionSpec extends AnyFunSuite {
     }
   }
 
-  test("compaction with the byte-exact rolling writer yields same rows") {
-    val dir = mkTable()
-    val stat = Compaction.builder()
-      .withSpark(spark).withTableDir(dir)
-      .withConfig(CompactionConfig(
-        targetPartitions = 2, enableValidateCompaction = true,
-        useExactRolling = true, targetFileSizeBytes = 8 * 1024))
-      .build()
-      .compact()
-    assert(stat.rewrittenFilesCount == 4)
-    val snap = TableMetadata.loadOrThrow(dir)
-    val result = spark.read
-      .parquet(snap.files.map(_.path): _*)
-      .as[(Int, String)].collect().toSet
-    assert(result == Set(
-      (3, "Charlie"), (4, "Dave"),
-      (6, "Frank"), (7, "Grace"), (8, "Heidi"), (2, "Bob2")))
-  }
-
   test("partitioned compaction fans out by partition value, strict-validated") {
     val dir = mkTable()
     val stat = Compaction.builder()

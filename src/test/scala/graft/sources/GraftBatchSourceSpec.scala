@@ -245,8 +245,8 @@ class GraftBatchSourceSpec extends AnyFunSuite {
     FileTableCatalog.commitCas(dir, TableSnapshot(1, 1, 0, Nil))
     // the W2 policy is consulted once per 1024-row batch, so the
     // fixture needs several batches' worth of bytes to roll
-    (1L to 5000L).map(i => (i, "x" * 64)).toDF("id", "pad")
-      .coalesce(1)
+    val rows = (1L to 5000L).map(i => (i, "x" * 64)).toDF("id", "pad")
+    rows.coalesce(1)
       .write.format("graft").mode("append")
       .option("targetFileSizeBytes", "16384")
       .save(dir)
@@ -255,13 +255,28 @@ class GraftBatchSourceSpec extends AnyFunSuite {
     assert(snap.version == 2 && snap.lastSequenceNumber == 1)
     assert(data.map(_.recordCount).sum == 5000L)
     assert(data.size > 1, s"16 KiB target over ~350 KB of rows should roll: ${data.size} file(s)")
+    // every non-final file of a task sits in a sane band around the
+    // target: the policy forbids rolling under 10% and forces it past
+    // 1.5x (on-disk size differs from the in-flight estimate, so allow 2x)
+    val target = 16384L
+    val fileOf = """part-(\d+)-(\d+)\.parquet$""".r.unanchored
+    data.groupBy(f => f.path match { case fileOf(task, _) => task })
+      .values.foreach { files =>
+        files.sortBy(f => f.path match { case fileOf(_, i) => i.toInt })
+          .dropRight(1).foreach { f =>
+            assert(f.sizeBytes >= target / 10, s"${f.path} too small: ${f.sizeBytes}")
+            assert(f.sizeBytes <= target * 2, s"${f.path} too large: ${f.sizeBytes}")
+          }
+      }
     assert(data.forall(f => f.sequenceNumber == 1L && f.path.contains("/data/dsv2-")))
     // no attempt debris next to the committed files
     val leftover = graft.io.FileIO.listFilesRecursive(s"$dir/data")
       .filter(_._1.contains("_attempt-"))
     assert(leftover.isEmpty, s"attempt debris: $leftover")
-    // and the written rows read back
-    assert(dsv2(dir).count() == 5000L)
+    // and the written rows read back, as the same multiset
+    val back = dsv2(dir)
+    assert(back.count() == 5000L)
+    assert(back.exceptAll(rows).isEmpty && rows.exceptAll(back).isEmpty)
   }
 
   test("an ALTER TABLE between write planning and commit aborts the commit") {

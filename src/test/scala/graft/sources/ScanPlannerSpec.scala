@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.SparkTestSession
 import graft.core._
-import graft.plans.SqlBuilder
 import graft.sinks.RollingWriter
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -90,39 +89,6 @@ class ScanPlannerSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.files.maxPartitionBytes") != target.toString)
     // and the data still reads completely
     assert(dfRanges.count() == 200000)
-  }
-
-  test("registerTables creates reference-named temp views usable by SqlBuilder text") {
-    val dir = Files.createTempDirectory("sp-reg").toString
-    val f1 = s"$dir/d1.parquet"
-    val s1 = writeOne(Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "name"), f1)
-    val ed = s"$dir/e1.parquet"
-    val s2 = writeOne(Seq(Tuple1(2)).toDF("id"), ed)
-    val tasks = InputFileScanTasks(
-      dataFiles = Seq(FileScanTask(f1, FileContent.Data, s1, sequenceNumber = 1)),
-      positionDeleteFiles = Nil,
-      equalityDeleteFiles = Seq(FileScanTask(ed, FileContent.EqualityDeletes, s2,
-        sequenceNumber = 2, equalityIds = Seq("id"))))
-    val (dataName, posName, eqTables) =
-      ScanPlanner.registerTables(spark, "t1", tasks)
-    assert(dataName == "t1_data_file_table")
-    assert(posName.isEmpty)
-    assert(eqTables == Seq(("t1_equality_delete_table_0", Seq("id"))))
-    // The generated SQL text itself must run on the registered views.
-    // Spark SQL has LEFT ANTI (sides swapped) rather than RIGHT ANTI; the
-    // dialect twin uses the same views:
-    val live = spark.sql(
-      s"""SELECT id, name FROM $dataName d WHERE NOT EXISTS (
-         |  SELECT 1 FROM ${eqTables.head._1} e
-         |  WHERE e.id = d.id AND d.sys_hidden_seq_num < e.sys_hidden_seq_num)
-         |""".stripMargin)
-    assert(live.as[(Int, String)].collect().toSet == Set((1, "a"), (3, "c")))
-    // SqlBuilder text for the same registration is the reference golden shape
-    val sql = SqlBuilder.buildMergeOnReadSql(
-      Seq("id", "name"), Some(dataName), posName,
-      eqTables.map { case (n, ids) => SqlBuilder.EqDeleteMeta(n, ids) },
-      needFilePathAndPos = false)
-    assert(sql.contains("t1_equality_delete_table_0 RIGHT ANTI JOIN"))
   }
 
   test("fanout partitioned write routes rows to partition dirs") {

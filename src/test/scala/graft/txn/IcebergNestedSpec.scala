@@ -122,9 +122,10 @@ class IcebergNestedSpec extends AnyFunSuite {
       spark.sparkContext.parallelize(Seq(
         Row(1L, Seq("a"), Seq(Row(1L, "p"))),
         Row(2L, Seq("b", "c"), Seq.empty[Row])), 1), schema)
-    graft.sinks.ExactRollingWriter.write(df, s"$dir/out", 1024 * 1024)
-    val file = new java.io.File(s"$dir/out").listFiles()
-      .filter(_.getName.endsWith(".parquet")).head.getPath
+    FileTableCatalog.commitCas(dir, TableSnapshot(1, 1, 0, Nil))
+    df.write.format("graft").mode("append").save(dir)
+    val file = FileTableCatalog.loadOrThrow(dir).files
+      .filter(_.content == "data").head.path
     val fields = IcebergFormat.inferSchema(file)
     assert(fields.map(_.name) == Seq("id", "tags", "ev"))
     assert(fields(0).typ == "long")
