@@ -446,7 +446,7 @@ object MaterializedView {
       schemaTypes(a.col) match {
         case LongType | IntegerType | ShortType | ByteType |
              DoubleType | FloatType | StringType | DateType |
-             TimestampType | BooleanType => ()
+             TimestampType | TimestampNTZType | BooleanType => ()
         case _: DecimalType => ()
         case other => throw CompactionError.Config(
           s"${a.fn} over '${a.col}': ${other.simpleString} is not an " +

@@ -245,8 +245,8 @@ object StreamTailQuery {
     // stateful query: state partitions sized by key volume, not cores
     // ([[graft.streaming.StreamTuning]] — per-partition per-batch fixed
     // state-store cost dominates at serving scale)
-    graft.streaming.StreamTuning.withStatePartitions(spark) {
-      val q = spark.readStream.format("graft").load(tableDir)
+    graft.streaming.StreamTuning.withStatePartitions(spark) { session =>
+      val q = session.readStream.format("graft").load(tableDir)
         .dropDuplicates("event_id")
         .writeStream.format("parquet")
         .option("path", out)
@@ -304,16 +304,16 @@ object StreamTailQuery {
     val out = Files.createTempDirectory(s"graft-sjoin-sink-$tag").toString
     val ckpt = Files.createTempDirectory(s"graft-sjoin-ckpt-$tag").toString
     val hour6 = 6L * 3600L * 1000000000L
-    val p = spark.readStream.format("graft").load(pDir)
-      .select(col("event_id").as("p_id"), col("ts").as("p_ts"),
-        col("user_id"))
-    val c = spark.readStream.format("graft").load(cDir)
-      .select(col("event_id").as("c_id"), col("ts").as("c_ts"),
-        col("user_id").as("c_user"))
     // stateful stream-stream join: 4 state stores x state partitions x
     // per-batch delta+fsync — size the state partitioning by key
     // volume, not cores ([[graft.streaming.StreamTuning]])
-    graft.streaming.StreamTuning.withStatePartitions(spark) {
+    graft.streaming.StreamTuning.withStatePartitions(spark) { session =>
+      val p = session.readStream.format("graft").load(pDir)
+        .select(col("event_id").as("p_id"), col("ts").as("p_ts"),
+          col("user_id"))
+      val c = session.readStream.format("graft").load(cDir)
+        .select(col("event_id").as("c_id"), col("ts").as("c_ts"),
+          col("user_id").as("c_user"))
       val q = p.join(c,
           col("user_id") === col("c_user") &&
             col("c_ts") >= col("p_ts") - hour6 && col("c_ts") <= col("p_ts"))

@@ -6,16 +6,16 @@ import graft.operators.RollingPolicy
 import graft.txn.{CommitManager, FileEntry, FileTableCatalog, TableCatalog}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetWriter}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.{streaming => sstreaming}
 import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types._
 
 /** DSv2 BATCH append — `df.write.format("graft").mode("append")
   * .save(tableDir)` commits data files through the same CAS line every
@@ -26,8 +26,10 @@ import org.apache.spark.sql.types.StructType
   * straight into a rolling parquet writer — rows stay in Spark's unsafe
   * format until each field is consumed (no `df.rdd` deserialization),
   * and files roll on the reference's W2 byte policy
-  * ([[RollingPolicy.needBuildNewFile]]); rows convert to parquet
-  * through [[ParquetRowCodec]].
+  * ([[RollingPolicy.needBuildNewFile]]); rows encode to parquet
+  * through Spark's own `ParquetWriteSupport`, the encoder every other
+  * graft write (compaction, `TableWrites`, streaming ingest) goes
+  * through, under an encoding pinned in [[GraftDataWriter]].
   *
   * Commit safety: every task ATTEMPT writes
   * under its own `_attempt-<taskId>/` directory and reports its file
@@ -45,6 +47,23 @@ import org.apache.spark.sql.types.StructType
   * table model.
   */
 object GraftBatchWrite {
+
+  /** Type support of the engine's table model, checked up front by the
+    * DSv2 write ([[validateSchema]]) and the catalog's CREATE/CTAS
+    * ([[graft.sql.GraftCatalog]]): the primitive lattice plus
+    * ARRAY/STRUCT/MAP compositions of it. Nested columns ride the row
+    * read path — [[graft.sources.GraftMorColumnarReader.supportedSchema]]
+    * gates them off the vectorized fill. */
+  private[graft] def supportedType(dt: DataType): Boolean = dt match {
+    case LongType | IntegerType | DoubleType | FloatType | StringType |
+         BooleanType | TimestampType | TimestampNTZType | DateType |
+         BinaryType => true
+    case _: DecimalType => true
+    case ArrayType(et, _) => supportedType(et)
+    case MapType(kt, vt, _) => supportedType(kt) && supportedType(vt)
+    case StructType(fields) => fields.forall(f => supportedType(f.dataType))
+    case _ => false
+  }
 
   /** Hadoop conf entries shipped to write tasks, extended with the
     * table's bloom-column config ([[graft.core.BloomColumns]]) so every
@@ -65,9 +84,9 @@ object GraftBatchWrite {
     * columns absent from the write schema skip (a rename/drop degrades
     * the optimization, never the write). Columns without an explicit
     * ndv use parquet's adaptive bloom writer. */
-  def applyBloom(b: org.apache.parquet.hadoop.example.ExampleParquetWriter.Builder,
+  def applyBloom[T, B <: ParquetWriter.Builder[T, B]](b: B,
       specs: Seq[graft.core.BloomColumns.Spec],
-      schemaCols: Set[String]): org.apache.parquet.hadoop.example.ExampleParquetWriter.Builder = {
+      schemaCols: Set[String]): B = {
     // case-insensitive resolution to the schema's own casing — parquet
     // column paths are case-sensitive even though Spark identifiers
     // are not
@@ -113,7 +132,7 @@ object GraftBatchWrite {
   def validateSchema(tableDir: String, querySchema: StructType,
       catalog: TableCatalog = FileTableCatalog): Long = {
     querySchema.fields.foreach { f =>
-      if (!ParquetRowCodec.supportedType(f.dataType))
+      if (!supportedType(f.dataType))
         throw CompactionError.Config(
           s"graft writes primitive and array/struct/map columns; " +
             s"${f.name}: ${f.dataType} is not supported")
@@ -489,7 +508,6 @@ final class GraftFanoutDataWriter(
     compression: String,
     confEntries: Array[(String, String)]
 ) extends DataWriter[InternalRow] {
-  import org.apache.spark.sql.types._
 
   private val slots: Seq[(graft.core.PartitionTransform, Int, DataType)] =
     partitionSpec.map { t =>
@@ -710,14 +728,13 @@ final class GraftDataWriter(
 ) extends DataWriter[InternalRow] {
 
   private val taskConf = FileIO.confFrom(confEntries)
-  private val message = ParquetRowCodec.toMessageType(schema)
-  private val factory = new SimpleGroupFactory(message)
+  private val writeConf = GraftDataWriter.pinnedWriteConf(taskConf, schema)
   private val codec = CompressionCodecName.valueOf(compression.toUpperCase)
 
   private val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
   private var fileIdx = 0
   private var curPath: String = _
-  private var writer: ParquetWriter[Group] = _
+  private var writer: ParquetWriter[InternalRow] = _
   private var rowsInWriter = 0L
   private var rowsSinceCheck = 0
   private var bytesAtCheck = 0L
@@ -738,15 +755,15 @@ final class GraftDataWriter(
 
   private def newWriter(): Unit = {
     curPath = s"$attemptDir/${namePrefix}part-$partitionId-$fileIdx.parquet"
-    val conf = new Configuration(taskConf)
-    conf.set("parquet.example.schema", message.toString)
-    writer = GraftBatchWrite.applyBloom(
-      ExampleParquetWriter.builder(new HPath(curPath))
-        .withConf(conf)
-        .withCompressionCodec(codec)
-        .withWriteMode(ParquetFileWriter.Mode.OVERWRITE),
-      bloomSpecs, schema.fieldNames.toSet)
-      .build()
+    writer = SQLConf.withExistingConf(GraftDataWriter.PinnedSqlConf) {
+      GraftBatchWrite.applyBloom[InternalRow, GraftDataWriter.RowWriterBuilder](
+        new GraftDataWriter.RowWriterBuilder(new HPath(curPath))
+          .withConf(writeConf)
+          .withCompressionCodec(codec)
+          .withWriteMode(ParquetFileWriter.Mode.OVERWRITE),
+        bloomSpecs, schema.fieldNames.toSet)
+        .build()
+    }
     rowsInWriter = 0L
     rowsSinceCheck = 0
     bytesAtCheck = 0L
@@ -775,7 +792,7 @@ final class GraftDataWriter(
         closeCurrent(); newWriter()
       } else { rowsSinceCheck = 0; bytesAtCheck = writer.getDataSize }
     }
-    writer.write(ParquetRowCodec.rowToGroup(factory, schema, row))
+    writer.write(row)
     var s = 0
     while (s < sketchSlots.length) {
       val (i, dt) = sketchSlots(s)
@@ -799,4 +816,46 @@ final class GraftDataWriter(
   }
 
   override def close(): Unit = ()
+}
+
+object GraftDataWriter {
+
+  /** The DSv2 writer's Hadoop conf: the task conf plus the row schema
+    * and an encoding pinned in code, so no session setting can change
+    * the files — standard 3-level LIST/MAP shapes and the INT32/INT64/
+    * FLBA decimal ladder (non-legacy format), INT64 `TIMESTAMP(MICROS)`
+    * for both timestamp types (graft's readers decode it natively), no
+    * field ids and no variant annotation. */
+  private def pinnedWriteConf(taskConf: Configuration,
+      schema: StructType): Configuration = {
+    val conf = new Configuration(taskConf)
+    ParquetWriteSupport.setSchema(schema, conf)
+    conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, "false")
+    conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
+      SQLConf.ParquetOutputTimestampType.TIMESTAMP_MICROS.toString)
+    conf.set(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key, "false")
+    conf.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key, "false")
+    conf
+  }
+
+  /** `ParquetWriteSupport` reads its date/timestamp rebase modes from
+    * `SQLConf.get` when it is constructed; writers are built under this
+    * conf so the session's `datetimeRebaseModeInWrite` cannot reach the
+    * files (CORRECTED: proleptic Gregorian values, written as is). */
+  private val PinnedSqlConf: SQLConf = {
+    val c = new SQLConf
+    c.setConf(SQLConf.PARQUET_REBASE_MODE_IN_WRITE,
+      org.apache.spark.sql.internal.LegacyBehaviorPolicy.CORRECTED)
+    c.setConf(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE,
+      org.apache.spark.sql.internal.LegacyBehaviorPolicy.CORRECTED)
+    c
+  }
+
+  /** `ParquetWriter` over Spark's row encoder. */
+  private final class RowWriterBuilder(path: HPath)
+      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](path) {
+    override def self(): RowWriterBuilder = this
+    override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new ParquetWriteSupport
+  }
 }

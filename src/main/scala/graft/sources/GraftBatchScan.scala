@@ -12,6 +12,7 @@ import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.parquet.graftbridge.Int96Bridge
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -84,8 +85,10 @@ object GraftBatchScan {
     }.toSet
 
   /** Spark-type-driven extraction of one field from a parquet example
-    * [[Group]], tolerant of INT32-backed long columns. Shared by the
-    * batch reader and the streaming tail reader. */
+    * [[Group]], tolerant of INT32-backed long columns and of INT96
+    * timestamps (what Spark's own writer emits under a default session,
+    * and what imported Hive tables hold). Shared by the batch reader and
+    * the streaming tail reader. */
   private[graft] def groupValue(g: Group, gi: Int, dt: DataType, name: String): Any =
     if (g.getFieldRepetitionCount(gi) == 0) null
     else dt match {
@@ -93,6 +96,8 @@ object GraftBatchScan {
         g.getType.getType(gi).asPrimitiveType().getPrimitiveTypeName match {
           case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32 =>
             g.getInteger(gi, 0).toLong
+          case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96 =>
+            Int96Bridge.micros(g.getInt96(gi, 0))
           case _ => g.getLong(gi, 0)
         }
       case IntegerType | DateType => g.getInteger(gi, 0)
@@ -107,8 +112,8 @@ object GraftBatchScan {
       case BooleanType => g.getBoolean(gi, 0)
       case BinaryType  => g.getBinary(gi, 0).getBytes
       case d: DecimalType =>
-        // physical ladder mirrors [[graft.sinks.ParquetRowCodec
-        // .toMessageType]]: INT32/INT64 carry the unscaled value,
+        // parquet's decimal physical ladder, as graft's writers emit
+        // it: INT32/INT64 carry the unscaled value,
         // FLBA/BINARY a two's-complement big-endian encoding
         g.getType.getType(gi).asPrimitiveType().getPrimitiveTypeName match {
           case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32 =>
@@ -120,10 +125,10 @@ object GraftBatchScan {
             Decimal(new java.math.BigDecimal(
               new java.math.BigInteger(bytes), d.scale), d.precision, d.scale)
         }
-      // nested compositions (the writer's standard 3-level LIST / MAP /
-      // struct group shapes, ParquetRowCodec.toParquetType) build
-      // CATALYST values directly — unlike the primitive cases there is
-      // no later [[toCatalyst]] boxing pass inside an array
+      // nested compositions (the standard 3-level LIST / MAP / struct
+      // group shapes graft's writers emit) build CATALYST values directly
+      // — unlike the primitive cases there is no later [[toCatalyst]]
+      // boxing pass inside an array
       case ArrayType(et, _) =>
         val lg = g.getGroup(gi, 0)
         requireChild(lg, "list", name)
@@ -191,6 +196,31 @@ object GraftBatchScan {
           s"(expected a single repeated '$expect' group in ${t.getName})")
   }
 
+  /** One equality-delete file's per-row probe, specialized once against
+    * the file's group type: key components extract (pre-normalized via
+    * [[eqKeyExtractor]]) into a REUSED buffer wrapped by a REUSED Seq
+    * view — zero per-row key-tuple allocation (the old path built two
+    * Seqs and re-ran name→index + type dispatch per row per delete
+    * file). The view's structural Seq equality/hash matches the List
+    * keys [[loadEqKeySets]] builds (`EqProbeSpec` pins this). */
+  private[graft] final class EqProbe(extract: Array[Group => Any],
+      set: java.util.HashSet[Seq[Any]]) {
+    private val buf = new Array[Any](extract.length)
+    private val view: scala.collection.Seq[Any] =
+      scala.collection.mutable.ArraySeq.make(buf)
+    /** true = the row SURVIVES this delete file. */
+    def live(g: Group): Boolean = {
+      var i = 0
+      while (i < extract.length) {
+        val v = extract(i)(g)
+        if (v == null) return true // a null key component never matches
+        buf(i) = v
+        i += 1
+      }
+      !set.contains(view)
+    }
+  }
+
   /** Catalyst boxing for [[groupValue]] output (strings → UTF8String). */
   private[graft] def toCatalyst(v: Any): Any = v match {
     case s: String => UTF8String.fromString(s)
@@ -217,6 +247,9 @@ object GraftBatchScan {
         if (prim == PrimitiveTypeName.INT32)
           g => if (g.getFieldRepetitionCount(gi) == 0) null
                else g.getInteger(gi, 0).toLong
+        else if (prim == PrimitiveTypeName.INT96)
+          g => if (g.getFieldRepetitionCount(gi) == 0) null
+               else Int96Bridge.micros(g.getInt96(gi, 0))
         else
           g => if (g.getFieldRepetitionCount(gi) == 0) null
                else g.getLong(gi, 0)
@@ -264,6 +297,10 @@ object GraftBatchScan {
         if (prim == PrimitiveTypeName.INT32)
           g => if (g.getFieldRepetitionCount(gi) == 0) null
                else java.lang.Long.valueOf(g.getInteger(gi, 0).toLong)
+        else if (prim == PrimitiveTypeName.INT96)
+          g => if (g.getFieldRepetitionCount(gi) == 0) null
+               else java.lang.Long.valueOf(
+                 Int96Bridge.micros(g.getInt96(gi, 0)))
         else
           g => if (g.getFieldRepetitionCount(gi) == 0) null
                else java.lang.Long.valueOf(g.getLong(gi, 0))
@@ -1336,7 +1373,8 @@ final class GraftScan(
         case org.apache.spark.sql.types.LongType      => Some(Long.box(v))
         case org.apache.spark.sql.types.IntegerType   => Some(Int.box(v.toInt))
         case org.apache.spark.sql.types.DateType      => Some(Int.box(v.toInt))
-        case org.apache.spark.sql.types.TimestampType => Some(Long.box(v))
+        case org.apache.spark.sql.types.TimestampType |
+             org.apache.spark.sql.types.TimestampNTZType => Some(Long.box(v))
         case _                                        => None
       }
       val his = files.flatMap(f => FileEntry.loHi(f.bounds.getOrElse(c, Nil)))
@@ -1707,35 +1745,11 @@ final class GraftMorPartitionReader(
   // predates materialize their default (or null) as a constant.
   private var outExtract: Array[Group => Any] = _
 
-  /** One equality-delete file's per-row probe, specialized once against
-    * the file's group type: key components extract (pre-normalized via
-    * [[GraftBatchScan.eqKeyExtractor]]) into a REUSED buffer wrapped by
-    * a REUSED Seq view — zero per-row key-tuple allocation (the old
-    * path built two Seqs and re-ran name→index + type dispatch per row
-    * per delete file). The view's structural Seq equality/hash matches
-    * the loaded set's List keys. */
-  private final class EqProbe(extract: Array[Group => Any],
-      set: java.util.HashSet[Seq[Any]]) {
-    private val buf = new Array[Any](extract.length)
-    private val view: scala.collection.Seq[Any] =
-      scala.collection.mutable.ArraySeq.make(buf)
-    /** true = the row SURVIVES this delete file. */
-    def live(g: Group): Boolean = {
-      var i = 0
-      while (i < extract.length) {
-        val v = extract(i)(g)
-        if (v == null) return true // a null key component never matches
-        buf(i) = v
-        i += 1
-      }
-      !set.contains(view)
-    }
-  }
-  private var eqProbes: Array[EqProbe] = _
+  private var eqProbes: Array[GraftBatchScan.EqProbe] = _
   private def buildEqProbes(t: org.apache.parquet.schema.GroupType)
-      : Array[EqProbe] =
+      : Array[GraftBatchScan.EqProbe] =
     eqKeySets.map { case (cols, set) =>
-      new EqProbe(cols.toArray.map { c =>
+      new GraftBatchScan.EqProbe(cols.toArray.map { c =>
         part.columnMap.getOrElse(c, Some(c)) match {
           case None =>
             val v = defaultJvm.get(c)

@@ -11,6 +11,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.connector.read.PartitionReader
+import org.apache.spark.sql.execution.datasources.parquet.graftbridge.Int96Bridge
 import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
@@ -359,8 +360,7 @@ final class GraftMorColumnarReader(
       dst(i) =
         if (cr.getCurrentDefinitionLevel != maxDef) null
         else dt match {
-          case LongType | TimestampType | TimestampNTZType =>
-            if (phys == INT32) cr.getInteger.toLong else cr.getLong
+          case LongType | TimestampType | TimestampNTZType => decodeLong(cr, phys)
           case IntegerType | DateType => cr.getInteger
           case DoubleType             => // FLOAT = pre-widening file
             if (phys == FLOAT) cr.getFloat.toDouble else cr.getDouble
@@ -374,6 +374,19 @@ final class GraftMorColumnarReader(
         }
       cr.consume()
       i += 1
+    }
+  }
+
+  /** One long/timestamp value off the cursor: INT32-backed longs widen,
+    * INT96 timestamps (Spark's default writer output, imported Hive
+    * tables) decode to epoch micros. */
+  private def decodeLong(cr: ColumnReader,
+      phys: org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName): Long = {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    phys match {
+      case INT32 => cr.getInteger.toLong
+      case INT96 => Int96Bridge.micros(cr.getBinary)
+      case _     => cr.getLong
     }
   }
 
@@ -442,7 +455,7 @@ final class GraftMorColumnarReader(
         if (!defined) v.putNull(o)
         else dt match {
           case LongType | TimestampType | TimestampNTZType =>
-            v.putLong(o, if (phys == INT32) cr.getInteger.toLong else cr.getLong)
+            v.putLong(o, decodeLong(cr, phys))
           case IntegerType | DateType => v.putInt(o, cr.getInteger)
           case DoubleType             => // FLOAT = pre-widening file
             v.putDouble(o, if (phys == FLOAT) cr.getFloat.toDouble else cr.getDouble)

@@ -24,8 +24,8 @@ import org.apache.spark.sql.types._
   *    (`columnMap(col) = Some(phys)`) — parquet rejects predicates on
   *    absent columns rather than ignoring them;
   *  - the physical type is derived from the table's Spark type through
-  *    the engine writer's fixed mapping
-  *    ([[graft.sinks.ParquetRowCodec.toMessageType]]); a foreign file
+  *    the engine writer's fixed mapping (the pinned encoding of
+  *    [[graft.sinks.GraftBatchWrite.pinnedWriteConf]]); a foreign file
   *    with a different physical layout makes the reader drop the filter
   *    at open time (it wraps the row-group filtering in a fallback);
   *  - NaN comparisons are never pushed (parquet stats ignore NaN, and

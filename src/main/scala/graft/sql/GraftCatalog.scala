@@ -2,7 +2,7 @@ package graft.sql
 
 import graft.core.CompactionError
 import graft.io.FileIO
-import graft.sinks.ParquetRowCodec
+import graft.sinks.GraftBatchWrite
 import graft.streaming.{GraftTable, GraftTableSource}
 import graft.txn.{FileTableCatalog, SchemaEvolution, SchemaOp, TableSnapshot}
 import org.apache.spark.sql.Column
@@ -460,7 +460,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
       partitions: Array[Transform],
       properties: util.Map[String, String]): GraftCatalog.StagedPlan = {
     schema.fields.foreach { fld =>
-      if (!ParquetRowCodec.supportedType(fld.dataType))
+      if (!GraftBatchWrite.supportedType(fld.dataType))
         throw CompactionError.Config(
           s"graft tables hold primitive and array/struct/map columns; " +
             s"${fld.name}: ${fld.dataType} is not supported")

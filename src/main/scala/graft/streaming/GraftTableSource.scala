@@ -48,8 +48,8 @@ import scala.jdk.CollectionConverters._
   *
   * Scale: planning walks snapshot metadata only (no file IO); each
   * appended file becomes one input partition, so read parallelism is
-  * the append fan-out. Flat primitive schemas (the
-  * [[graft.sinks.ParquetRowCodec]] primitive lattice) — nested types
+  * the append fan-out. Flat primitive schemas (the primitive part of
+  * [[graft.sinks.GraftBatchWrite.supportedType]]) — nested types
   * would need the vectorized reader.
   */
 class GraftTableProvider extends TableProvider with DataSourceRegister {
@@ -454,7 +454,7 @@ final class GraftReaderFactory(schema: StructType,
 }
 
 /** Row-by-row parquet reader over the example Group model — the exact
-  * READ twin of [[graft.sinks.ParquetRowCodec]]'s write bridge; flat
+  * READ side of the DSv2 writer's encoding; flat
   * primitive schemas, resolved by column NAME. */
 final class GroupPartitionReader(path: String, schema: StructType,
     taskConf: Configuration = new Configuration())

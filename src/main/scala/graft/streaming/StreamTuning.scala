@@ -43,14 +43,20 @@ object StreamTuning {
         s"$EnvKey must be an integer partition count, got '$raw'"))
     }.filter(_ > 0).getOrElse(math.min(8, sessionPartitions))
 
-  /** Run `body` (a stateful streaming query: start + awaitTermination)
-    * with the session shuffle-partition conf scoped to the state
-    * partition count, restoring the caller's value after. The conf must
-    * stay set for the query's whole life — micro-batch planning reads
-    * it per batch (the state count itself pins at batch 0). */
-  def withStatePartitions[A](spark: SparkSession)(body: => A): A = {
-    val prev = spark.conf.get(ShuffleKey)
-    spark.conf.set(ShuffleKey, statePartitions(spark).toString)
-    try body finally spark.conf.set(ShuffleKey, prev)
+  /** Run `body` (a stateful streaming query, built and run on the
+    * session it is handed) in a new session of `spark` whose shuffle-
+    * partition conf is the state partition count. The conf must stay set
+    * for the query's whole life — micro-batch planning reads it per
+    * batch (the state count itself pins at batch 0) — so it lives in
+    * that session, never in the caller's: a concurrent query on
+    * `spark` keeps planning with the caller's own count. The caller's
+    * other runtime SQL confs carry over. */
+  def withStatePartitions[A](spark: SparkSession)(body: SparkSession => A): A = {
+    val session = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (spark.conf.isModifiable(k)) session.conf.set(k, v)
+    }
+    session.conf.set(ShuffleKey, statePartitions(spark).toString)
+    body(session)
   }
 }

@@ -118,8 +118,8 @@ object IcebergFormat {
   }
 
   /** Parquet type → Iceberg type JSON, resolving the standard 3-level
-    * LIST / MAP group encodings (the shapes
-    * [[graft.sinks.ParquetRowCodec]] emits) and plain groups as
+    * LIST / MAP group encodings (the shapes graft's writers emit) and
+    * plain groups as
     * structs. */
   private def parquetTypeToIceberg(t: PType, nextId: () => Int): JsonNode =
     if (t.isPrimitive)

@@ -227,7 +227,8 @@ object SchemaEvolution {
       case INT64 =>
         logical match {
           case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-              if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS => "timestamp"
+              if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS =>
+            if (ts.isAdjustedToUTC) "timestamp" else "timestamp_ntz"
           case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
             s"decimal(${d.getPrecision},${d.getScale})"
           case _ => "bigint"
@@ -255,6 +256,8 @@ object SchemaEvolution {
       case DOUBLE  => "double"
       case FLOAT   => "float"
       case BOOLEAN => "boolean"
+      // Spark's default timestamp encoding (and Hive's): an instant
+      case INT96   => "timestamp"
       case other => throw CompactionError.Config(
         s"unsupported parquet primitive for schema evolution: $other " +
           s"(column ${t.getName})")

@@ -1,8 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** EQUIVALENCE pins for the threshold-early-exit pair-verify
@@ -25,7 +27,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * Inputs sweep seeded random sorted-distinct long sets with planted
   * boundary shapes: identical sets, strict-prefix containment (the
   * containment target), exact-threshold and one-off-threshold overlaps,
-  * empty sides.
+  * empty sides. The same sets also run as string arrays (the
+  * expressions' UTF8String merge branch).
   */
 class ThresholdVerifySpec extends AnyFunSuite {
   private lazy val spark = graft.SparkTestSession.spark
@@ -62,6 +65,15 @@ class ThresholdVerifySpec extends AnyFunSuite {
     Literal.create(new GenericArrayData(a.map(x => x: Any)),
       ArrayType(LongType, containsNull = false))
 
+  /** A long set as sorted-distinct strings: zero-padded, so UTF-8 byte
+    * order (the order the string branch merges by) is the numeric order
+    * and every overlap count, hence every reference value, carries over. */
+  private def strs(a: Array[Long]): Array[String] = a.map(x => f"s$x%06d")
+
+  private def strLit(a: Array[Long]): Literal =
+    Literal.create(new GenericArrayData(strs(a).map(UTF8String.fromString(_): Any)),
+      ArrayType(StringType, containsNull = false))
+
   private def sortedDistinct(xs: Seq[Long]): Array[Long] =
     xs.distinct.sorted.toArray
 
@@ -87,73 +99,78 @@ class ThresholdVerifySpec extends AnyFunSuite {
     random ++ planted
   }
 
-  test("containment threshold expression: exact at/above t, below-t " +
-    "stays below-t, nulls match — interpreted eval") {
-    for (t <- thresholds; (a, b) <- pairs(41)) {
-      val fused = ContainmentX1000ThresholdExpr(lit(a), lit(b), t).eval(null)
-      refContainment(a, b) match {
+  /** Interpreted eval of `expr` over `pairs(seed)` against `ref`: exact
+    * at/above each threshold, below it below, nulls where `ref` is null. */
+  private def checkInterpreted(
+      expr: (Expression, Expression, Int) => Expression,
+      ref: (Array[Long], Array[Long]) => Option[Long],
+      seed: Int, litOf: Array[Long] => Literal): Unit =
+    for (t <- thresholds; (a, b) <- pairs(seed)) {
+      val fused = expr(litOf(a), litOf(b), t).eval(null)
+      ref(a, b) match {
         case None => assert(fused == null, s"t=$t: expected null")
-        case Some(ref) =>
+        case Some(r) =>
           val f = fused.asInstanceOf[Long]
-          if (ref >= t) assert(f == ref,
-            s"t=$t a=${a.mkString(",")} b=${b.mkString(",")}: $f != $ref")
+          if (r >= t) assert(f == r,
+            s"t=$t a=${a.mkString(",")} b=${b.mkString(",")}: $f != $r")
           else assert(f < t,
-            s"t=$t: below-threshold pair must stay below ($f vs ref $ref)")
+            s"t=$t: below-threshold pair must stay below ($f vs ref $r)")
       }
     }
+
+  test("containment threshold expression: exact at/above t, below-t " +
+    "stays below-t, nulls match — interpreted eval") {
+    checkInterpreted(ContainmentX1000ThresholdExpr(_, _, _), refContainment, 41, lit)
   }
 
   test("jaccard threshold expression: exact at/above t, below-t stays " +
     "below-t, nulls match — interpreted eval") {
-    for (t <- thresholds; (a, b) <- pairs(42)) {
-      val fused = JaccardX1000ThresholdExpr(lit(a), lit(b), t).eval(null)
-      refJaccard(a, b) match {
-        case None => assert(fused == null, s"t=$t: expected null")
-        case Some(ref) =>
-          val f = fused.asInstanceOf[Long]
-          if (ref >= t) assert(f == ref,
-            s"t=$t a=${a.mkString(",")} b=${b.mkString(",")}: $f != $ref")
-          else assert(f < t,
-            s"t=$t: below-threshold pair must stay below ($f vs ref $ref)")
-      }
+    checkInterpreted(JaccardX1000ThresholdExpr(_, _, _), refJaccard, 42, lit)
+  }
+
+  test("string-element arrays: both threshold expressions exact at/above t, " +
+    "below-t stays below-t, nulls match — interpreted eval") {
+    checkInterpreted(ContainmentX1000ThresholdExpr(_, _, _), refContainment, 41, strLit)
+    checkInterpreted(JaccardX1000ThresholdExpr(_, _, _), refJaccard, 42, strLit)
+  }
+
+  /** Codegen (DataFrame) check over array columns `a`, `b`: the fused
+    * expressions' filtered output equals the unfused formulas'. */
+  private def checkCodegen(df: DataFrame): Unit = {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.col
+    def filtered(v: Column, t: Int): Seq[(String, Long)] =
+      df.withColumn("v", v).filter(col("v") >= t).select("a", "v")
+        .collect().map(r => (r.getSeq[Any](0).mkString(","), r.getLong(1)))
+        .sortBy(identity).toSeq
+    for (t <- Seq(500, 900)) {
+      // reference path: unfused intersect + div (empty-min guard keeps
+      // ANSI division happy; those rows are filtered out either way)
+      val refC = org.apache.spark.sql.functions.expr(
+        "CASE WHEN least(size(a), size(b)) = 0 THEN NULL ELSE " +
+          "(cast(size(array_intersect(a, b)) as bigint) * 1000) " +
+          "div least(size(a), size(b)) END")
+      assert(filtered(HashColumns.containmentX1000Threshold(col("a"), col("b"), t), t) ==
+        filtered(refC, t), s"containment t=$t filtered mismatch")
+      assert(filtered(HashColumns.jaccardX1000Threshold(col("a"), col("b"), t), t) ==
+        filtered(HashColumns.jaccardX1000(col("a"), col("b")), t),
+        s"jaccard t=$t filtered mismatch")
     }
   }
 
   test("codegen path agrees with the unfused expressions row-for-row " +
     "on the filtered output (the observable surface)") {
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val rows = pairs(43).map { case (a, b) => (a.toSeq, b.toSeq) }
-    val df = rows.toDF("a", "b")
-    for (t <- Seq(500, 900)) {
-      // fused path: filter >= t on the threshold expression
-      val fusedC = df.withColumn("v",
-          HashColumns.containmentX1000Threshold(col("a"), col("b"), t))
-        .filter(col("v") >= t).select("a", "v")
-        .collect().map(r => (r.getSeq[Long](0), r.getLong(1)))
-        .sortBy(t => (t._1.mkString(","), t._2))
-      // reference path: unfused intersect + div (empty-min guard keeps
-      // ANSI division happy; those rows are filtered out either way)
-      val refC = df.withColumn("v",
-          org.apache.spark.sql.functions.expr(
-            "CASE WHEN least(size(a), size(b)) = 0 THEN NULL ELSE " +
-              "(cast(size(array_intersect(a, b)) as bigint) * 1000) " +
-              "div least(size(a), size(b)) END"))
-        .filter(col("v") >= t).select("a", "v")
-        .collect().map(r => (r.getSeq[Long](0), r.getLong(1)))
-        .sortBy(t => (t._1.mkString(","), t._2))
-      assert(fusedC.toSeq == refC.toSeq, s"containment t=$t filtered mismatch")
+    checkCodegen(pairs(43).map { case (a, b) => (a.toSeq, b.toSeq) }.toDF("a", "b"))
+  }
 
-      val fusedJ = df.withColumn("v",
-          HashColumns.jaccardX1000Threshold(col("a"), col("b"), t))
-        .filter(col("v") >= t).select("a", "v")
-        .collect().map(r => (r.getSeq[Long](0), r.getLong(1)))
-        .sortBy(t => (t._1.mkString(","), t._2))
-      val refJ = df.withColumn("v", HashColumns.jaccardX1000(col("a"), col("b")))
-        .filter(col("v") >= t).select("a", "v")
-        .collect().map(r => (r.getSeq[Long](0), r.getLong(1)))
-        .sortBy(t => (t._1.mkString(","), t._2))
-      assert(fusedJ.toSeq == refJ.toSeq, s"jaccard t=$t filtered mismatch")
-    }
+  test("string-element arrays: codegen path agrees with the unfused " +
+    "expressions on the filtered output") {
+    import spark.implicits._
+    val df = pairs(43).map { case (a, b) => (strs(a).toSeq, strs(b).toSeq) }
+      .toDF("a", "b")
+    // the string branch must be what runs: no long elements here
+    assert(df.schema("a").dataType == ArrayType(StringType, containsNull = true))
+    checkCodegen(df)
   }
 }

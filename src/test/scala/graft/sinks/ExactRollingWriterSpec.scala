@@ -8,7 +8,7 @@ import java.nio.file.Files
 
 /** The byte-exact rolling writer: the DSv2 append's per-task
   * [[GraftDataWriter]], which rolls files on the W2 byte policy and
-  * converts rows through [[ParquetRowCodec]]. */
+  * encodes rows through Spark's `ParquetWriteSupport`. */
 class ExactRollingWriterSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -45,5 +45,14 @@ class ExactRollingWriterSpec extends AnyFunSuite {
     assert(back.schema.map(f => (f.name, f.dataType)) ==
       li.schema.map(f => (f.name, f.dataType)))
     assert(back.exceptAll(li).isEmpty && li.exceptAll(back).isEmpty)
+
+    // the graft read reports the footer's types too: l_shipdate is an
+    // INT64 TIMESTAMP(MICROS, isAdjustedToUTC=false), a TIMESTAMP_NTZ
+    val graftRead = spark.read.format("graft").load(dir)
+    assert(graftRead.schema("l_shipdate").dataType ==
+      org.apache.spark.sql.types.TimestampNTZType)
+    assert(graftRead.schema.map(f => (f.name, f.dataType)) ==
+      li.schema.map(f => (f.name, f.dataType)))
+    assert(graftRead.exceptAll(li).isEmpty && li.exceptAll(graftRead).isEmpty)
   }
 }

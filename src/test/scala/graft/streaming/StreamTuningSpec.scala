@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.SparkTestSession
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamTuningSpec extends AnyFunSuite {
@@ -22,5 +24,37 @@ class StreamTuningSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("SPARK_GRAFT_STREAM_STATE_PARTITIONS"))
     assert(e.getMessage.contains("'eight'"))
+  }
+
+  test("a stateful query runs in its own session: the caller's shuffle partitions stay unchanged") {
+    val spark = SparkTestSession.spark
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "16") // state partitions default to min(8, 16) = 8
+    try {
+      val stateParts = StreamTuning.withStatePartitions(spark) { session =>
+        assert(session ne spark)
+        assert(session.conf.get(key) == "8")
+        assert(session.conf.get("spark.sql.session.timeZone") ==
+          spark.conf.get("spark.sql.session.timeZone"))
+        val input = MemoryStream[Long](session.implicits.newLongEncoder, session)
+        val q = input.toDF().dropDuplicates("value")
+          .writeStream.format("memory").queryName("tuning_dedup_out")
+          .outputMode("append").start()
+        try {
+          input.addData(1L, 2L, 2L, 3L)
+          q.processAllAvailable()
+          assert(q.isActive)
+          assert(spark.conf.get(key) == "16") // while the query runs
+          input.addData(3L, 4L)
+          q.processAllAvailable()
+          assert(spark.conf.get(key) == "16")
+          assert(session.table("tuning_dedup_out").count() == 4)
+          q.lastProgress.stateOperators.head.numShufflePartitions
+        } finally q.stop()
+      }
+      assert(stateParts == 8)
+      assert(spark.conf.get(key) == "16")
+    } finally spark.conf.set(key, prev)
   }
 }
