@@ -111,8 +111,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     //   SELECT * FROM graft_table('/path/to/table', 2)   -- time travel
     // The builder runs during analysis on the query's session thread, so
     // SparkSession.active is the right session to resolve the read; the
-    // embedded plan is the SAME live-row assembly every other read uses
-    // (delete chain, pruning, pushdown included).
+    // embedded plan is TableReader's pinned DSv2 relation (per-task
+    // deletes, pruning and pushdown included).
     // materialized-view substitution: aggregates over a registered
     // view's source table read the view instead when it is fresh
     // (spark.graft.mv.views names the views; graft.mv.MaterializedView)

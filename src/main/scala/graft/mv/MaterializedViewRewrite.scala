@@ -565,6 +565,28 @@ class MaterializedViewRewrite(session: SparkSession) extends Rule[LogicalPlan] {
 
 
 object MaterializedViewRewrite {
+  /** DSv2 scans in `plan` other than PINNED graft reads — the scans a
+    * substitution must remove (a view answers through a pinned read of
+    * its own table, which never counts). */
+  private[graft] def unpinnedScans(plan: LogicalPlan): Seq[LogicalPlan] =
+    scans(plan, pinned = false)
+
+  /** PINNED graft reads in `plan` — how a substituted view answers. */
+  private[graft] def pinnedScans(plan: LogicalPlan): Seq[LogicalPlan] =
+    scans(plan, pinned = true)
+
+  private def scans(plan: LogicalPlan, pinned: Boolean): Seq[LogicalPlan] = {
+    def isPinned(t: org.apache.spark.sql.connector.catalog.Table): Boolean = t match {
+      case g: graft.streaming.GraftTable => g.pinned.isDefined
+      case _ => false
+    }
+    plan.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+          if isPinned(r.relation.table) == pinned => r
+      case r: DataSourceV2Relation if isPinned(r.table) == pinned => r
+    }
+  }
+
   /** Stamps an Aggregate node with WHEN it was last probed (and missed)
     * for MV substitution — later fixed-point iterations of the same
     * optimization run skip it without metadata IO, while a
@@ -586,18 +608,18 @@ object MaterializedViewRewrite {
   /** Substituted view plans keyed by (SESSION, catalog, dir), valid
     * while the view's (version, committedAtMs) pair is unchanged —
     * committedAtMs disambiguates a drop/recreate that lands on the same
-    * version number. The session is part of the key because the built
-    * leaf binds that session's file index / hadoop conf — a plan built
-    * by one session must never serve another. Only leaves that are
-    * ALSO [[MultiInstanceRelation]] are cached: re-instancing with
-    * fresh attribute ids is what makes a twice-substituted view safe in
-    * one query, so a leaf that cannot re-instance is rebuilt per use
-    * instead. The cap + clear keeps retained sessions bounded. */
+    * version number. The session is part of the key so a plan built
+    * by one session never serves another. Each use re-instances the
+    * cached relation with fresh attribute ids, which is what makes a
+    * twice-substituted view safe in one query. The cap + clear keeps
+    * retained sessions bounded. */
   private val planCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, graft.txn.TableCatalog, String), (Long, Long, LogicalPlan)]()
   private val PlanCacheCap = 200
 
-  /** The view's optimized scan plan with FRESH attribute ids. */
+  /** The view's scan plan with FRESH attribute ids: the pinned DSv2
+    * relation [[TableReader.readOption]] builds, substituted before scan
+    * pushdown so the query's filters and column pruning still reach it. */
   private[mv] def substitutedPlan(
       session: SparkSession,
       mvDir: String,
@@ -609,25 +631,17 @@ object MaterializedViewRewrite {
         cached._2 == mv.committedAtMs)
       // fresh attribute ids per USE: the same query may substitute the
       // view twice (self-join of two aggregates), and duplicate ids
-      // across branches would corrupt the join. Only whole-plan LEAVES
-      // that re-instance are ever cached, so this cast cannot miss and
-      // re-instancing cannot dangle references from parent operators.
+      // across branches would corrupt the join. The cached plan is one
+      // DataSourceV2Relation leaf, so re-instancing cannot dangle
+      // references from parent operators.
       return Some(cached._3
         .asInstanceOf[org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation]
         .newInstance().asInstanceOf[LogicalPlan])
     metadataOps.incrementAndGet()
     val p = TableReader.readOption(session, mvDir, catalog = catalog)
-      .getOrElse(return None).queryExecution.optimizedPlan
-    // a view WITHOUT delete files optimizes to one scan relation —
-    // cacheable; a MoR join plan is NOT cached (and needs no
-    // re-instancing: every build has fresh ids). Cache ONLY when the
-    // leaf can hand out fresh attribute ids (MultiInstanceRelation) —
-    // anything else is rebuilt per use rather than shared.
-    if (p.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LeafNode] &&
-        p.isInstanceOf[org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation]) {
-      if (planCache.size > PlanCacheCap) planCache.clear()
-      planCache.put(key, (mv.version, mv.committedAtMs, p))
-    }
+      .getOrElse(return None).queryExecution.analyzed
+    if (planCache.size > PlanCacheCap) planCache.clear()
+    planCache.put(key, (mv.version, mv.committedAtMs, p))
     Some(p)
   }
 

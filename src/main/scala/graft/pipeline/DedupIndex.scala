@@ -135,10 +135,10 @@ object DedupIndex {
       .select(col("doc_id"), col("text"))
     val probeBands = Dedup.bandRows(corpus.filter(probeFilter),
       numHashes, bandSize, hashKind)
-    val planned = prunedIndexRead(spark, idx, idxDir, probeBands, catalog)
-      .inputFiles.length
-    val total = TableReader.read(spark, idxDir, catalog = catalog)
-      .inputFiles.length
+    val planned = TableReader.plannedDataFiles(
+      prunedIndexRead(spark, idx, idxDir, probeBands, catalog)).length
+    val total = TableReader.plannedDataFiles(
+      TableReader.read(spark, idxDir, catalog = catalog)).length
     (planned, total)
   }
 

@@ -307,6 +307,16 @@ object Similarity {
       aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
         lit(0L), (acc, v) => acc + v)
 
+    /** `v` when it holds exactly `dims` elements, else a named error —
+      * in every ANSI mode: without ANSI, `element_at` nulls a short
+      * vector's missing dims and the mean skews silently, and a longer
+      * vector is truncated in both modes. Null vectors pass unchanged. */
+    def fixedDims(v: Column, dims: Int, what: String): Column =
+      when(v.isNotNull && size(v) =!= dims, raise_error(concat(
+        lit(s"$what: a vector has "), size(v).cast("string"),
+        lit(s" elements, expected $dims (fixed-dims contract)"))))
+        .otherwise(v)
+
     /** Literal array<struct<cid, cq>> in ascending-cid order; constant-
       * folded by Catalyst, so rows pay compute (numCentroids x dims
       * multiply-adds), never construction. */
@@ -369,13 +379,12 @@ object Similarity {
         // row expansion through TWO exchanges per round for the same
         // floor(sum/count) math (the count per (cid, pos) group equals
         // the per-cid member count: every member contributes every dim).
-        // element_at requires the fixed-dims contract (all vectors the
-        // seeds' length): a shorter vector fails LOUDLY under ANSI
-        // instead of silently skewing a mean.
+        // Every vector must have the seeds' length (fixedDims).
         require(cents.nonEmpty,
           "k-means lost every centroid: empty training input")
         val dims = cents.head._2.length
         cents = collectCents(assignLit(proj, pxCol, cents)
+          .withColumn(pxCol, fixedDims(col(pxCol), dims, "k-means training"))
           .groupBy("cid")
           .agg(count(lit(1)).as("n"),
             (0 until dims).map(d =>
@@ -745,7 +754,7 @@ object Similarity {
     * bounded model metadata) so each round's encode is the narrow
     * literal argmin. Codes keep their seed ids; [[denseCodebook]]
     * remaps them for map-key packing. */
-  private def trainCodebookCollect(corpusSub: DataFrame, idCol: String,
+  private[graft] def trainCodebookCollect(corpusSub: DataFrame, idCol: String,
       codebookSize: Int, lloydIters: Int, seedKey: String)
       : Seq[(Int, Long, Seq[Long])] = {
     // seeding = the codebookSize smallest-hash subvectors PER SUBSPACE.
@@ -772,11 +781,13 @@ object Similarity {
       // one exchange per round (the trainCollect discipline): subLen
       // per-dim sums + one count grouped by (m, code) directly — same
       // floor(sum/count) means as the old posexplode + two-groupBy form.
-      // element_at requires the fixed-subLen contract; see trainCollect.
+      // Every subvector must have the seeds' length (fixedDims).
       require(cb.nonEmpty,
         "codebook training lost every codeword: empty subvector input")
       val subLen = cb.head._3.length
       cb = collectCodebook(nearestCodeLit(corpusSub, cb)
+        .withColumn("spx", IntKMeans.fixedDims(col("spx"), subLen,
+          "PQ codebook training"))
         .groupBy("m", "code")
         .agg(count(lit(1)).as("n"),
           (0 until subLen).map(d =>

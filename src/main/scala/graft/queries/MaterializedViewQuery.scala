@@ -326,10 +326,8 @@ object MaterializedViewQuery {
          |FROM $cat.db.ljfact f JOIN $cat.db.ljdim d
          |  ON f.o_custkey = d.c_custkey
          |GROUP BY c_nationkey""".stripMargin)
-    val v2 = q.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r
-    }
+    val v2 = graft.mv.MaterializedViewRewrite.unpinnedScans(
+      q.queryExecution.optimizedPlan)
     require(v2.isEmpty,
       "mv_join_live_rewrite: the live-join substitution did not replace " +
         "the join (stale marker or shape mismatch)")
@@ -385,10 +383,8 @@ object MaterializedViewQuery {
          |FROM $cat.db.sjfact f JOIN $cat.db.sjdim d
          |  ON f.l_suppkey = d.s_suppkey
          |GROUP BY s_nationkey""".stripMargin)
-    val v2 = q.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r
-    }
+    val v2 = graft.mv.MaterializedViewRewrite.unpinnedScans(
+      q.queryExecution.optimizedPlan)
     require(v2.isEmpty,
       "mv_join_rewrite: the star substitution did not replace the join")
     q.orderBy("s_nationkey")
@@ -449,10 +445,8 @@ object MaterializedViewQuery {
       s"""SELECT l_returnflag,
          |  sum(qty_cents) AS sum_qty_cents, count(*) AS n_rows
          |FROM $cat.db.rusrc GROUP BY l_returnflag""".stripMargin)
-    val v2 = q.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r
-    }
+    val v2 = graft.mv.MaterializedViewRewrite.unpinnedScans(
+      q.queryExecution.optimizedPlan)
     require(v2.isEmpty,
       "mv_rollup: the rollup rewrite did not replace the source scan")
     q.orderBy("l_returnflag")
@@ -481,10 +475,8 @@ object MaterializedViewQuery {
          |  CAST(round(avg(qty_cents) * 1000000) AS BIGINT) AS avg_micros,
          |  count(*) AS n_rows
          |FROM $cat.db.rusrc GROUP BY l_returnflag""".stripMargin)
-    val v2 = q.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r
-    }
+    val v2 = graft.mv.MaterializedViewRewrite.unpinnedScans(
+      q.queryExecution.optimizedPlan)
     require(v2.isEmpty,
       "mv_avg: an avg rewrite did not replace the source scan")
     q.orderBy("shape", "l_returnflag", "l_linestatus")
@@ -519,10 +511,8 @@ object MaterializedViewQuery {
          |  count(DISTINCT l_linestatus) AS n_status,
          |  sum(qty_cents) AS sum_qty_cents, count(*) AS n_rows
          |FROM $cat.db.rusrc GROUP BY l_returnflag""".stripMargin)
-    val v2 = q.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r
-    }
+    val v2 = graft.mv.MaterializedViewRewrite.unpinnedScans(
+      q.queryExecution.optimizedPlan)
     require(v2.isEmpty,
       "mv_count_distinct: the rewrite did not replace the source scan")
     q.orderBy("l_returnflag")

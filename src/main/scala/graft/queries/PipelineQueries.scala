@@ -244,12 +244,12 @@ object PipelineQueries {
     val stats = graft.txn.TableMetadata.loadOrThrow(idxDir)
       .properties(TextStatsProp).split(",")
     val (n, t) = (stats(0).toLong, stats(1).toLong)
-    val totalFiles = graft.sources.TableReader.read(spark, idxDir)
-      .inputFiles.length
+    val totalFiles = graft.sources.TableReader.plannedDataFiles(
+      graft.sources.TableReader.read(spark, idxDir)).length
     val probe = col("term").isin(terms.map(x => x: Any): _*)
     val idx = graft.sources.TableReader.read(spark, idxDir,
       filter = Some(probe))
-    val read = idx.inputFiles.length
+    val read = graft.sources.TableReader.plannedDataFiles(idx).length
     require(read > 0 && read < totalFiles,
       s"$qname: the term lookup must prune the index scan " +
         s"($read of $totalFiles files planned)")
@@ -339,12 +339,12 @@ object PipelineQueries {
   def textPhrase(spark: SparkSession, dir: String): DataFrame = {
     val phrase = Seq("table", "scan")
     val idxDir = buildPosIndex(spark, dir)
-    val totalFiles = graft.sources.TableReader.read(spark, idxDir)
-      .inputFiles.length
+    val totalFiles = graft.sources.TableReader.plannedDataFiles(
+      graft.sources.TableReader.read(spark, idxDir)).length
     val probe = col("term").isin(phrase.map(x => x: Any): _*)
     val idx = graft.sources.TableReader.read(spark, idxDir,
       filter = Some(probe))
-    val read = idx.inputFiles.length
+    val read = graft.sources.TableReader.plannedDataFiles(idx).length
     require(read > 0 && read < totalFiles,
       s"text_phrase: the phrase lookup must prune the index scan " +
         s"($read of $totalFiles files planned)")
@@ -361,12 +361,12 @@ object PipelineQueries {
   def textPhraseNear(spark: SparkSession, dir: String): DataFrame = {
     val phrase = Seq("table", "scan")
     val idxDir = buildPosIndex(spark, dir)
-    val totalFiles = graft.sources.TableReader.read(spark, idxDir)
-      .inputFiles.length
+    val totalFiles = graft.sources.TableReader.plannedDataFiles(
+      graft.sources.TableReader.read(spark, idxDir)).length
     val probe = col("term").isin(phrase.map(x => x: Any): _*)
     val idx = graft.sources.TableReader.read(spark, idxDir,
       filter = Some(probe))
-    val read = idx.inputFiles.length
+    val read = graft.sources.TableReader.plannedDataFiles(idx).length
     require(read > 0 && read < totalFiles,
       s"text_phrase_near: the proximity lookup must prune the index " +
         s"scan ($read of $totalFiles files planned)")
@@ -453,12 +453,12 @@ object PipelineQueries {
         .properties.get(graft.pipeline.TextIndex.SyncedProp).contains(
           graft.txn.TableMetadata.loadOrThrow(corpusDir).version.toString),
       "text_phrase_refresh: index lags the corpus — refresh before serving")
-    val totalFiles = graft.sources.TableReader.read(spark, idxDir)
-      .inputFiles.length
+    val totalFiles = graft.sources.TableReader.plannedDataFiles(
+      graft.sources.TableReader.read(spark, idxDir)).length
     val probe = col("term").isin(phrase.map(x => x: Any): _*)
     val idx = graft.sources.TableReader.read(spark, idxDir,
       filter = Some(probe))
-    val read = idx.inputFiles.length
+    val read = graft.sources.TableReader.plannedDataFiles(idx).length
     require(read > 0 && read < totalFiles,
       s"text_phrase_refresh: post-compaction pruning must hold " +
         s"($read of $totalFiles files planned)")
@@ -1143,13 +1143,13 @@ object PipelineQueries {
       .properties(CentroidsProp))
     val q = embeddings(spark, dir).filter(col("vec_id") === 1L)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val totalFiles = graft.sources.TableReader.read(spark, idxDir)
-      .inputFiles.length
+    val totalFiles = graft.sources.TableReader.plannedDataFiles(
+      graft.sources.TableReader.read(spark, idxDir)).length
     val sem = Similarity.ivfSearchIndexed(q, cents,
         readIndex = cids => {
           val idx = graft.sources.TableReader.read(spark, idxDir,
             filter = Some(col("cid").isin(cids: _*)))
-          val read = idx.inputFiles.length
+          val read = graft.sources.TableReader.plannedDataFiles(idx).length
           require(read > 0 && read < totalFiles,
             s"hybrid_search_indexed: probing ${cids.size} centroids must " +
               s"prune the scan ($read of $totalFiles files planned)")
@@ -1255,13 +1255,13 @@ object PipelineQueries {
       .properties(CentroidsProp))
     val q = embeddings(spark, dir).filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val totalFiles = graft.sources.TableReader.read(spark, idxDir)
-      .inputFiles.length
+    val totalFiles = graft.sources.TableReader.plannedDataFiles(
+      graft.sources.TableReader.read(spark, idxDir)).length
     Similarity.ivfSearchIndexed(q, cents,
         readIndex = cids => {
           val idx = graft.sources.TableReader.read(spark, idxDir,
             filter = Some(col("cid").isin(cids: _*)))
-          val read = idx.inputFiles.length
+          val read = graft.sources.TableReader.plannedDataFiles(idx).length
           require(read > 0 && read < totalFiles,
             s"ann_indexed: probing ${cids.size} centroids must prune the " +
               s"scan ($read of $totalFiles files planned)")
@@ -1329,13 +1329,13 @@ object PipelineQueries {
     val cb = decodeCodebook(props(PqCodebookProp))
     val q = embeddings(spark, dir).filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val totalFiles = graft.sources.TableReader.read(spark, idxDir)
-      .inputFiles.length
+    val totalFiles = graft.sources.TableReader.plannedDataFiles(
+      graft.sources.TableReader.read(spark, idxDir)).length
     Similarity.ivfPqSearchIndexed(q, dims = 64, cents, cb,
         readIndex = cids => {
           val idx = graft.sources.TableReader.read(spark, idxDir,
             filter = Some(col("cid").isin(cids: _*)))
-          val read = idx.inputFiles.length
+          val read = graft.sources.TableReader.plannedDataFiles(idx).length
           require(read > 0 && read < totalFiles,
             s"ann_ivfpq_indexed: probing ${cids.size} buckets must prune " +
               s"the scan ($read of $totalFiles files planned)")
@@ -1465,13 +1465,13 @@ object PipelineQueries {
     val q = graft.sources.TableReader.read(spark, corpusDir)
       .filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val totalFiles = graft.sources.TableReader.read(spark, idxDir)
-      .inputFiles.length
+    val totalFiles = graft.sources.TableReader.plannedDataFiles(
+      graft.sources.TableReader.read(spark, idxDir)).length
     Similarity.ivfPqSearchIndexed(q, dims = 64, cents, cb,
         readIndex = cids => {
           val idx = graft.sources.TableReader.read(spark, idxDir,
             filter = Some(col("cid").isin(cids: _*)))
-          val read = idx.inputFiles.length
+          val read = graft.sources.TableReader.plannedDataFiles(idx).length
           require(read > 0 && read < totalFiles,
             s"ann_ivfpq_refresh: post-compaction pruning must hold " +
               s"($read of $totalFiles files planned)")
@@ -1589,13 +1589,13 @@ object PipelineQueries {
     val q = graft.sources.TableReader.read(spark, corpusDir)
       .filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val totalFiles = graft.sources.TableReader.read(spark, idxDir)
-      .inputFiles.length
+    val totalFiles = graft.sources.TableReader.plannedDataFiles(
+      graft.sources.TableReader.read(spark, idxDir)).length
     Similarity.ivfSearchIndexed(q, cents,
         readIndex = cids => {
           val idx = graft.sources.TableReader.read(spark, idxDir,
             filter = Some(col("cid").isin(cids: _*)))
-          val read = idx.inputFiles.length
+          val read = graft.sources.TableReader.plannedDataFiles(idx).length
           require(read > 0 && read < totalFiles,
             s"ann_index_refresh: post-compaction pruning must hold " +
               s"($read of $totalFiles files planned)")
@@ -1704,13 +1704,13 @@ object PipelineQueries {
     val q = graft.sources.TableReader.read(spark, corpusDir)
       .filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val totalFiles = graft.sources.TableReader.read(spark, idxDir)
-      .inputFiles.length
+    val totalFiles = graft.sources.TableReader.plannedDataFiles(
+      graft.sources.TableReader.read(spark, idxDir)).length
     Similarity.ivfSearchIndexed(q, cents,
         readIndex = cids => {
           val idx = graft.sources.TableReader.read(spark, idxDir,
             filter = Some(col("cid").isin(cids: _*)))
-          val read = idx.inputFiles.length
+          val read = graft.sources.TableReader.plannedDataFiles(idx).length
           require(read > 0 && read < totalFiles,
             s"ann_index_stream: post-compaction pruning must hold " +
               s"($read of $totalFiles files planned)")
@@ -1822,13 +1822,13 @@ object PipelineQueries {
     val q = graft.sources.TableReader.read(spark, corpusDir)
       .filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val totalFiles = graft.sources.TableReader.read(spark, idxDir)
-      .inputFiles.length
+    val totalFiles = graft.sources.TableReader.plannedDataFiles(
+      graft.sources.TableReader.read(spark, idxDir)).length
     Similarity.ivfSearchIndexed(q, cents,
         readIndex = cids => {
           val idx = graft.sources.TableReader.read(spark, idxDir,
             filter = Some(col("cid").isin(cids: _*)))
-          val read = idx.inputFiles.length
+          val read = graft.sources.TableReader.plannedDataFiles(idx).length
           require(read > 0 && read < totalFiles,
             s"ann_index_rebuild: post-compaction pruning must hold " +
               s"($read of $totalFiles files planned)")

@@ -42,10 +42,10 @@ object TableLifecycleQuery {
     runWith(spark, dir, IcebergTableCatalog, "graft-lifecycle-iceberg")
 
   /** Filtered MoR read: the same table, read with a predicate declared
-    * through [[TableReader.read]]'s `filter` — Catalyst pushes it through
-    * the anti-join chain to the parquet scan (PlanQualitySpec pins the
-    * `PushedFilters`), and the oracle applies the same predicate over the
-    * recomputed survivors. */
+    * through [[TableReader.read]]'s `filter` — Spark pushes it into the
+    * graft scan (PlanQualitySpec pins the scan's `PushedFilters`), and
+    * the oracle applies the same predicate over the recomputed
+    * survivors. */
   def runFiltered(spark: SparkSession, dir: String): DataFrame = {
     val tableDir = buildTable(spark, dir, FileTableCatalog, "graft-lifecycle-filt")
     TableReader.read(spark, tableDir,
@@ -148,11 +148,11 @@ object TableLifecycleQuery {
   /** Identity on live rows -> the shared survivor oracle verbatim. */
   val deleteConvertOracle: String = CompactionE2EQuery.oracle
 
-  /** The SAME lifecycle table read through the DSv2 batch source
-    * (`spark.read.format("graft")`) instead of [[TableReader]]: per-task
-    * delete application ([[graft.sources.GraftMorPartitionReader]])
-    * must produce byte-identical live rows to the anti-join plan —
-    * certified by sharing the survivor oracle verbatim. */
+  /** The SAME lifecycle table read through the path-based DSv2 source
+    * (`spark.read.format("graft")`, schema inferred from the table)
+    * instead of [[TableReader]]'s pinned relation: both must produce the
+    * compaction survivors — certified by sharing the survivor oracle
+    * verbatim. */
   def runDsv2(spark: SparkSession, dir: String): DataFrame = {
     val tableDir = buildTable(spark, dir, FileTableCatalog, "graft-lifecycle")
     spark.read.format("graft").load(tableDir)
@@ -218,7 +218,7 @@ object TableLifecycleQuery {
       .orderBy(outCols.map(col): _*)
     // the pruning is the point — fail loudly if the scan still lists
     // the files the bounds exclude
-    val ins = out.inputFiles.filter(_.contains("/data/f"))
+    val ins = TableReader.plannedDataFiles(out)
     require(ins.exists(_.endsWith("f1.parquet")),
       s"pruned read lost the matching file: ${ins.mkString(",")}")
     require(!ins.exists(p => p.endsWith("f2.parquet") || p.endsWith("f3.parquet")),

@@ -139,12 +139,9 @@ object GraftBatchWrite {
     }
     val snap = catalog.loadOrThrow(tableDir)
     val tableCols: Option[Set[String]] =
-      snap.currentSchema.map(_.fields.map(_.name).toSet).orElse {
-        val newest = snap.files.filter(_.content == "data")
-          .sortBy(f => (f.sequenceNumber, f.path)).lastOption
-        newest.map(f =>
-          graft.txn.SchemaEvolution.footerFields(f.path).map(_.name).toSet)
-      }
+      snap.currentSchema.map(_.fields.map(_.name).toSet).orElse(
+        graft.txn.SchemaEvolution.newestDataFile(snap).map(f =>
+          graft.txn.SchemaEvolution.footerSchema(f.path).fieldNames.toSet))
     tableCols.foreach { want =>
       val got = querySchema.fieldNames.toSet
       if (want != got) throw CompactionError.Config(

@@ -21,9 +21,9 @@ import java.util.OptionalLong
 import scala.jdk.CollectionConverters._
 
 /** DSv2 BATCH read of a graft table — `spark.read.format("graft")
-  * .load(tableDir)` returns the table's LIVE rows (merge-on-read), the
-  * same result [[TableReader.read]] assembles with anti-joins, realized
-  * the way Iceberg's own Spark source does it: **per-task delete
+  * .load(tableDir)`, SQL and [[TableReader.read]] return the table's
+  * LIVE rows (merge-on-read) through this scan, realized the way
+  * Iceberg's own Spark source does it: **per-task delete
   * application**. Each input partition is one data file plus the delete
   * files that apply to it; the reader loads that task's position-delete
   * ordinals and equality-delete key sets into memory and filters rows
@@ -87,20 +87,24 @@ object GraftBatchScan {
   /** Spark-type-driven extraction of one field from a parquet example
     * [[Group]], tolerant of INT32-backed long columns and of INT96
     * timestamps (what Spark's own writer emits under a default session,
-    * and what imported Hive tables hold). Shared by the batch reader and
-    * the streaming tail reader. */
-  private[graft] def groupValue(g: Group, gi: Int, dt: DataType, name: String): Any =
+    * and what imported Hive tables hold); dates and timestamps go
+    * through the file's `cal`. Shared by the batch reader and the
+    * streaming tail reader. */
+  private[graft] def groupValue(g: Group, gi: Int, dt: DataType, name: String,
+      cal: FileCalendar): Any =
     if (g.getFieldRepetitionCount(gi) == 0) null
     else dt match {
       case LongType | TimestampType | TimestampNTZType =>
-        g.getType.getType(gi).asPrimitiveType().getPrimitiveTypeName match {
-          case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32 =>
-            g.getInteger(gi, 0).toLong
-          case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96 =>
-            Int96Bridge.micros(g.getInt96(gi, 0))
-          case _ => g.getLong(gi, 0)
-        }
-      case IntegerType | DateType => g.getInteger(gi, 0)
+        val pt = g.getType.getType(gi).asPrimitiveType()
+        val v = storedLong(g, gi, pt.getPrimitiveTypeName)
+        val fix = cal.longFix(pt, dt, name)
+        if (fix == null) v else fix(v)
+      case DateType =>
+        val fix = cal.dateFix(dt)
+        if (fix == null) g.getInteger(gi, 0) else fix(g.getInteger(gi, 0))
+      case IntegerType => g.getInteger(gi, 0)
+      case ShortType   => g.getInteger(gi, 0).toShort
+      case ByteType    => g.getInteger(gi, 0).toByte
       case StringType  => g.getString(gi, 0)
       case DoubleType  => // FLOAT physical = a file predating a widen
         g.getType.getType(gi).asPrimitiveType().getPrimitiveTypeName match {
@@ -139,7 +143,7 @@ object GraftBatchScan {
           val entry = lg.getGroup(0, i)
           out(i) =
             if (entry.getFieldRepetitionCount(0) == 0) null
-            else toCatalyst(groupValue(entry, 0, et, s"$name.element"))
+            else toCatalyst(groupValue(entry, 0, et, s"$name.element", cal))
           i += 1
         }
         new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
@@ -151,10 +155,10 @@ object GraftBatchScan {
         var i = 0
         while (i < n) {
           val kv = mg.getGroup(0, i)
-          keys(i) = toCatalyst(groupValue(kv, 0, kt, s"$name.key"))
+          keys(i) = toCatalyst(groupValue(kv, 0, kt, s"$name.key", cal))
           vals(i) =
             if (kv.getFieldRepetitionCount(1) == 0) null
-            else toCatalyst(groupValue(kv, 1, vt, s"$name.value"))
+            else toCatalyst(groupValue(kv, 1, vt, s"$name.value", cal))
           i += 1
         }
         new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
@@ -175,13 +179,25 @@ object GraftBatchScan {
               throw CompactionError.Config(
                 s"struct member ${st(i).name} absent from column $name in the file")
             }
-          vals(i) = toCatalyst(groupValue(sg, idx, st(i).dataType, s"$name.${st(i).name}"))
+          vals(i) = toCatalyst(groupValue(sg, idx, st(i).dataType, s"$name.${st(i).name}", cal))
           i += 1
         }
         new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
       case other => throw CompactionError.Config(
         s"graft source supports primitive and array/struct/map columns; " +
           s"column $name has unsupported type $other")
+    }
+
+  /** A long or timestamp leaf's value as stored: INT32-backed longs
+    * widen, INT96 timestamps decode to epoch micros. */
+  private def storedLong(g: Group, gi: Int,
+      prim: org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName): Long =
+    prim match {
+      case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32 =>
+        g.getInteger(gi, 0).toLong
+      case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96 =>
+        Int96Bridge.micros(g.getInt96(gi, 0))
+      case _ => g.getLong(gi, 0)
     }
 
   /** The nested group shapes this reader resolves are positional under
@@ -239,23 +255,29 @@ object GraftBatchScan {
     * Extractors return CATALYST values (no [[toCatalyst]] needed). */
   private[graft] def fieldExtractor(
       fileType: org.apache.parquet.schema.GroupType,
-      gi: Int, dt: DataType, name: String): Group => Any = {
+      gi: Int, dt: DataType, name: String, cal: FileCalendar): Group => Any = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     def prim = fileType.getType(gi).asPrimitiveType().getPrimitiveTypeName
     dt match {
       case LongType | TimestampType | TimestampNTZType =>
-        if (prim == PrimitiveTypeName.INT32)
-          g => if (g.getFieldRepetitionCount(gi) == 0) null
-               else g.getInteger(gi, 0).toLong
-        else if (prim == PrimitiveTypeName.INT96)
-          g => if (g.getFieldRepetitionCount(gi) == 0) null
-               else Int96Bridge.micros(g.getInt96(gi, 0))
-        else
+        val (p, fix) = (prim, cal.longFix(fileType.getType(gi).asPrimitiveType(), dt, name))
+        if (fix == null && p == PrimitiveTypeName.INT64)
           g => if (g.getFieldRepetitionCount(gi) == 0) null
                else g.getLong(gi, 0)
+        else if (fix == null)
+          g => if (g.getFieldRepetitionCount(gi) == 0) null
+               else storedLong(g, gi, p)
+        else
+          g => if (g.getFieldRepetitionCount(gi) == 0) null
+               else fix(storedLong(g, gi, p))
       case IntegerType | DateType =>
-        g => if (g.getFieldRepetitionCount(gi) == 0) null
-             else g.getInteger(gi, 0)
+        val fix = cal.dateFix(dt)
+        if (fix == null)
+          g => if (g.getFieldRepetitionCount(gi) == 0) null
+               else g.getInteger(gi, 0)
+        else
+          g => if (g.getFieldRepetitionCount(gi) == 0) null
+               else fix(g.getInteger(gi, 0))
       case StringType =>
         g => if (g.getFieldRepetitionCount(gi) == 0) null
              else UTF8String.fromBytes(g.getBinary(gi, 0).getBytes)
@@ -276,7 +298,7 @@ object GraftBatchScan {
         g => if (g.getFieldRepetitionCount(gi) == 0) null
              else g.getBinary(gi, 0).getBytes
       case _ =>
-        g => toCatalyst(groupValue(g, gi, dt, name))
+        g => toCatalyst(groupValue(g, gi, dt, name, cal))
     }
   }
 
@@ -289,24 +311,14 @@ object GraftBatchScan {
     * type dispatch, no normalization pass per row. */
   private[graft] def eqKeyExtractor(
       fileType: org.apache.parquet.schema.GroupType,
-      gi: Int, dt: DataType, name: String): Group => Any = {
+      gi: Int, dt: DataType, name: String, cal: FileCalendar): Group => Any = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     def prim = fileType.getType(gi).asPrimitiveType().getPrimitiveTypeName
     dt match {
-      case LongType | TimestampType | TimestampNTZType =>
-        if (prim == PrimitiveTypeName.INT32)
-          g => if (g.getFieldRepetitionCount(gi) == 0) null
-               else java.lang.Long.valueOf(g.getInteger(gi, 0).toLong)
-        else if (prim == PrimitiveTypeName.INT96)
-          g => if (g.getFieldRepetitionCount(gi) == 0) null
-               else java.lang.Long.valueOf(
-                 Int96Bridge.micros(g.getInt96(gi, 0)))
-        else
-          g => if (g.getFieldRepetitionCount(gi) == 0) null
-               else java.lang.Long.valueOf(g.getLong(gi, 0))
-      case IntegerType | DateType =>
-        g => if (g.getFieldRepetitionCount(gi) == 0) null
-             else java.lang.Integer.valueOf(g.getInteger(gi, 0))
+      // boxed longs, ints and booleans are already the key representation
+      case LongType | TimestampType | TimestampNTZType | IntegerType |
+           DateType | BooleanType =>
+        fieldExtractor(fileType, gi, dt, name, cal)
       case StringType =>
         g => if (g.getFieldRepetitionCount(gi) == 0) null
              else g.getString(gi, 0)
@@ -329,12 +341,9 @@ object GraftBatchScan {
                val f = g.getFloat(gi, 0)
                if (f.isNaN) NaNKey else java.lang.Float.valueOf(f)
              }
-      case BooleanType =>
-        g => if (g.getFieldRepetitionCount(gi) == 0) null
-             else java.lang.Boolean.valueOf(g.getBoolean(gi, 0))
       case _ =>
         g => if (g.getFieldRepetitionCount(gi) == 0) null
-             else eqKeyComponent(groupValue(g, gi, dt, name))
+             else eqKeyComponent(groupValue(g, gi, dt, name, cal))
     }
   }
 
@@ -446,10 +455,10 @@ object GraftBatchScan {
       var g = r.read()
       while (g != null) {
         val fp = groupValue(g, g.getType.getFieldIndex("file_path"),
-          StringType, "file_path").asInstanceOf[String]
+          StringType, "file_path", FileCalendar.Gregorian).asInstanceOf[String]
         if (fp != null) {
           val p = groupValue(g, g.getType.getFieldIndex("pos"),
-            LongType, "pos").asInstanceOf[Long]
+            LongType, "pos", FileCalendar.Gregorian).asInstanceOf[Long]
           tmp.computeIfAbsent(ScanPlanner.normalizePath(fp),
             _ => new scala.collection.mutable.ArrayBuilder.ofLong) += p
         }
@@ -520,12 +529,13 @@ object GraftBatchScan {
         types.map(_.catalogString).mkString(",")
       val set = DeleteFileCache.getOrLoad(e.path, e.sizeBytes, variant) {
         val s = new java.util.HashSet[Seq[Any]]()
-        val r = projectedReader(e.path, e.keyCols.map(_._2), taskConf)
+        val rs = new FileCalendar.ReadSupportWithCalendar
+        val r = projectedReader(e.path, e.keyCols.map(_._2), taskConf, support = rs)
         try {
           var g = r.read()
           while (g != null) {
             val key = e.keyCols.zip(types).map { case ((_, phys), t) =>
-              groupValue(g, g.getType.getFieldIndex(phys), t, phys)
+              groupValue(g, g.getType.getFieldIndex(phys), t, phys, rs.calendar)
             }
             if (!key.contains(null)) s.add(key.map(eqKeyComponent))
             g = r.read()
@@ -545,7 +555,8 @@ object GraftBatchScan {
   private[graft] def projectedReader(
       path: String, cols: Seq[String],
       base: Configuration,
-      range: Option[(Long, Long)] = None): ParquetReader[Group] = {
+      range: Option[(Long, Long)] = None,
+      support: GroupReadSupport = new GroupReadSupport()): ParquetReader[Group] = {
     val conf = new Configuration(base)
     val inFile = HadoopInputFile.fromPath(new HPath(path), conf)
     val fileSchema: MessageType = {
@@ -559,7 +570,7 @@ object GraftBatchScan {
     val projection = new MessageType(fileSchema.getName,
       cols.map(c => fileSchema.getType(fileSchema.getFieldIndex(c))).asJava)
     conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-    val b = ParquetReader.builder(new GroupReadSupport(), new HPath(path))
+    val b = ParquetReader.builder(support, new HPath(path))
       .withConf(conf)
     range.foreach { case (s, e) => b.withFileRange(s, e) }
     b.build()
@@ -664,7 +675,10 @@ final class GraftScanBuilder(
       * row readers even where the columnar gate would allow batches. */
     vectorizedRead: Boolean = true,
     /** Streaming CDC mode ([[graft.streaming.ChangelogStream]]). */
-    changelog: Boolean = false
+    changelog: Boolean = false,
+    /** Transformed partition-value pruning handed down by the table
+      * ([[graft.streaming.GraftTable]]'s `partitionFieldCandidates`). */
+    partitionFieldCandidates: Map[String, Set[String]] = Map.empty
 ) extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
@@ -805,57 +819,10 @@ final class GraftScanBuilder(
       }
     }
 
-  /** sources.Filter → integral [lo, hi] bounds, same conservative rules
-    * as [[ScanPruning.constraints]]: integral comparisons, plus
-    * decimals of ≤18 digits compared in UNSCALED space (order-preserving
-    * at the column's fixed scale; the footer stats of INT32/INT64-backed
-    * decimal columns are unscaled values — [[ParquetStats]]). A literal
-    * that doesn't land exactly on the column's scale contributes
-    * nothing (conservative: the file is kept). */
-  private def boundsOf(filters: Seq[sources.Filter]): ScanPruning.Bounds = {
-    lazy val colTypes: Map[String, DataType] =
-      tableSchema.fields.map(f => f.name -> f.dataType).toMap
-    def lit(a: String, v: Any): Option[Long] = colTypes.get(a) match {
-      case Some(d: DecimalType) if d.precision <= 18 =>
-        val bd: Option[java.math.BigDecimal] = v match {
-          case b: java.math.BigDecimal => Some(b)
-          case b: scala.math.BigDecimal => Some(b.bigDecimal)
-          case dec: Decimal => Some(dec.toJavaBigDecimal)
-          case _ => None
-        }
-        bd.flatMap { b =>
-          try Some(b.setScale(d.scale).unscaledValue().longValueExact())
-          catch { case _: ArithmeticException => None }
-        }
-      case Some(_: DecimalType) => None // FLBA-backed: stats untrusted
-      case Some(DateType) => v match {
-        // date stats are INT32 epoch days — compare in that domain
-        case d: java.sql.Date => Some(
-          org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaDate(d).toLong)
-        case d: java.time.LocalDate => Some(d.toEpochDay)
-        case _ => None
-      }
-      case _ => v match {
-        case i: Int => Some(i.toLong); case l: Long => Some(l)
-        case s: Short => Some(s.toLong); case _ => None
-      }
-    }
-    filters.foldLeft(Map.empty: ScanPruning.Bounds) { (acc, f) =>
-      val b: ScanPruning.Bounds = f match {
-        case sources.EqualTo(a, v)            => lit(a, v).map(x => Map(a -> (x, x))).getOrElse(Map.empty)
-        // saturate at the extremes: `> Long.MaxValue` / `< Long.MinValue`
-        // are impossible predicates — an empty range (lo > hi) prunes
-        // every file rather than wrapping around and keeping all of them
-        case sources.GreaterThan(a, v)        => lit(a, v).map(x => Map(a -> (if (x == Long.MaxValue) (1L, 0L) else (x + 1, Long.MaxValue)))).getOrElse(Map.empty)
-        case sources.GreaterThanOrEqual(a, v) => lit(a, v).map(x => Map(a -> (x, Long.MaxValue))).getOrElse(Map.empty)
-        case sources.LessThan(a, v)           => lit(a, v).map(x => Map(a -> (if (x == Long.MinValue) (1L, 0L) else (Long.MinValue, x - 1)))).getOrElse(Map.empty)
-        case sources.LessThanOrEqual(a, v)    => lit(a, v).map(x => Map(a -> (Long.MinValue, x))).getOrElse(Map.empty)
-        case sources.And(l, r)                => boundsOf(Seq(l, r))
-        case _                                => Map.empty
-      }
-      ScanPruning.mergeBounds(acc, b)
-    }
-  }
+  private lazy val colTypes: Map[String, DataType] =
+    tableSchema.fields.map(f => f.name -> f.dataType).toMap
+  private def boundsOf(filters: Seq[sources.Filter]): ScanPruning.Bounds =
+    ScanPruning.filterBounds(filters, colTypes)
 
   override def build(): Scan = pushedAgg match {
     case Some((schema, rows)) => new GraftAggScan(schema, rows, tableDir)
@@ -865,7 +832,8 @@ final class GraftScanBuilder(
         includeFileColumn, cowOwner, splitTargetBytes, includePosColumn,
         vectorizedRead, equalityCandidates(pushed.toSeq), pushed.toSeq,
         changelog = changelog, pushedLimit = pushedLimitN,
-        pushedTopN = pushedTopNCol)
+        pushedTopN = pushedTopNCol,
+        partitionFieldCandidates = partitionFieldCandidates)
   }
 }
 
@@ -896,7 +864,8 @@ final class GraftScan(
     pushedLimit: Int = -1,
     /** Pushed `ORDER BY col [DESC] LIMIT n` leading key: file truncation
       * by stamped bounds ([[ScanPruning.truncateForTopN]]). */
-    pushedTopN: Option[(String, Boolean)] = None
+    pushedTopN: Option[(String, Boolean)] = None,
+    partitionFieldCandidates: Map[String, Set[String]] = Map.empty
 ) extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering with SupportsReportPartitioning
     with SupportsReportOrdering {
@@ -915,8 +884,19 @@ final class GraftScan(
         "CDC read is TableReader.changelog()")
     this
   }
-  override def description(): String =
-    s"graft MoR $tableDir${asOfVersion.fold("")(v => s" @v$v")}"
+  /** What reached the scan, for `explain`: the pinned version and the
+    * pushed filters (all of them stay residual above the scan),
+    * redacted and with the filter list cut to
+    * `spark.sql.maxMetadataStringLength`, as Spark's file scans print
+    * theirs. */
+  override def description(): String = {
+    val filters = org.apache.commons.lang3.StringUtils.abbreviate(
+      pushedSourceFilters.mkString("[", ", ", "]"),
+      org.apache.spark.sql.internal.SQLConf.get.maxMetadataStringLength)
+    org.apache.spark.sql.graftbridge.DatasetBridge.redact(
+      s"graft MoR $tableDir${asOfVersion.fold("")(v => s" @v$v")} " +
+        s"PushedFilters: $filters")
+  }
 
   /** Runtime filtering (the DSv2 analog of dynamic partition pruning):
     * when a graft table is joined to a selective side, Spark executes
@@ -994,8 +974,8 @@ final class GraftScan(
   private lazy val snap: TableSnapshot = TableReader.snapshot(tableDir, asOfVersion, catalog)
 
   /** Footer stats are keyed by PHYSICAL column names, so pruning only
-    * applies to files written under the current schema (same guard as
-    * [[TableReader.readOption]]); older files always survive. */
+    * applies to files written under the current schema; older files
+    * always survive. */
   private def pruneGuarded(data: Seq[FileEntry],
       prune: Seq[FileEntry] => Seq[FileEntry]): Seq[FileEntry] = {
     val (pr, keep) = data.partition(snap.isCurrentSchema)
@@ -1031,7 +1011,12 @@ final class GraftScan(
     graft.txn.TableAnalyze.exactHistograms(snap)
 
   private lazy val staticPrunedDataFiles: Seq[FileEntry] = {
-    val data = snap.files.filter(_.content == "data")
+    // caller-transformed partition candidates are valid ONLY under the
+    // CURRENT spec: bucket(8)'s "4" is not bucket(16)'s "4", so files
+    // written under another spec are kept
+    val data = PartitionPruning.pruneByFieldValues(
+      snap.files.filter(_.content == "data"), partitionFieldCandidates,
+      prunable = f => specForFile(f) == partSpec)
     // transform-aware partition pruning first: name-parse only, no IO;
     // per-file spec resolution handles spec-evolved tables
     val partPruned =
@@ -1060,6 +1045,11 @@ final class GraftScan(
     else pruneGuarded(strPruned,
       ScanPruning.pruneDataFilesWithNullCounts(_, isNullCols, isNotNullCols))
   }
+
+  /** Paths of the data files this scan keeps after static pruning,
+    * before pushed LIMIT/TopN truncation and runtime filtering — what a
+    * pruning self-assert compares against the unfiltered scan. */
+  private[graft] def plannedDataFiles: Seq[String] = staticPrunedDataFiles.map(_.path)
 
   /** True when NO delete (position / vector / later-sequence equality)
     * can remove rows from `f` — the gate for counting its full
@@ -1720,15 +1710,17 @@ final class GraftMorPartitionReader(
     if (part.rangeStart == 0L && part.rangeEnd == Long.MaxValue) None
     else Some((part.rangeStart, part.rangeEnd))
 
+  // the file's date/timestamp storage, known from the first record on
+  private val readSupport = new FileCalendar.ReadSupportWithCalendar
   private val reader: ParquetReader[Group] =
     if (physicalCols.isEmpty) {
       // nothing to materialize from this file (bare count, or every
       // needed column postdates it) — full rows, only ordinals consumed
-      val b = ParquetReader.builder(new GroupReadSupport(), new HPath(part.dataPath))
+      val b = ParquetReader.builder(readSupport, new HPath(part.dataPath))
         .withConf(new Configuration(taskConf))
       range.foreach { case (s, e) => b.withFileRange(s, e) }
       b.build()
-    } else projectedReader(part.dataPath, physicalCols, taskConf, range)
+    } else projectedReader(part.dataPath, physicalCols, taskConf, range, readSupport)
 
   // running FILE-ABSOLUTE ordinal: a range split starts at the row
   // count of every preceding row group (position-delete semantics)
@@ -1757,7 +1749,7 @@ final class GraftMorPartitionReader(
             (_: Group) => v
           case Some(phys) =>
             GraftBatchScan.eqKeyExtractor(
-              t, t.getFieldIndex(phys), readTypes(c), phys)
+              t, t.getFieldIndex(phys), readTypes(c), phys, readSupport.calendar)
         }
       }, set)
     }.toArray
@@ -1770,7 +1762,7 @@ final class GraftMorPartitionReader(
           (_: Group) => v
         case Some(phys) =>
           GraftBatchScan.fieldExtractor(
-            t, t.getFieldIndex(phys), readTypes(c), phys)
+            t, t.getFieldIndex(phys), readTypes(c), phys, readSupport.calendar)
       }
     }
 

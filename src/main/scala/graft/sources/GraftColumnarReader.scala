@@ -133,16 +133,26 @@ final class GraftMorColumnarReader(
     * (e.g. an adopted foreign file): reopen unfiltered rather than fail
     * the read over an optimization. */
   private var groupSkippingActive = rowGroupPredicate.isDefined
-  private val reader =
-    if (!groupSkippingActive) ParquetFileReader.open(inputFile, mkOptions(false))
-    else
-      try ParquetFileReader.open(inputFile, mkOptions(true))
-      catch { case _: Exception =>
-        groupSkippingActive = false
-        ParquetFileReader.open(inputFile, mkOptions(false))
-      }
+  private val reader = {
+    def unfiltered() = {
+      groupSkippingActive = false
+      ParquetFileReader.open(inputFile, mkOptions(false))
+    }
+    val r =
+      if (!groupSkippingActive) unfiltered()
+      else try ParquetFileReader.open(inputFile, mkOptions(true))
+      catch { case _: Exception => unfiltered() }
+    // stats in another timestamp unit or calendar than the pushed
+    // literals would skip live groups: such a file is read whole
+    val meta = r.getFooter.getFileMetaData
+    if (!groupSkippingActive ||
+        FileCalendar.of(meta.getKeyValueMetaData).statsExact(meta.getSchema)) r
+    else { r.close(); unfiltered() }
+  }
   private val fileSchema = reader.getFooter.getFileMetaData.getSchema
   private val createdBy = reader.getFooter.getFileMetaData.getCreatedBy
+  private val calendar =
+    FileCalendar.of(reader.getFooter.getFileMetaData.getKeyValueMetaData)
 
   /** Requested projection built from the FILE's own footer fields, so
     * repetition/type always match (the [[GraftBatchScan.projectedReader]]
@@ -157,6 +167,15 @@ final class GraftMorColumnarReader(
     new MessageType(fileSchema.getName, fields: _*)
   }
   if (cursorCurrentCols.nonEmpty) reader.setRequestedSchema(requestedSchema)
+
+  // per cursor: the step from a stored long/date to Catalyst's value
+  // (null = none; see [[FileCalendar]])
+  private val longFixes: Array[Long => Long] =
+    Array.tabulate(cursorCurrentCols.length)(ci => calendar.longFix(
+      requestedSchema.getColumns.get(ci).getPrimitiveType, cursorTypes(ci),
+      cursorCurrentCols(ci)))
+  private val dateFixes: Array[Int => Int] =
+    cursorTypes.map(calendar.dateFix)
 
   // reusable output vectors per REQUIRED field; null = constant-null
   // (the file predates the column)
@@ -237,7 +256,7 @@ final class GraftMorColumnarReader(
       while (s < scratchCols.length) {
         val ci = scratchCols(s)
         decodeToScratch(groupColumns(ci), groupMaxDef(ci), cursorTypes(ci),
-          scratch(ci), n)
+          longFixes(ci), dateFixes(ci), scratch(ci), n)
         s += 1
       }
       var live = 0
@@ -305,7 +324,8 @@ final class GraftMorColumnarReader(
           if (scratchSet.contains(ci))
             fillFromScratch(v, scratch(ci), f.dataType, n, keep)
           else
-            fillColumn(v, groupColumns(ci), groupMaxDef(ci), f.dataType, n, keep)
+            fillColumn(v, groupColumns(ci), groupMaxDef(ci), f.dataType,
+              longFixes(ci), dateFixes(ci), n, keep)
           out(c) = v
       }
       c += 1
@@ -350,8 +370,10 @@ final class GraftMorColumnarReader(
   /** Pull `n` BOXED values off one cursor into `dst` (the row reader's
     * [[GraftBatchScan.groupValue]] type rules — INT32-backed longs,
     * String for binary strings). Only the equality-key columns pay this
-    * boxing; plain output columns stream unboxed via [[fillColumn]]. */
+    * boxing; plain output columns stream unboxed via [[fillColumn]].
+    * `longFix`/`dateFix` are the column's [[FileCalendar]] steps. */
   private def decodeToScratch(cr: ColumnReader, maxDef: Int, dt: DataType,
+      longFix: Long => Long, dateFix: Int => Int,
       dst: Array[Any], n: Int): Unit = {
     val phys = cr.getDescriptor.getPrimitiveType.getPrimitiveTypeName
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
@@ -360,7 +382,9 @@ final class GraftMorColumnarReader(
       dst(i) =
         if (cr.getCurrentDefinitionLevel != maxDef) null
         else dt match {
-          case LongType | TimestampType | TimestampNTZType => decodeLong(cr, phys)
+          case LongType | TimestampType | TimestampNTZType =>
+            if (longFix == null) decodeLong(cr, phys) else longFix(decodeLong(cr, phys))
+          case DateType if dateFix != null => dateFix(cr.getInteger)
           case IntegerType | DateType => cr.getInteger
           case DoubleType             => // FLOAT = pre-widening file
             if (phys == FLOAT) cr.getFloat.toDouble else cr.getDouble
@@ -444,7 +468,8 @@ final class GraftMorColumnarReader(
     * compacted into `v`. Values must all be consumed (the cursor has no
     * skip), so dead rows are read and dropped. */
   private def fillColumn(v: WritableColumnVector, cr: ColumnReader,
-      maxDef: Int, dt: DataType, n: Int, keep: Array[Boolean]): Unit = {
+      maxDef: Int, dt: DataType, longFix: Long => Long, dateFix: Int => Int,
+      n: Int, keep: Array[Boolean]): Unit = {
     val phys = cr.getDescriptor.getPrimitiveType.getPrimitiveTypeName
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     var i = 0
@@ -455,7 +480,9 @@ final class GraftMorColumnarReader(
         if (!defined) v.putNull(o)
         else dt match {
           case LongType | TimestampType | TimestampNTZType =>
-            v.putLong(o, decodeLong(cr, phys))
+            v.putLong(o,
+              if (longFix == null) decodeLong(cr, phys) else longFix(decodeLong(cr, phys)))
+          case DateType if dateFix != null => v.putInt(o, dateFix(cr.getInteger))
           case IntegerType | DateType => v.putInt(o, cr.getInteger)
           case DoubleType             => // FLOAT = pre-widening file
             v.putDouble(o, if (phys == FLOAT) cr.getFloat.toDouble else cr.getDouble)

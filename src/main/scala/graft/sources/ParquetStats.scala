@@ -151,6 +151,10 @@ object ParquetStats {
       val untrusted = scala.collection.mutable.Set[String]()
       val nulls = scala.collection.mutable.Map[String, Long]()
       val nullsUntrusted = scala.collection.mutable.Set[String]()
+      // Julian-calendar dates/timestamps (FileCalendar) read back rebased
+      // — their stored stats are not bounds of the values read
+      val julian =
+        FileCalendar.of(reader.getFooter.getFileMetaData.getKeyValueMetaData).legacyDatetime
       for (block <- reader.getFooter.getBlocks.asScala if block.getRowCount > 0;
            cc <- block.getColumns.asScala) {
         val name = cc.getPath.toDotString
@@ -170,8 +174,8 @@ object ParquetStats {
             org.apache.parquet.schema.LogicalTypeAnnotation.DecimalLogicalTypeAnnotation]
           val isPlain = ann == null ||
             ann.isInstanceOf[IntLogicalTypeAnnotation] ||
-            ann.isInstanceOf[
-              org.apache.parquet.schema.LogicalTypeAnnotation.DateLogicalTypeAnnotation] ||
+            (!julian && ann.isInstanceOf[
+              org.apache.parquet.schema.LogicalTypeAnnotation.DateLogicalTypeAnnotation]) ||
             // timestamps: stamps carry no unit, and the consumers
             // (columnStats boxes TimestampType bounds as Catalyst
             // micros; nanosAsLong reads NANOS columns as LongType and
@@ -181,7 +185,7 @@ object ParquetStats {
             // bounds off by up to 10^6x
             (ann match {
               case ts: org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                ts.getUnit ==
+                !julian && ts.getUnit ==
                   org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.MICROS
               case _ => false
             })
@@ -324,6 +328,8 @@ object ParquetStats {
       decimalAsUnscaled: Set[String] = Set.empty)
       : Option[Map[String, (Long, Long)]] = {
     val acc = scala.collection.mutable.Map[String, (Long, Long)]()
+    val julian =
+      FileCalendar.of(reader.getFooter.getFileMetaData.getKeyValueMetaData).legacyDatetime
     for (block <- reader.getFooter.getBlocks.asScala if block.getRowCount > 0;
          cc <- block.getColumns.asScala) {
       val name = cc.getPath.toDotString
@@ -342,8 +348,8 @@ object ParquetStats {
             (pt.getLogicalTypeAnnotation.isInstanceOf[
               org.apache.parquet.schema.LogicalTypeAnnotation.DecimalLogicalTypeAnnotation] &&
               decimalAsUnscaled.contains(name)) ||
-            pt.getLogicalTypeAnnotation.isInstanceOf[
-              org.apache.parquet.schema.LogicalTypeAnnotation.DateLogicalTypeAnnotation])
+            (!julian && pt.getLogicalTypeAnnotation.isInstanceOf[
+              org.apache.parquet.schema.LogicalTypeAnnotation.DateLogicalTypeAnnotation]))
         val st = cc.getStatistics
         if (!integral || st == null || st.isEmpty) return None
         if (st.hasNonNullValue) {

@@ -34,16 +34,6 @@ import org.apache.spark.sql.functions._
   */
 object ScanPlanner {
 
-  /** List parquet files under `dir` as data-file scan tasks (resolved
-    * through Hadoop [[FileIO]], so object-store dirs plan the same way). */
-  def planDataFiles(dir: String, sequenceNumber: Long = 0L): Seq[FileScanTask] =
-    FileIO.listFiles(dir)
-      .filter(_._1.endsWith(".parquet"))
-      .sortBy(_._1)
-      .map { case (path, len) =>
-        FileScanTask(path, FileContent.Data, len, sequenceNumber = sequenceNumber)
-      }
-
   /** Split an oversized data task into contiguous byte-range tasks of at
     * most `targetSplitBytes` each (reference FileScanTask carries
     * {start, length}, iceberg_file_task_scan.rs:446-462). Ranges tile the

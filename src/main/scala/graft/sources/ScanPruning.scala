@@ -1,9 +1,9 @@
 package graft.sources
 
 import graft.txn.FileEntry
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.NodeBridge
 import org.apache.spark.sql.graftbridge.NodeBridge.PredNode
+import org.apache.spark.sql.types._
 
 /** File-level min/max pruning for merge-on-read reads — the scan-planning
   * half of what makes a filtered read of a 100 TB table cheap.
@@ -44,10 +44,7 @@ object ScanPruning {
     case _                   => None
   }
 
-  /** Intersect two bound maps (shared with the DSv2 scan's
-    * sources.Filter-derived bounds). */
-  def mergeBounds(a: Bounds, b: Bounds): Bounds = merge(a, b)
-
+  /** Intersect two bound maps. */
   private def merge(a: Bounds, b: Bounds): Bounds =
     (a.keySet ++ b.keySet).map { k =>
       (a.get(k), b.get(k)) match {
@@ -57,19 +54,10 @@ object ScanPruning {
       }
     }.toMap
 
-  /** Bound constraints implied by `filter`; empty when nothing usable.
-    * Walks the Column's node tree (Spark 4 Columns are ColumnNode trees
-    * until bound to a plan — exactly right here, since pruning runs
-    * BEFORE any DataFrame exists to resolve against). */
-  def constraints(filter: Column): Bounds =
-    constraintsOf(NodeBridge.tree(filter))
-
-  /** SQL-text twin of [[constraints]] — for callers holding the
-    * predicate as a string (e.g. `rewrite_data_files(where => ...)`). */
-  def constraintsOfSql(sql: String): Bounds =
-    constraintsOf(NodeBridge.treeOfSql(sql))
-
-  private def constraintsOf(root: PredNode): Bounds = {
+  /** Bound constraints implied by a SQL predicate string (e.g.
+    * `rewrite_data_files(where => ...)`); empty when nothing usable. */
+  def constraintsOfSql(sql: String): Bounds = {
+    val root = NodeBridge.treeOfSql(sql)
     // comparison with the attribute on the left; [lo/hi]Delta adjust for
     // strictness (x > v means x >= v+1 on an integral column)
     def cmp(a: PredNode, v: PredNode,
@@ -100,42 +88,6 @@ object ScanPruning {
       case _ => Map.empty
     }
     walk(root)
-  }
-
-  /** column → EXACT literal values allowed by `filter` (`=` / `isin`
-    * under AND conjunction, any literal type) — the inputs of
-    * transform-aware partition pruning on the API read path. Merged by
-    * intersection; anything unrecognized contributes nothing. */
-  def equalityCandidates(filter: Column): Map[String, Seq[Any]] = {
-    def lit(n: PredNode): Option[Any] = n match {
-      case PredNode.Lit(v) if v != null => Some(v)
-      case _                            => None
-    }
-    def mergeC(a: Map[String, Seq[Any]], b: Map[String, Seq[Any]]) =
-      (a.keySet ++ b.keySet).map { k =>
-        (a.get(k), b.get(k)) match {
-          case (Some(x), Some(y)) => k -> x.intersect(y)
-          case (one, two)         => k -> one.orElse(two).get
-        }
-      }.toMap
-    def walk(n: PredNode): Map[String, Seq[Any]] = n match {
-      case PredNode.Fn("and", Seq(a, b)) => mergeC(walk(a), walk(b))
-      case PredNode.Fn("=" | "==", Seq(a, b)) =>
-        (nameOf(a), lit(b)) match {
-          case (Some(c), Some(v)) => Map(c -> Seq(v))
-          case _ => (nameOf(b), lit(a)) match {
-            case (Some(c), Some(v)) => Map(c -> Seq(v))
-            case _                  => Map.empty
-          }
-        }
-      case PredNode.Fn("in", args) if args.size >= 2 =>
-        (nameOf(args.head), args.tail.map(lit)) match {
-          case (Some(c), vs) if vs.forall(_.isDefined) => Map(c -> vs.flatten)
-          case _                                       => Map.empty
-        }
-      case _ => Map.empty
-    }
-    walk(NodeBridge.tree(filter))
   }
 
   // ---------------------------------------------------------------- strings
@@ -320,14 +272,58 @@ object ScanPruning {
     else r
   }
 
-  /** Data files that may satisfy `filter`; delete files and files
-    * without trustworthy stats pass through untouched. If every data
-    * file is pruned the result holds NO data files — the caller
-    * resolves the schema from the snapshot and returns an empty scan
-    * with zero file IO (the filter runs regardless — pruning is an IO
-    * optimization, never a semantic one). */
-  def pruneDataFiles(files: Seq[FileEntry], filter: Column): Seq[FileEntry] =
-    pruneDataFilesWithBounds(files, constraints(filter))
+  /** Pushed `sources.Filter`s → integral [lo, hi] bounds: integral
+    * comparisons, plus decimals of ≤18 digits compared in UNSCALED space
+    * (order-preserving at the column's fixed scale; the footer stats of
+    * INT32/INT64-backed decimal columns are unscaled values —
+    * [[ParquetStats]]) and dates as epoch days. A literal that doesn't
+    * land exactly on the column's scale contributes nothing
+    * (conservative: the file is kept). */
+  def filterBounds(filters: Seq[org.apache.spark.sql.sources.Filter],
+      colTypes: Map[String, DataType]): Bounds = {
+    import org.apache.spark.sql.sources
+    def lit(a: String, v: Any): Option[Long] = colTypes.get(a) match {
+      case Some(d: DecimalType) if d.precision <= 18 =>
+        val bd: Option[java.math.BigDecimal] = v match {
+          case b: java.math.BigDecimal => Some(b)
+          case b: scala.math.BigDecimal => Some(b.bigDecimal)
+          case dec: Decimal => Some(dec.toJavaBigDecimal)
+          case _ => None
+        }
+        bd.flatMap { b =>
+          try Some(b.setScale(d.scale).unscaledValue().longValueExact())
+          catch { case _: ArithmeticException => None }
+        }
+      case Some(_: DecimalType) => None // FLBA-backed: stats untrusted
+      case Some(DateType) => v match {
+        // date stats are INT32 epoch days — compare in that domain
+        case d: java.sql.Date => Some(
+          org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaDate(d).toLong)
+        case d: java.time.LocalDate => Some(d.toEpochDay)
+        case _ => None
+      }
+      case _ => v match {
+        case i: Int => Some(i.toLong); case l: Long => Some(l)
+        case s: Short => Some(s.toLong); case _ => None
+      }
+    }
+    filters.foldLeft(Map.empty: Bounds) { (acc, f) =>
+      val b: Bounds = f match {
+        case sources.EqualTo(a, v)            => lit(a, v).map(x => Map(a -> (x, x))).getOrElse(Map.empty)
+        // saturate at the extremes: `> Long.MaxValue` / `< Long.MinValue`
+        // are impossible predicates — an empty range (lo > hi) prunes
+        // every file rather than wrapping around and keeping all of them
+        case sources.GreaterThan(a, v)        => lit(a, v).map(x => Map(a -> (if (x == Long.MaxValue) (1L, 0L) else (x + 1, Long.MaxValue)))).getOrElse(Map.empty)
+        case sources.GreaterThanOrEqual(a, v) => lit(a, v).map(x => Map(a -> (x, Long.MaxValue))).getOrElse(Map.empty)
+        case sources.LessThan(a, v)           => lit(a, v).map(x => Map(a -> (if (x == Long.MinValue) (1L, 0L) else (Long.MinValue, x - 1)))).getOrElse(Map.empty)
+        case sources.LessThanOrEqual(a, v)    => lit(a, v).map(x => Map(a -> (Long.MinValue, x))).getOrElse(Map.empty)
+        case sources.And(l, r)                => filterBounds(Seq(l, r), colTypes)
+        case _                                => Map.empty
+      }
+      merge(acc, b)
+    }
+  }
+
 
   /** Runtime-filter pruning: keep a data file iff, for EVERY constrained
     * column, at least one of the join-key values lands inside the file's
@@ -348,12 +344,13 @@ object ScanPruning {
       }
     }
 
-  /** Same pruning from pre-extracted bounds (the DSv2 scan derives them
-    * from pushed `sources.Filter`s instead of a Column tree).
-    * `decimalAsUnscaled` names the columns whose bounds are expressed
-    * in UNSCALED decimal space (the type-aware DSv2 path) — only those
-    * may consume decimal footer stats; the typeless [[constraints]]
-    * path passes none and keeps decimal files conservatively. */
+  /** Data files whose stats can intersect bounds `cs`; delete files and
+    * files without trustworthy stats pass through. All-pruned is an
+    * EMPTY data set. `decimalAsUnscaled` names the columns whose bounds
+    * are expressed in UNSCALED decimal space ([[filterBounds]]) — only
+    * those may consume decimal footer stats; the typeless
+    * [[constraintsOfSql]] path passes none and keeps decimal files
+    * conservatively. */
   def pruneDataFilesWithBounds(files: Seq[FileEntry], cs: Bounds,
       decimalAsUnscaled: Set[String] = Set.empty): Seq[FileEntry] =
     if (cs.isEmpty) files

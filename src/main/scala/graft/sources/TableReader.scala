@@ -3,16 +3,25 @@ package graft.sources
 import graft.compaction.SparkCompactionExecutor
 import graft.core.CompactionError
 import graft.plans.SchemaReconcile
+import graft.streaming.{GraftTable, GraftTableSource}
 import graft.txn.{FileTableCatalog, TableCatalog, TableSnapshot}
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** User-facing merge-on-read table reads: resolve a snapshot through the
-  * catalog, apply the full position/equality delete chain, and return
-  * the LIVE rows — what a query engine shows for the table. This is the
-  * read path a user of the library calls directly; compaction and
-  * validation reuse the same live-row assembly underneath
-  * ([[SparkCompactionExecutor.liveRows]]), so reads before and after a
-  * compaction are the same rows by construction.
+  * catalog and return its LIVE rows — what a query engine shows for the
+  * table.
+  *
+  * Two engines serve the callers here:
+  *  - [[read]] / [[readOption]] read through the DSv2 scan
+  *    ([[GraftScan]]): per-task delete application, file pruning from the
+  *    pushed filters, no join and no shuffle — the same scan SQL and
+  *    `format("graft")` use;
+  *  - [[changes]] and the [[changelog]] family read scoped file subsets
+  *    with the anti-join chain ([[SparkCompactionExecutor.liveRows]]),
+  *    which compaction and validation also use: a delete backlog there
+  *    may shuffle instead of having to fit in task memory.
   *
   * Time travel: pass `asOfVersion` to read any retained snapshot
   * (snapshots exist until [[graft.txn.CommitManager.expireSnapshots]]
@@ -45,121 +54,35 @@ object TableReader {
   /** Live rows at a snapshot, or None when it holds no data files (a
     * bootstrap snapshot, or a fully-deleted table after compaction) —
     * the schema is unknowable without data files, so "empty" cannot be
-    * represented as a DataFrame here. */
+    * represented as a DataFrame here.
+    *
+    * The frame is a DSv2 read PINNED to the snapshot resolved here: it
+    * keeps returning that snapshot's rows after later commits, and the
+    * materialized-view rewrite never substitutes it. */
   def readOption(
       spark: SparkSession,
       tableDir: String,
       asOfVersion: Option[Long] = None,
       catalog: TableCatalog = FileTableCatalog,
-      /** Optional predicate over user columns. Declared on the LIVE-ROW
-        * plan; Catalyst pushes it through the final projection and the
-        * left-anti delete joins down to the parquet scan (`PushedFilters`
-        * reach the row-group reader — PlanQualitySpec pins this), so a
-        * selective read of a 100 TB table prunes at the scan, not after
-        * the merge. Deletes are applied to the filtered rows only —
-        * semantically identical because anti-joins only REMOVE rows
-        * (filter and anti-join commute on the data side). */
+      /** Optional predicate over user columns, applied with `.filter`:
+        * Spark pushes it into the scan, which prunes files by partition
+        * transform, stamped bounds and null counts before any IO. */
       filter: Option[Column] = None,
       /** ALREADY-TRANSFORMED partition-value pruning (partition FIELD
-        * name → allowed rendered values): the caller evaluated the
-        * table's transform over its probe distributively and collected
-        * the ≤ N distinct partition values — [[PartitionPruning
-        * .pruneByFieldValues]] drops every other partition's files with
-        * zero IO. Purely an IO optimization: callers must guarantee the
-        * rows they consume can only live in the named partitions (an
-        * equi-join probe whose keys all transform into the candidate
-        * set). Unprefixed files (refresh deltas) are always kept. */
+        * name → allowed rendered values), see
+        * [[graft.streaming.GraftTable]]. Callers must guarantee the rows
+        * they consume can only live in the named partitions. */
       partitionFieldCandidates: Map[String, Set[String]] = Map.empty
   ): Option[DataFrame] = {
     val snap = snapshot(tableDir, asOfVersion, catalog)
-    // transformed-value pruning first (zero IO, name-parse only); the
-    // all-pruned case still resolves the schema from the snapshot below.
-    // Candidates are valid ONLY under the table's CURRENT spec — on a
-    // spec-evolved table a file written under an older spec keeps its
-    // old ordinals (bucket(8)'s "4" is not bucket(16)'s "4"), so only
-    // files whose own spec equals the current one are judged.
-    val preFiles =
-      if (partitionFieldCandidates.isEmpty) snap.files
-      else {
-        val curSpec = graft.core.PartitionSpecCodec.of(Some(snap))
-        val specFor = graft.core.PartitionSpecCodec.specForFile(Some(snap))
-        PartitionPruning.pruneByFieldValues(snap.files,
-          partitionFieldCandidates, prunable = f => specFor(f) == curSpec)
-      }
-    // file-level min/max pruning BEFORE Spark sees the file list: bound
-    // constraints in the filter drop data files whose footer stats prove
-    // no row can match ([[ScanPruning]] — conservative, IO-only). Footer
-    // stats are keyed by PHYSICAL column names, so on an evolved table
-    // only current-schema files are pruned (an old file could alias a
-    // since-renamed name onto a different logical column).
-    val prunable = (f: graft.txn.FileEntry) => snap.isCurrentSchema(f)
-    val files = filter.fold(preFiles) { p =>
-      // transform-aware partition pruning FIRST (the API twin of the
-      // DSv2 path): name-parse only, zero IO — a bucket point lookup
-      // keeps one bucket's files before any footer is fetched
-      val spec = graft.core.PartitionSpecCodec.of(Some(snap))
-      // a spec HISTORY means old files may still prune under their own
-      // layout even when the CURRENT spec is empty (evolved to
-      // unpartitioned)
-      val anySpecPrunes = spec.nonEmpty ||
-        snap.properties.contains(graft.core.PartitionSpecCodec.HistoryProperty)
-      val cands: Map[String, Seq[Any]] =
-        if (!anySpecPrunes) Map.empty
-        else ScanPruning.equalityCandidates(p)
-      val partPruned =
-        if (cands.isEmpty || !preFiles.exists(_.content == "data")) preFiles
-        else {
-          // same type resolution as GraftTableSource.tableSchema: schema
-          // history, else the newest data file's footer (one IO, and only
-          // on this filtered-partitioned path)
-          val fields = snap.currentSchema.map(_.fields).getOrElse(
-            graft.txn.SchemaEvolution.bootstrapSchema(snap).fields)
-          val types = fields.map(f => f.name ->
-            org.apache.spark.sql.types.DataType.fromDDL(f.dataType)).toMap
-          // per-file spec resolution: after a spec evolution each file
-          // prunes under the layout it was actually written with
-          PartitionPruning.prunePerFile(preFiles,
-            graft.core.PartitionSpecCodec.specForFile(Some(snap)), cands, types)
-        }
-      // footer-stats pruning over the survivors
-      val (pr, keep) = partPruned.partition(prunable)
-      ScanPruning.pruneDataFiles(pr, p) ++ keep
-    }
-    // equality-delete files whose stamped key bounds provably miss
-    // EVERY retained data file (or that no older data file exists for)
-    // never join the plan — the read-path twin of the DSv2 per-task
-    // skipping. READ ONLY: compaction keeps all delete files in its
-    // tasks because its commit must REMOVE their paths. Schema-evolved
-    // entries keep every delete (names may alias across versions).
-    val filesEq = {
-      val dataF = files.filter(_.content == "data")
-      files.filter { f =>
-        f.content != "equality-deletes" || !prunable(f) ||
-          dataF.exists(d => d.sequenceNumber < f.sequenceNumber &&
-            (!prunable(d) || ScanPruning.eqDeleteMayApply(f, d)))
-      }
-    }
-    val tasks = ScanPlanner.toInputTasks(filesEq.map(_.toTask))
-    if (tasks.dataFiles.isEmpty) {
-      if (!snap.files.exists(_.content == "data")) None
-      else {
-        // every data file was PRUNED (metadata-only): the scan is
-        // empty with the snapshot-resolved schema — zero data-file IO
-        // (at most one footer read on a history-less table), instead
-        // of reading a whole anchor file just to produce no rows
-        val fields = snap.currentSchema.map(_.fields).getOrElse(
-          graft.txn.SchemaEvolution.bootstrapSchema(snap).fields)
-        val schema = org.apache.spark.sql.types.StructType(fields.map(f =>
-          org.apache.spark.sql.types.StructField(f.name,
-            org.apache.spark.sql.types.DataType.fromDDL(f.dataType))))
-        val empty = spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-        Some(filter.fold(empty)(empty.filter))
-      }
-    } else {
-      val live = SparkCompactionExecutor.liveRows(spark, tasks,
-        schemas = snap.schemas, currentSchemaId = snap.schemaId)
-      Some(filter.fold(live)(live.filter))
+    if (!snap.files.exists(_.content == "data")) None
+    else {
+      val table = new GraftTable(tableDir, GraftTableSource.schemaOf(snap),
+        pinnedVersion = Some(snap.version), catalog = catalog,
+        partitionFieldCandidates = partitionFieldCandidates)
+      val df = DatasetBridge.ofRows(spark,
+        DataSourceV2Relation.create(table, None, None))
+      Some(filter.fold(df)(df.filter))
     }
   }
 
@@ -176,6 +99,18 @@ object TableReader {
       partitionFieldCandidates).getOrElse(
       throw CompactionError.Config(
         s"table has no data files at the requested version under $tableDir"))
+
+  /** Data files the graft scans under `df` plan, after static pruning
+    * (partition transforms, stamped bounds, null counts) and before any
+    * pushed LIMIT/TopN truncation — the evidence a pruning self-assert
+    * compares against the unfiltered read. */
+  def plannedDataFiles(df: DataFrame): Seq[String] =
+    df.queryExecution.optimizedPlan.collect {
+      case r: DataSourceV2ScanRelation => r.scan match {
+        case g: GraftScan => g.plannedDataFiles
+        case _ => Nil
+      }
+    }.flatten.distinct
 
   /** Change set between two retained snapshots: rows present at
     * `toVersion` but not `fromVersion` (`+`) and vice versa (`-`) —

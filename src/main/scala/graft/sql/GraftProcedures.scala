@@ -981,12 +981,7 @@ private[sql] object GraftProcedures {
       // every source column must exist in the table schema — a typo'd
       // spec would silently never fan out
       val cols: Set[String] =
-        snap.currentSchema.map(_.fields.map(_.name).toSet).getOrElse {
-          if (snap.files.exists(_.content == "data"))
-            graft.txn.SchemaEvolution.bootstrapSchema(snap)
-              .fields.map(_.name).toSet
-          else Set.empty
-        }
+        graft.streaming.GraftTableSource.schemaOf(snap).fieldNames.toSet
       if (cols.nonEmpty)
         spec.map(_.source).find(!cols.contains(_)).foreach(c =>
           throw CompactionError.Config(

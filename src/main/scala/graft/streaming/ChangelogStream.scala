@@ -116,13 +116,14 @@ object ChangelogStream {
     * per-row helper paid per VALUE. */
   private[streaming] def rowMaterializer(
       t: org.apache.parquet.schema.GroupType, base: StructType,
-      changeType: String, commitVersion: Long): Group => InternalRow = {
+      changeType: String, commitVersion: Long,
+      cal: graft.sources.FileCalendar): Group => InternalRow = {
     val ctVal = UTF8String.fromString(changeType)
     val extract: Array[Group => Any] = Array.tabulate(base.length) { i =>
       val f = base(i)
       if (!t.containsField(f.name)) (_: Group) => null
       else graft.sources.GraftBatchScan.fieldExtractor(
-        t, t.getFieldIndex(f.name), f.dataType, f.name)
+        t, t.getFieldIndex(f.name), f.dataType, f.name, cal)
     }
     g => {
       val values = new Array[Any](base.length + 2)
@@ -176,15 +177,16 @@ final class ChangeFileReader(path: String, fullSchema: StructType,
     changeType: String, commitVersion: Long, taskConf: Configuration)
     extends PartitionReader[InternalRow] {
   private val base = ChangelogStream.baseSchema(fullSchema)
+  private val readSupport = new graft.sources.FileCalendar.ReadSupportWithCalendar
   private val reader: ParquetReader[Group] =
-    ParquetReader.builder(new GroupReadSupport(), new HPath(path))
+    ParquetReader.builder(readSupport, new HPath(path))
       .withConf(taskConf).build()
   private var current: Group = _
   private var mat: Group => InternalRow = _
   override def next(): Boolean = { current = reader.read(); current != null }
   override def get(): InternalRow = {
     if (mat == null) mat = ChangelogStream.rowMaterializer(
-      current.getType, base, changeType, commitVersion)
+      current.getType, base, changeType, commitVersion, readSupport.calendar)
     mat(current)
   }
   override def close(): Unit = reader.close()
@@ -197,8 +199,9 @@ final class OrdinalDeleteReader(targetPath: String, ordinals0: Array[Long],
     fullSchema: StructType, commitVersion: Long, taskConf: Configuration)
     extends PartitionReader[InternalRow] {
   private val base = ChangelogStream.baseSchema(fullSchema)
+  private val readSupport = new graft.sources.FileCalendar.ReadSupportWithCalendar
   private val reader: ParquetReader[Group] =
-    ParquetReader.builder(new GroupReadSupport(), new HPath(targetPath))
+    ParquetReader.builder(readSupport, new HPath(targetPath))
       .withConf(taskConf).build()
   // sorted AND deduplicated: position-delete files are not key-distinct
   // (a row can be named twice), and a duplicate ordinal equal to an
@@ -230,7 +233,7 @@ final class OrdinalDeleteReader(targetPath: String, ordinals0: Array[Long],
   private var mat: Group => InternalRow = _
   override def get(): InternalRow = {
     if (mat == null) mat = ChangelogStream.rowMaterializer(
-      current.getType, base, "delete", commitVersion)
+      current.getType, base, "delete", commitVersion, readSupport.calendar)
     mat(current)
   }
   override def close(): Unit = reader.close()

@@ -6,7 +6,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDelete, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.write.{RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo}
@@ -79,25 +78,21 @@ class GraftTableProvider extends TableProvider with DataSourceRegister {
 
 object GraftTableSource {
   /** Read schema, resolved in order: the snapshot's CURRENT schema (an
-    * evolved table's source of truth) → the newest data file's footer
-    * (flat primitives, the exact-writer contract) → empty for a
-    * bootstrap table with no data yet (a scan of it is a correct empty
-    * result; the first append defines the schema). */
+    * evolved table's source of truth) → the newest data file's footer,
+    * as Spark's parquet reader sees it → empty for a bootstrap table
+    * with no data yet (a scan of it is a correct empty result; the
+    * first append defines the schema). */
   def tableSchema(tableDir: String, catalog: TableCatalog = FileTableCatalog,
-      asOfVersion: Option[Long] = None): StructType = {
-    val snap = asOfVersion match {
-      case None => catalog.loadOrThrow(tableDir)
-      case Some(v) => catalog.loadVersion(tableDir, v).getOrElse(
-        throw CompactionError.Config(
-          s"snapshot v$v does not exist (expired or never committed) under $tableDir"))
-    }
-    val fields = snap.currentSchema match {
-      case Some(s) => s.fields
-      case None if snap.files.exists(_.content == "data") =>
-        SchemaEvolution.bootstrapSchema(snap).fields
-      case None => Nil
-    }
-    StructType(fields.map { f =>
+      asOfVersion: Option[Long] = None): StructType =
+    schemaOf(graft.sources.TableReader.snapshot(tableDir, asOfVersion, catalog))
+
+  /** [[tableSchema]] of an already-loaded snapshot. */
+  def schemaOf(snap: TableSnapshot): StructType = snap.currentSchema match {
+    case None =>
+      SchemaEvolution.newestDataFile(snap).fold(new StructType())(f =>
+        StructType(SchemaEvolution.footerSchema(f.path).fields
+          .map(_.copy(nullable = true))))
+    case Some(s) => StructType(s.fields.map { f =>
       val base = StructField(f.name, DataType.fromDDL(f.dataType), nullable = true)
       if (f.writeDefault.isEmpty && f.initialDefault.isEmpty) base
       else {
@@ -139,7 +134,13 @@ final class GraftTable(tableDir: String, tblSchema: StructType,
     /** Where snapshots live. The path-based provider always uses the
       * metadata-JSON catalog; [[graft.sql.GraftCatalog]] injects the
       * Iceberg-format catalog for `format=iceberg` warehouses. */
-    catalog: TableCatalog = FileTableCatalog)
+    catalog: TableCatalog = FileTableCatalog,
+    /** ALREADY-TRANSFORMED partition-value pruning (partition FIELD name
+      * → allowed rendered values), applied by the scan before any other
+      * pruning ([[graft.sources.PartitionPruning.pruneByFieldValues]]).
+      * Purely an IO optimization: the caller guarantees the rows it
+      * consumes can only live in the named partitions. */
+    partitionFieldCandidates: Map[String, Set[String]] = Map.empty)
     extends Table with SupportsRead with SupportsWrite with SupportsDelete
     with SupportsMetadataColumns with SupportsRowLevelOperations {
   /** The table's directory — the identity the materialized-view
@@ -171,9 +172,11 @@ final class GraftTable(tableDir: String, tblSchema: StructType,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val startingVersion = Option(options.get("startingVersion")).getOrElse("1")
     val skipDeletes = options.getBoolean("skipDeletes", false)
-    val asOfVersion = Option(options.get("asOfVersion")).map(_.toLong)
-      .orElse(pinnedVersion)
-    val splitTarget = Option(options.get("splitTargetBytes")).map(_.toLong)
+    def longOption(name: String): Option[Long] = Option(options.get(name)).map(v =>
+      v.trim.toLongOption.getOrElse(throw CompactionError.Config(
+        s"read option $name must be a whole number, got '$v'")))
+    val asOfVersion = longOption("asOfVersion").orElse(pinnedVersion)
+    val splitTarget = longOption("splitTargetBytes")
       .getOrElse(graft.sources.GraftBatchScan.DefaultSplitTargetBytes)
     val vectorized = options.getBoolean("vectorizedRead", true)
     // changelog mode ([[ChangelogStream]]): the scan schema gains the
@@ -186,7 +189,7 @@ final class GraftTable(tableDir: String, tblSchema: StructType,
     new graft.sources.GraftScanBuilder(tableDir, scanSchema, asOfVersion,
       catalog, startingVersion, skipDeletes,
       splitTargetBytes = splitTarget, vectorizedRead = vectorized,
-      changelog = changelog)
+      changelog = changelog, partitionFieldCandidates = partitionFieldCandidates)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -336,8 +339,11 @@ final class GraftTable(tableDir: String, tblSchema: StructType,
     // stats prove matchless hold no referenced positions, so leaving
     // them unpinned avoids false aborts under unrelated concurrent
     // rewrites.
-    val candidatePaths = graft.sources.ScanPruning
-      .pruneDataFiles(snap.files.filter(_.content == "data"), cond)
+    val types = tblSchema.fields.map(f => f.name -> f.dataType).toMap
+    val candidatePaths = graft.sources.ScanPruning.pruneDataFilesWithBounds(
+        snap.files.filter(_.content == "data"),
+        graft.sources.ScanPruning.filterBounds(filters.toSeq, types),
+        decimalAsUnscaled = types.collect { case (c, _: DecimalType) => c }.toSet)
       .map(_.path).toSet
     graft.txn.TableWrites.appendPositionDeletes(tableDir, positions,
       catalog = catalog, requiredDataPaths = candidatePaths)
@@ -460,8 +466,9 @@ final class GroupPartitionReader(path: String, schema: StructType,
     taskConf: Configuration = new Configuration())
     extends PartitionReader[InternalRow] {
 
+  private val readSupport = new graft.sources.FileCalendar.ReadSupportWithCalendar
   private val reader: ParquetReader[Group] =
-    ParquetReader.builder(new GroupReadSupport(), new HPath(path))
+    ParquetReader.builder(readSupport, new HPath(path))
       .withConf(taskConf)
       .build()
   private var current: Group = _
@@ -483,7 +490,7 @@ final class GroupPartitionReader(path: String, schema: StructType,
       extract = Array.tabulate(schema.length) { i =>
         val f = schema(i)
         graft.sources.GraftBatchScan.fieldExtractor(
-          t, t.getFieldIndex(f.name), f.dataType, f.name)
+          t, t.getFieldIndex(f.name), f.dataType, f.name, readSupport.calendar)
       }
     }
     val values = new Array[Any](schema.length)

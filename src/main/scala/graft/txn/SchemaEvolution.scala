@@ -2,8 +2,6 @@ package graft.txn
 
 import graft.core._
 import graft.io.FileIO
-import org.apache.parquet.schema.LogicalTypeAnnotation
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 
 /** Iceberg-model schema evolution over the engine's table format: field
   * IDS are the stable identity, names are labels, and NO data file is
@@ -192,75 +190,52 @@ object SchemaEvolution {
     committed
   }
 
+  /** The NEWEST data file of a snapshot — the schema source of a
+    * history-less table (all its files share one physical schema by
+    * construction). */
+  def newestDataFile(snap: TableSnapshot): Option[FileEntry] =
+    snap.files.filter(_.content == "data")
+      .sortBy(f => (f.sequenceNumber, f.path)).lastOption
+
   /** Bootstrap a schema for a pre-evolution table: field ids 1..n in the
-    * column order of the NEWEST data file's parquet footer (all files of
-    * a history-less table share one physical schema by construction). */
+    * column order of the NEWEST data file's parquet footer. */
   def bootstrapSchema(snap: TableSnapshot): TableSchema = {
-    val newest = snap.files.filter(_.content == "data")
-      .sortBy(f => (f.sequenceNumber, f.path)).lastOption.getOrElse(
-        throw CompactionError.Config(
-          "cannot bootstrap a schema for a table with no data files; " +
-            "append data before evolving"))
+    val newest = newestDataFile(snap).getOrElse(
+      throw CompactionError.Config(
+        "cannot bootstrap a schema for a table with no data files; " +
+          "append data before evolving"))
     TableSchema(snap.schemaId, footerFields(newest.path))
   }
 
-  /** Read a parquet footer's columns as (id, name, Spark DDL type),
-    * ids 1..n in file order. Flat schemas only — same contract as the
-    * Iceberg catalog's inference. */
-  def footerFields(path: String): Seq[SchemaField] = {
+  /** A parquet footer as the Spark schema Spark's own parquet reader
+    * derives from it (`ParquetToSparkSchemaConverter`) — flat and nested
+    * columns alike. The converter runs under Spark's DEFAULT conf, not
+    * the caller's session: a table's schema (which [[bootstrapSchema]]
+    * persists) must not change with `binaryAsString`,
+    * `inferTimestampNTZ.enabled` or any other session read setting. */
+  def footerSchema(path: String): org.apache.spark.sql.types.StructType = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(path), FileIO.hadoopConf)
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     val msg = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
-    import scala.jdk.CollectionConverters._
-    msg.getFields.asScala.toSeq.zipWithIndex.map { case (t, i) =>
-      if (!t.isPrimitive) throw CompactionError.Config(
-        s"schema evolution supports flat schemas only; column ${t.getName} " +
-          s"of $path is a group type")
-      SchemaField(i + 1, t.getName, ddlType(t.asPrimitiveType()))
-    }
+    new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetToSparkSchemaConverter(new org.apache.spark.sql.internal.SQLConf)
+      .convert(msg)
   }
 
-  private def ddlType(t: org.apache.parquet.schema.PrimitiveType): String = {
-    val logical = t.getLogicalTypeAnnotation
-    t.getPrimitiveTypeName match {
-      case INT64 =>
-        logical match {
-          case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-              if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS =>
-            if (ts.isAdjustedToUTC) "timestamp" else "timestamp_ntz"
-          case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-            s"decimal(${d.getPrecision},${d.getScale})"
-          case _ => "bigint"
-        }
-      case INT32 =>
-        logical match {
-          case _: LogicalTypeAnnotation.DateLogicalTypeAnnotation => "date"
-          case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-            s"decimal(${d.getPrecision},${d.getScale})"
-          case _                                                  => "int"
-        }
-      case BINARY =>
-        logical match {
-          case _: LogicalTypeAnnotation.StringLogicalTypeAnnotation => "string"
-          case _                                                    => "binary"
-        }
-      case FIXED_LEN_BYTE_ARRAY =>
-        logical match {
-          case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-            s"decimal(${d.getPrecision},${d.getScale})"
-          case _ => throw CompactionError.Config(
-            s"unsupported FIXED_LEN_BYTE_ARRAY column ${t.getName} " +
-              "(only decimal annotations are recognized)")
-        }
-      case DOUBLE  => "double"
-      case FLOAT   => "float"
-      case BOOLEAN => "boolean"
-      // Spark's default timestamp encoding (and Hive's): an instant
-      case INT96   => "timestamp"
-      case other => throw CompactionError.Config(
-        s"unsupported parquet primitive for schema evolution: $other " +
-          s"(column ${t.getName})")
+  /** A parquet footer's columns as (id, name, Spark DDL type), ids 1..n
+    * in file order. Flat schemas only: schema evolution moves whole
+    * top-level columns. */
+  def footerFields(path: String): Seq[SchemaField] =
+    footerSchema(path).fields.toSeq.zipWithIndex.map { case (f, i) =>
+      f.dataType match {
+        case _: org.apache.spark.sql.types.StructType |
+             _: org.apache.spark.sql.types.ArrayType |
+             _: org.apache.spark.sql.types.MapType =>
+          throw CompactionError.Config(
+            s"schema evolution supports flat schemas only; column ${f.name} " +
+              s"of $path is a group type")
+        case dt => SchemaField(i + 1, f.name, dt.catalogString)
+      }
     }
-  }
 }

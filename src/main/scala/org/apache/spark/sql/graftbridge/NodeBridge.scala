@@ -1,16 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.internal.{ColumnNode, Literal, UnresolvedAttribute, UnresolvedFunction}
-
-/** Read-only view of a Column's node tree (Spark 4 Columns are
-  * `private[sql]` ColumnNode trees until bound to a plan). The engine's
-  * scan pruning needs to inspect UNBOUND filter predicates — before any
-  * DataFrame exists to resolve them against — so this shim, living in
-  * the `org.apache.spark.sql` namespace like [[ColumnBridge]], converts
-  * the private node tree into a minimal public ADT. Anything beyond
-  * attribute/literal/function collapses to [[PredNode.Opaque]], which
-  * consumers must treat as "unknown — assume it can match anything". */
+/** Read-only view of an UNBOUND SQL predicate as a minimal public ADT —
+  * the engine's `rewrite_data_files(where => ...)` pruning inspects the
+  * predicate before any DataFrame exists to resolve it against. Anything
+  * beyond attribute/literal/comparison collapses to [[PredNode.Opaque]],
+  * which consumers must treat as "unknown — assume it can match
+  * anything". */
 object NodeBridge {
 
   sealed trait PredNode
@@ -21,14 +16,8 @@ object NodeBridge {
     case object Opaque extends PredNode
   }
 
-  def tree(c: Column): PredNode = convert(c.node)
-
-  /** A SQL predicate string as a [[PredNode]] tree — the path for
-    * callers holding a predicate as TEXT (e.g. a procedure's `where`
-    * argument): `expr(sql)` wraps a parsed catalyst expression in a
-    * node [[convert]] cannot see into, so parse and walk the catalyst
-    * tree directly. Unhandled shapes collapse to Opaque (assume-match),
-    * same contract as the Column path. */
+  /** A SQL predicate string as a [[PredNode]] tree: parse and walk the
+    * catalyst tree. Unhandled shapes collapse to Opaque (assume-match). */
   def treeOfSql(sql: String): PredNode =
     try convertExpr(
       org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseExpression(sql))
@@ -53,13 +42,5 @@ object NodeBridge {
       })
       case _ => PredNode.Opaque
     }
-  }
-
-  private def convert(n: ColumnNode): PredNode = n match {
-    case f: UnresolvedFunction =>
-      PredNode.Fn(f.functionName, f.arguments.map(convert))
-    case a: UnresolvedAttribute => PredNode.Attr(a.nameParts.mkString("."))
-    case l: Literal             => PredNode.Lit(l.value)
-    case _                      => PredNode.Opaque
   }
 }

@@ -106,10 +106,7 @@ class MaterializedViewRewriteSpec extends AnyFunSuite {
       // STAR ROLLUP: a coarser grouping (here GROUP BY ()) re-aggregates
       // the stored per-color state — no source relation may survive
       def v2Count(df: org.apache.spark.sql.DataFrame): Int =
-        df.queryExecution.optimizedPlan.collect {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r
-        }.size
+        MaterializedViewRewrite.unpinnedScans(df.queryExecution.optimizedPlan).size
       val qTot = sql("""SELECT sum(v) AS s, count(*) AS c
                       |FROM gmvr.db.sfact f JOIN gmvr.db.sdim d ON f.fk = d.dk
                       |""".stripMargin)
@@ -282,17 +279,12 @@ class MaterializedViewRewriteSpec extends AnyFunSuite {
       // GROUP BY a ⊂ {a,b}: substituted as an aggregate OVER THE VIEW
       val q = sql(
         "SELECT a, sum(v) AS s, count(*) AS c FROM gmvr.db.ru GROUP BY a")
-      // the SOURCE is a DSv2 catalog table; the view reads through the
-      // V1 parquet path — a plan with no V2 scan left and a parquet
-      // relation present proves the source scan was substituted away
-      val v2Scans = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
-        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r
-      }
+      // the SOURCE is a live DSv2 scan; the view is read through a
+      // PINNED graft scan — a plan with no live scan left and a pinned
+      // one present proves the source scan was substituted away
+      val v2Scans = MaterializedViewRewrite.unpinnedScans(q.queryExecution.optimizedPlan)
       assert(v2Scans.isEmpty, "rollup should replace the source scan")
-      val viewScans = q.queryExecution.optimizedPlan.collect {
-        case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l
-      }
+      val viewScans = MaterializedViewRewrite.pinnedScans(q.queryExecution.optimizedPlan)
       assert(viewScans.nonEmpty, "rollup should scan the view table")
       // ...and no scan of the SOURCE remains (the source has 5 rows,
       // the view 4 — row provenance certifies which table answered)
@@ -309,10 +301,7 @@ class MaterializedViewRewriteSpec extends AnyFunSuite {
       sql("INSERT INTO gmvr.db.ru VALUES ('x', NULL, 7)")
       MaterializedView.refresh(spark, mvDir)
       val cb = sql("SELECT a, count(b) AS cb FROM gmvr.db.ru GROUP BY a")
-      val v2b = cb.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
-        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r
-      }
+      val v2b = MaterializedViewRewrite.unpinnedScans(cb.queryExecution.optimizedPlan)
       assert(v2b.isEmpty, "count(finer group col) should roll up the view")
       assert(cb.collect().map(r => (r.getString(0), r.getLong(1))).toMap ==
         Map("x" -> 3L, "y" -> 2L))
@@ -347,10 +336,7 @@ class MaterializedViewRewriteSpec extends AnyFunSuite {
       // the filtered view
       val q2 = sql("SELECT a, sum(v) AS s FROM gmvr.db.fc " +
         "WHERE b = 'p' GROUP BY a")
-      val v2Scans = q2.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
-        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r
-      }
+      val v2Scans = MaterializedViewRewrite.unpinnedScans(q2.queryExecution.optimizedPlan)
       assert(v2Scans.isEmpty, "rollup+filter should replace the source scan")
       assert(q2.collect().map(r => (r.getString(0), r.getLong(1))).toSet ==
         Set(("x", 1L), ("y", 10L)))
@@ -388,10 +374,7 @@ class MaterializedViewRewriteSpec extends AnyFunSuite {
       // ROLLUP: summed sums ÷ summed non-null counts; the plan
       // aggregates the VIEW, never the source
       val qr = sql("SELECT a, avg(v) AS m FROM gmvr.db.av GROUP BY a")
-      val v2 = qr.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
-        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r
-      }
+      val v2 = MaterializedViewRewrite.unpinnedScans(qr.queryExecution.optimizedPlan)
       assert(v2.isEmpty, "rollup avg should replace the source scan")
       assert(avgMap(qr) == Map("x" -> Some(13.0 / 3), "y" -> None))
       // avg over a column with no maintained sum: fall back, stay right
@@ -414,10 +397,7 @@ class MaterializedViewRewriteSpec extends AnyFunSuite {
     withViews(mvDir) {
       // ROLLUP: distinct statuses per a — NULL b never counts
       val qr = sql("SELECT a, count(DISTINCT b) AS d FROM gmvr.db.cd GROUP BY a")
-      val v2 = qr.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
-        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r
-      }
+      val v2 = MaterializedViewRewrite.unpinnedScans(qr.queryExecution.optimizedPlan)
       assert(v2.isEmpty, "rollup count-distinct should replace the scan")
       assert(qr.collect().map(r => (r.getString(0), r.getLong(1))).toSet ==
         Set(("x", 2L), ("y", 1L)))

@@ -193,8 +193,8 @@ class DedupIndexSpec extends AnyFunSuite {
     Dedup.bandRows(corpus.filter(col("doc_id") < 2L), 32, 4)
       .createOrReplaceTempView("didx_evo_old")
     spark.sql(s"INSERT INTO $name.db.didx SELECT * FROM didx_evo_old")
-    val oldFiles = graft.sources.TableReader.read(spark, idxDir)
-      .inputFiles.length
+    val oldFiles = graft.sources.TableReader.plannedDataFiles(
+      graft.sources.TableReader.read(spark, idxDir)).length
     // evolve the layout, then docs 20/21's rows land under bucket(16)
     val snap0 = FileTableCatalog.loadOrThrow(idxDir)
     new graft.txn.CommitManager(idxDir).evolvePartitionSpec(

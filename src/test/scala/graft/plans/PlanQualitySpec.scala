@@ -83,8 +83,12 @@ class PlanQualitySpec extends AnyFunSuite {
     val df = graft.sources.TableReader.read(spark, t,
       filter = Some(col("id") >= 10L))
     val p = plan(df)
-    val dataScan = p.split("\n").find(l =>
-      l.contains("PushedFilters") && l.contains("GreaterThanOrEqual(id,10)"))
+    // the graft scan's own line names the pinned snapshot and every
+    // filter pushed into it
+    val version = graft.txn.FileTableCatalog.loadOrThrow(t).version
+    val dataScan = p.split("\n").find(l => l.contains("BatchScan") &&
+      l.contains(s"graft MoR $t @v$version PushedFilters: [") &&
+      l.contains("GreaterThanOrEqual(id,10)"))
     assert(dataScan.isDefined,
       s"filter must reach the parquet scan as a pushed filter:\n$p")
     assert(df.as[(Long, String)].collect().toSeq == Seq((50L, "c")))

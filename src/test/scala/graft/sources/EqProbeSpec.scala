@@ -29,9 +29,9 @@ class EqProbeSpec extends AnyFunSuite {
   }
 
   private val extract = Array(
-    GraftBatchScan.eqKeyExtractor(fileType, 0, LongType, "id"),
-    GraftBatchScan.eqKeyExtractor(fileType, 1, StringType, "s"),
-    GraftBatchScan.eqKeyExtractor(fileType, 2, DoubleType, "d"))
+    GraftBatchScan.eqKeyExtractor(fileType, 0, LongType, "id", FileCalendar.Gregorian),
+    GraftBatchScan.eqKeyExtractor(fileType, 1, StringType, "s", FileCalendar.Gregorian),
+    GraftBatchScan.eqKeyExtractor(fileType, 2, DoubleType, "d", FileCalendar.Gregorian))
 
   test("a probe through the reused ArraySeq view hits a List-keyed HashSet") {
     val set = new java.util.HashSet[Seq[Any]]()

@@ -13,25 +13,25 @@ class ScanPruningSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("constraint extraction: comparisons, conjunction, both orientations") {
-    import ScanPruning.constraints
-    assert(constraints(col("x") === 5L) == Map("x" -> (5L, 5L)))
-    assert(constraints(lit(5L) === col("x")) == Map("x" -> (5L, 5L)))
-    assert(constraints(col("x") > 5L) == Map("x" -> (6L, Long.MaxValue)))
-    assert(constraints(col("x") >= 5L) == Map("x" -> (5L, Long.MaxValue)))
-    assert(constraints(col("x") < 5L) == Map("x" -> (Long.MinValue, 4L)))
-    assert(constraints(col("x") <= 5L) == Map("x" -> (Long.MinValue, 5L)))
-    assert(constraints(lit(5L) < col("x")) == Map("x" -> (6L, Long.MaxValue)))
-    assert(constraints(col("x") >= 2L && col("x") <= 9L && col("y") === 1L)
+    val constraints = ScanPruning.constraintsOfSql _
+    assert(constraints("x = 5") == Map("x" -> (5L, 5L)))
+    assert(constraints("5 = x") == Map("x" -> (5L, 5L)))
+    assert(constraints("x > 5") == Map("x" -> (6L, Long.MaxValue)))
+    assert(constraints("x >= 5") == Map("x" -> (5L, Long.MaxValue)))
+    assert(constraints("x < 5") == Map("x" -> (Long.MinValue, 4L)))
+    assert(constraints("x <= 5") == Map("x" -> (Long.MinValue, 5L)))
+    assert(constraints("5 < x") == Map("x" -> (6L, Long.MaxValue)))
+    assert(constraints("x >= 2 AND x <= 9 AND y = 1")
       == Map("x" -> (2L, 9L), "y" -> (1L, 1L)))
   }
 
   test("constraint extraction is conservative: OR, strings, arithmetic yield nothing") {
-    import ScanPruning.constraints
-    assert(constraints(col("x") === 1L || col("x") === 2L).isEmpty)
-    assert(constraints(col("s") === "abc").isEmpty)
-    assert(constraints(col("x") % 2 === 0).isEmpty)
+    val constraints = ScanPruning.constraintsOfSql _
+    assert(constraints("x = 1 OR x = 2").isEmpty)
+    assert(constraints("s = 'abc'").isEmpty)
+    assert(constraints("x % 2 = 0").isEmpty)
     // the supported half of an AND still contributes
-    assert(constraints(col("x") <= 3L && col("s") === "abc")
+    assert(constraints("x <= 3 AND s = 'abc'")
       == Map("x" -> (Long.MinValue, 3L)))
   }
 
@@ -47,7 +47,7 @@ class ScanPruningSpec extends AnyFunSuite {
 
   test("typeless constraints never consume decimal stats (value vs unscaled domain)") {
     // price 1.00..2.00 stores unscaled stats [100, 200]; the typeless
-    // Column-tree path extracts the raw literal 5 — comparing the two
+    // SQL-text path extracts the raw literal 5 — comparing the two
     // domains would wrongly prune a file full of matching rows
     val dir = Files.createTempDirectory("prune-dec").toString
     val tmp = Files.createTempDirectory("prune-dec-w").toString
@@ -59,7 +59,8 @@ class ScanPruningSpec extends AnyFunSuite {
     Files.createDirectories(target.getParentFile.toPath)
     Files.move(part.toPath, target.toPath)
     val fe = FileEntry(target.getPath, "data", target.length(), 101L, 1L)
-    val kept = ScanPruning.pruneDataFiles(Seq(fe), col("price") < 5)
+    val kept = ScanPruning.pruneDataFilesWithBounds(Seq(fe),
+      ScanPruning.constraintsOfSql("price < 5"))
     assert(kept.map(_.path) == Seq(fe.path),
       "a decimal column must not be pruned by an untyped literal bound")
     // the type-aware path (bounds already unscaled) MAY prune via the
@@ -79,19 +80,18 @@ class ScanPruningSpec extends AnyFunSuite {
       equalityIds = Seq("id"))
     val files = Seq(f1, f2, del)
 
-    val kept = ScanPruning.pruneDataFiles(files, col("id") <= 7L)
+    def prune(sql: String) =
+      ScanPruning.pruneDataFilesWithBounds(files, ScanPruning.constraintsOfSql(sql))
+    val kept = prune("id <= 7")
     assert(kept.map(_.path).contains(f1.path))
     assert(!kept.filter(_.content == "data").map(_.path).contains(f2.path))
     assert(kept.exists(_.content == "equality-deletes"))
 
     // boundary inclusivity: id <= 10 and id >= 11 each keep exactly one
-    assert(ScanPruning.pruneDataFiles(files, col("id") <= 10L)
-      .count(_.content == "data") == 1)
-    assert(ScanPruning.pruneDataFiles(files, col("id") >= 11L)
-      .count(_.content == "data") == 1)
+    assert(prune("id <= 10").count(_.content == "data") == 1)
+    assert(prune("id >= 11").count(_.content == "data") == 1)
     // spanning range keeps both
-    assert(ScanPruning.pruneDataFiles(files, col("id") >= 5L && col("id") <= 15L)
-      .count(_.content == "data") == 2)
+    assert(prune("id >= 5 AND id <= 15").count(_.content == "data") == 2)
   }
 
   test("all-pruned reads NO data files; schema resolves from the snapshot") {
@@ -102,8 +102,8 @@ class ScanPruningSpec extends AnyFunSuite {
     val out = TableReader.read(spark, dir, filter = Some(col("id") === 999L))
     // zero data files in the plan: the former keep-one anchor cost a
     // whole file read per fully-pruned query
-    assert(out.inputFiles.count(_.contains("/data/f")) == 0,
-      s"expected no data files scanned, got ${out.inputFiles.toSeq}")
+    assert(TableReader.plannedDataFiles(out).isEmpty,
+      s"expected no data files scanned, got ${TableReader.plannedDataFiles(out)}")
     assert(out.count() == 0 && out.columns.toSeq == Seq("id", "v"))
   }
 
@@ -215,8 +215,9 @@ class ScanPruningSpec extends AnyFunSuite {
       properties = Map(PartitionSpecCodec.Property -> PartitionSpecCodec.encode(spec))))
     val out = TableReader.read(spark, dir, filter = Some(col("id") === 7L))
     // exactly one bucket file feeds the plan; result intact
-    assert(out.inputFiles.length == 1, s"read ${out.inputFiles.toSeq}")
-    assert(out.inputFiles.head.contains(
+    val planned = TableReader.plannedDataFiles(out)
+    assert(planned.length == 1, s"read $planned")
+    assert(planned.head.contains(
       s"id_bucket=${spec.head.eval(7L, org.apache.spark.sql.types.LongType)}"))
     assert(out.select("v").head.getString(0) == "v7")
   }
@@ -226,6 +227,7 @@ class ScanPruningSpec extends AnyFunSuite {
     val f1 = writeFile((1L to 10L).map(i => (i, s"a$i")), s"$dir/data/f1.parquet")
     val f2 = writeFile((11L to 20L).map(i => (i, s"b$i")), s"$dir/data/f2.parquet")
     val files = Seq(f1, f2)
-    assert(ScanPruning.pruneDataFiles(files, col("v") === "a3").size == 2)
+    assert(ScanPruning.pruneDataFilesWithBounds(files,
+      ScanPruning.constraintsOfSql("v = 'a3'")).size == 2)
   }
 }
