@@ -45,8 +45,9 @@ object SparkCompactionExecutor extends CompactionExecutor {
     * 3-6): hidden columns only as needed, delete tables broadcast when
     * their file bytes are under the session broadcast threshold.
     * `keepLineage` retains `sys_hidden_file_path`/`sys_hidden_pos` in
-    * the output — the DELETE FROM path selects matching positions from
-    * them.
+    * the output — `TableReader.changelog` stamps a folded append run's
+    * commit versions from the file path and matches a position-delete
+    * commit's newly dead rows on both.
     *
     * With a schema history (`schemas` + `currentSchemaId`) every file —
     * data and equality-delete alike — is reconciled to the CURRENT

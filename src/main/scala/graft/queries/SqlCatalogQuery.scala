@@ -12,9 +12,10 @@ import java.util.concurrent.atomic.AtomicInteger
   *  1. CREATE TABLE declares the schema (bootstrap snapshot carries it);
   *  2. two INSERT INTO commits land thirds of lineitem;
   *  3. DELETE FROM removes rows matching a translatable predicate —
-  *     planned as a merge-on-read POSITION delete commit
-  *     ([[graft.streaming.GraftTable.deleteWhere]]), so it affects only
-  *     rows present at delete time;
+  *     the positions of the matching live rows, read from a pinned DSv2
+  *     scan of the predicate, are committed as a merge-on-read POSITION
+  *     delete ([[graft.streaming.GraftTable.deleteWhere]]), so it
+  *     affects only rows present at delete time;
   *  4. the last third is inserted AFTER the delete — its matching rows
   *     must survive (position deletes pin physical rows, not keys);
   *  5. SELECT reads the live rows back.

@@ -1046,10 +1046,10 @@ final class GraftScan(
       ScanPruning.pruneDataFilesWithNullCounts(_, isNullCols, isNotNullCols))
   }
 
-  /** Paths of the data files this scan keeps after static pruning,
-    * before pushed LIMIT/TopN truncation and runtime filtering — what a
-    * pruning self-assert compares against the unfiltered scan. */
-  private[graft] def plannedDataFiles: Seq[String] = staticPrunedDataFiles.map(_.path)
+  /** The data files this scan keeps after static pruning, before pushed
+    * LIMIT/TopN truncation and runtime filtering — what a pruning
+    * self-assert compares against the unfiltered scan. */
+  private[graft] def plannedDataFiles: Seq[FileEntry] = staticPrunedDataFiles
 
   /** True when NO delete (position / vector / later-sequence equality)
     * can remove rows from `f` — the gate for counting its full

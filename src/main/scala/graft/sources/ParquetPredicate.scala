@@ -36,6 +36,34 @@ import org.apache.spark.sql.types._
   */
 object ParquetPredicate {
 
+  /** A pushed literal in its column's stats domain — unscaled decimals,
+    * epoch micros, epoch days — shared with [[ScanPruning.filterBounds]].
+    * None when the literal does not convert exactly. */
+  private[sources] def unscaled(d: DecimalType, v: Any): Option[Long] = {
+    val bd: Option[java.math.BigDecimal] = v match {
+      case b: java.math.BigDecimal  => Some(b)
+      case b: scala.math.BigDecimal => Some(b.bigDecimal)
+      case dec: org.apache.spark.sql.types.Decimal => Some(dec.toJavaBigDecimal)
+      case _ => None
+    }
+    bd.flatMap { b =>
+      try Some(b.setScale(d.scale).unscaledValue().longValueExact())
+      catch { case _: ArithmeticException => None }
+    }
+  }
+
+  private[sources] def micros(v: Any): Option[Long] = v match {
+    case t: java.sql.Timestamp  => Some(DateTimeUtils.fromJavaTimestamp(t))
+    case i: java.time.Instant   => Some(DateTimeUtils.instantToMicros(i))
+    case l: java.time.LocalDateTime => Some(DateTimeUtils.localDateTimeToMicros(l))
+    case _ => None
+  }
+  private[sources] def epochDay(v: Any): Option[Int] = v match {
+    case d: java.sql.Date      => Some(DateTimeUtils.fromJavaDate(d))
+    case d: java.time.LocalDate => Some(Math.toIntExact(d.toEpochDay))
+    case _ => None
+  }
+
   /** Conjunction over every convertible pushed filter, or None when
     * nothing converts. `columnMap` resolves CURRENT column names to the
     * file's physical names (None = column absent from the file). */
@@ -94,31 +122,6 @@ object ParquetPredicate {
         case Gt => FilterApi.gt(col, v);   case GtEq  => FilterApi.gtEq(col, v)
         case Lt => FilterApi.lt(col, v);   case LtEq  => FilterApi.ltEq(col, v)
       }
-    }
-
-    def unscaled(d: DecimalType, v: Any): Option[Long] = {
-      val bd: Option[java.math.BigDecimal] = v match {
-        case b: java.math.BigDecimal  => Some(b)
-        case b: scala.math.BigDecimal => Some(b.bigDecimal)
-        case dec: org.apache.spark.sql.types.Decimal => Some(dec.toJavaBigDecimal)
-        case _ => None
-      }
-      bd.flatMap { b =>
-        try Some(b.setScale(d.scale).unscaledValue().longValueExact())
-        catch { case _: ArithmeticException => None }
-      }
-    }
-
-    def micros(v: Any): Option[Long] = v match {
-      case t: java.sql.Timestamp  => Some(DateTimeUtils.fromJavaTimestamp(t))
-      case i: java.time.Instant   => Some(DateTimeUtils.instantToMicros(i))
-      case l: java.time.LocalDateTime => Some(DateTimeUtils.localDateTimeToMicros(l))
-      case _ => None
-    }
-    def epochDay(v: Any): Option[Int] = v match {
-      case d: java.sql.Date      => Some(DateTimeUtils.fromJavaDate(d))
-      case d: java.time.LocalDate => Some(Math.toIntExact(d.toEpochDay))
-      case _ => None
     }
 
     def cmp(col: String, v: Any, op: Op): Option[FilterPredicate] =

@@ -74,14 +74,17 @@ object ParquetStats {
     * space (the DSv2 scan's type-aware [[GraftScanBuilder]] path) may
     * consume them — the typeless Column-tree path must keep treating
     * decimal stats as untrustworthy or it would compare value-domain
-    * literals against unscaled stats and prune files that match. */
+    * literals against unscaled stats and prune files that match.
+    * Columns without trustworthy stats are left out of the map. */
   def fileStats(path: String, cols: Seq[String],
       decimalAsUnscaled: Set[String] = Set.empty)
-      : (Long, Option[Map[String, (Long, Long)]]) = {
+      : (Long, Map[String, (Long, Long)]) = {
     val reader = ParquetFileReader.open(
       HadoopInputFile.fromPath(new Path(path), FileIO.hadoopConf))
-    try (reader.getRecordCount, minMaxOf(reader, cols, decimalAsUnscaled))
-    finally reader.close()
+    try {
+      val (mm, untrusted) = minMaxOf(reader, cols, decimalAsUnscaled)
+      (reader.getRecordCount, mm -- untrusted)
+    } finally reader.close()
   }
 
   /** One file's footer min/max for `cols`: None if a non-empty row group
@@ -90,7 +93,10 @@ object ParquetStats {
   private def fileMinMax(path: String, cols: Seq[String]): Option[Map[String, (Long, Long)]] = {
     val reader = ParquetFileReader.open(
       HadoopInputFile.fromPath(new Path(path), FileIO.hadoopConf))
-    try minMaxOf(reader, cols) finally reader.close()
+    try {
+      val (mm, untrusted) = minMaxOf(reader, cols)
+      if (untrusted.isEmpty) Some(mm) else None
+    } finally reader.close()
   }
 
   /** One file's stampable footer facts — see [[fileFacts]]. */
@@ -324,16 +330,19 @@ object ParquetStats {
   def unsignedLe(a: Array[Byte], b: Array[Byte]): Boolean =
     !unsignedLt(b, a)
 
+  /** Footer (min, max) per requested column, and the requested columns
+    * some non-empty row group lacks trustworthy integral stats for. */
   private def minMaxOf(reader: ParquetFileReader, cols: Seq[String],
       decimalAsUnscaled: Set[String] = Set.empty)
-      : Option[Map[String, (Long, Long)]] = {
+      : (Map[String, (Long, Long)], Set[String]) = {
     val acc = scala.collection.mutable.Map[String, (Long, Long)]()
+    val untrusted = scala.collection.mutable.Set[String]()
     val julian =
       FileCalendar.of(reader.getFooter.getFileMetaData.getKeyValueMetaData).legacyDatetime
     for (block <- reader.getFooter.getBlocks.asScala if block.getRowCount > 0;
          cc <- block.getColumns.asScala) {
       val name = cc.getPath.toDotString
-      if (cols.contains(name)) {
+      if (cols.contains(name) && !untrusted.contains(name)) {
         val pt = cc.getPrimitiveType
         // decimal stats are UNSCALED values — only trusted for columns
         // the caller explicitly opted in (its bounds must be unscaled
@@ -351,8 +360,9 @@ object ParquetStats {
             (!julian && pt.getLogicalTypeAnnotation.isInstanceOf[
               org.apache.parquet.schema.LogicalTypeAnnotation.DateLogicalTypeAnnotation]))
         val st = cc.getStatistics
-        if (!integral || st == null || st.isEmpty) return None
-        if (st.hasNonNullValue) {
+        if (!integral || st == null || st.isEmpty) {
+          untrusted += name; acc.remove(name)
+        } else if (st.hasNonNullValue) {
           val mn = st.genericGetMin.asInstanceOf[Number].longValue
           val mx = st.genericGetMax.asInstanceOf[Number].longValue
           acc(name) = acc.get(name) match {
@@ -362,6 +372,6 @@ object ParquetStats {
         }
       }
     }
-    Some(acc.toMap)
+    (acc.toMap, untrusted.toSet)
   }
 }

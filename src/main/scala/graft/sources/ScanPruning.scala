@@ -276,32 +276,20 @@ object ScanPruning {
     * comparisons, plus decimals of ≤18 digits compared in UNSCALED space
     * (order-preserving at the column's fixed scale; the footer stats of
     * INT32/INT64-backed decimal columns are unscaled values —
-    * [[ParquetStats]]) and dates as epoch days. A literal that doesn't
+    * [[ParquetStats]]), dates as epoch days and timestamps (with or
+    * without time zone) as epoch micros. A literal that doesn't
     * land exactly on the column's scale contributes nothing
     * (conservative: the file is kept). */
   def filterBounds(filters: Seq[org.apache.spark.sql.sources.Filter],
       colTypes: Map[String, DataType]): Bounds = {
     import org.apache.spark.sql.sources
     def lit(a: String, v: Any): Option[Long] = colTypes.get(a) match {
-      case Some(d: DecimalType) if d.precision <= 18 =>
-        val bd: Option[java.math.BigDecimal] = v match {
-          case b: java.math.BigDecimal => Some(b)
-          case b: scala.math.BigDecimal => Some(b.bigDecimal)
-          case dec: Decimal => Some(dec.toJavaBigDecimal)
-          case _ => None
-        }
-        bd.flatMap { b =>
-          try Some(b.setScale(d.scale).unscaledValue().longValueExact())
-          catch { case _: ArithmeticException => None }
-        }
+      case Some(d: DecimalType) if d.precision <= 18 => ParquetPredicate.unscaled(d, v)
       case Some(_: DecimalType) => None // FLBA-backed: stats untrusted
-      case Some(DateType) => v match {
-        // date stats are INT32 epoch days — compare in that domain
-        case d: java.sql.Date => Some(
-          org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaDate(d).toLong)
-        case d: java.time.LocalDate => Some(d.toEpochDay)
-        case _ => None
-      }
+      // date stats are INT32 epoch days; timestamp bounds are stamped
+      // from MICROS columns only (ParquetStats.fileFacts)
+      case Some(DateType) => ParquetPredicate.epochDay(v).map(_.toLong)
+      case Some(TimestampType | TimestampNTZType) => ParquetPredicate.micros(v)
       case _ => v match {
         case i: Int => Some(i.toLong); case l: Long => Some(l)
         case s: Short => Some(s.toLong); case _ => None
@@ -534,11 +522,9 @@ object ScanPruning {
         try {
           val futures = unstamped.map { f =>
             pool.submit(new java.util.concurrent.Callable[Boolean] {
+              // a column without trustworthy stats is absent -> kept on
               override def call(): Boolean =
-                ParquetStats.fileStats(f.path, cols, decimalAsUnscaled)._2 match {
-                  case None        => true // no trustworthy stats -> keep
-                  case Some(stats) => keep(stats)
-                }
+                keep(ParquetStats.fileStats(f.path, cols, decimalAsUnscaled)._2)
             })
           }
           unstamped.zip(futures).collect {

@@ -4,7 +4,7 @@ import graft.compaction.SparkCompactionExecutor
 import graft.core.CompactionError
 import graft.plans.SchemaReconcile
 import graft.streaming.{GraftTable, GraftTableSource}
-import graft.txn.{FileTableCatalog, TableCatalog, TableSnapshot}
+import graft.txn.{FileEntry, FileTableCatalog, TableCatalog, TableSnapshot}
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -105,12 +105,16 @@ object TableReader {
     * pushed LIMIT/TopN truncation — the evidence a pruning self-assert
     * compares against the unfiltered read. */
   def plannedDataFiles(df: DataFrame): Seq[String] =
+    plannedDataEntries(df).map(_.path).distinct
+
+  /** The snapshot entries behind [[plannedDataFiles]]. */
+  private[graft] def plannedDataEntries(df: DataFrame): Seq[FileEntry] =
     df.queryExecution.optimizedPlan.collect {
       case r: DataSourceV2ScanRelation => r.scan match {
         case g: GraftScan => g.plannedDataFiles
         case _ => Nil
       }
-    }.flatten.distinct
+    }.flatten
 
   /** Change set between two retained snapshots: rows present at
     * `toVersion` but not `fromVersion` (`+`) and vice versa (`-`) —

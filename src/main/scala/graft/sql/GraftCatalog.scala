@@ -43,9 +43,10 @@ import scala.jdk.CollectionConverters._
   * reconciliation the API path uses).
   *
   * DELETE FROM is merge-on-read: see [[GraftTable.deleteWhere]] — it
-  * commits position deletes for the matching live rows, cost
-  * proportional to the matching scan, no data-file rewrite; the next
-  * compaction folds them in.
+  * reads the matching live rows' `_file`/`_pos` from a pinned scan of
+  * the predicate and commits them as position deletes, cost
+  * proportional to the pruned scan, no data-file rewrite and no
+  * shuffle, evolved tables included; the next compaction folds them in.
   */
 object GraftCatalog {
   /** Spark-managed bookkeeping keys that must not leak into snapshot

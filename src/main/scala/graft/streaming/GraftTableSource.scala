@@ -269,33 +269,25 @@ final class GraftTable(tableDir: String, tblSchema: StructType,
     }
   }
 
-  /** `DELETE FROM` as a merge-on-read commit: run the filter over the
-    * current LIVE rows with their physical lineage
-    * (sys_hidden_file_path / sys_hidden_pos) retained, and append the
-    * matching positions as a position-delete file — cost proportional
-    * to the matching scan, no data-file rewrite; already-dead rows are
-    * filtered out by the read so re-deletes never accumulate. The next
-    * compaction (full or delete-conversion) folds the backlog. */
+  /** `DELETE FROM` as a merge-on-read commit: read the predicate through
+    * a DSv2 scan pinned to the current snapshot, take the matching rows'
+    * `_file`/`_pos`, and append them as a position-delete file — cost
+    * proportional to the matching scan, no data-file rewrite, no join
+    * and no shuffle. Spark pushes the predicate into the scan, so
+    * partition, bound and row-group pruning apply; the scan applies every
+    * delete file, so already-dead rows are never re-deleted; and it reads
+    * older file layouts by field id, so evolved tables take this path
+    * too. The next compaction (full or delete-conversion) folds the
+    * backlog. */
   override def canDeleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
-    pinnedVersion.isEmpty && filters.forall(graft.sql.Filters.toColumn(_).isDefined) && {
-      val snap = catalog.load(tableDir)
-      // evolved tables need per-file column maps, which only the
-      // row-level copy-on-write path carries — answer false so Spark
-      // falls back to newRowLevelOperationBuilder instead of the
-      // metadata path failing outright
-      !snap.exists { s =>
-        val tasks = graft.sources.ScanPlanner.toInputTasks(s.files.map(_.toTask))
-        graft.plans.SchemaReconcile.needed(s.schemas, s.schemaId, tasks)
-      } &&
+    pinnedVersion.isEmpty && filters.forall(graft.sql.Filters.toColumn(_).isDefined) &&
       // deletion-vector tables route through the delta row-level path
       // (same scan cost) — this direct path only emits parquet deletes
-      !snap.exists(
+      !catalog.load(tableDir).exists(
         _.properties.get(graft.sinks.GraftDeltaBatchWrite.DeletesFormatProp)
           .contains("dv"))
-    }
 
   override def deleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
-    import graft.plans.MergeOnRead
     // same refusal as the row-level path: deletes are relative to the
     // current snapshot, not a cherry-pickable append
     graft.sinks.GraftBatchWrite.activeWapId().foreach { id =>
@@ -308,45 +300,34 @@ final class GraftTable(tableDir: String, tblSchema: StructType,
         s"session ${graft.txn.Branch.SessionConf}='$b' is set: DELETE FROM " +
           "cannot target a branch; unset the branch to delete from the live table")
     }
-    val spark = org.apache.spark.sql.SparkSession.active
-    val cond = filters.flatMap(graft.sql.Filters.toColumn(_))
-      .reduceOption(_ && _)
-      .getOrElse(org.apache.spark.sql.functions.lit(true))
-    val snap = catalog.loadOrThrow(tableDir)
-    val tasks = graft.sources.ScanPlanner.toInputTasks(snap.files.map(_.toTask))
-    if (tasks.dataFiles.isEmpty) return
-    if (graft.plans.SchemaReconcile.needed(snap.schemas, snap.schemaId, tasks))
-      throw CompactionError.Config(
-        "DELETE FROM on a table needing schema reconciliation is not " +
-          "supported; compact the table first")
+    import graft.sources.GraftBatchScan.{DefaultSplitTargetBytes, FileColumn, PosColumn}
     import org.apache.spark.sql.functions.col
-    val positions = graft.compaction.SparkCompactionExecutor
-      .liveRows(spark, tasks, keepLineage = true)
-      .filter(cond)
-      .select(
-        col(MergeOnRead.SysHiddenFilePath).as("file_path"),
-        col(MergeOnRead.SysHiddenPos).as("pos"))
-      // scan partitions are file-aligned, so a within-partition sort is
-      // shuffle-free and lands SORTED delete files (row-group stats then
-      // let readers skip other files' positions)
-      .sortWithinPartitions(col("file_path"), col("pos"))
-    // ONE evaluation of the matching scan: appendPositionDeletes skips
-    // the commit itself when the written positions turn out empty, and
-    // pinning the data files the positions can REFERENCE aborts the
-    // delete if a concurrent compaction rewrote them (committing would
-    // orphan the references and silently resurrect the rows). The pin
-    // set is the predicate's footer-stats candidate files — files the
-    // stats prove matchless hold no referenced positions, so leaving
-    // them unpinned avoids false aborts under unrelated concurrent
-    // rewrites.
-    val types = tblSchema.fields.map(f => f.name -> f.dataType).toMap
-    val candidatePaths = graft.sources.ScanPruning.pruneDataFilesWithBounds(
-        snap.files.filter(_.content == "data"),
-        graft.sources.ScanPruning.filterBounds(filters.toSeq, types),
-        decimalAsUnscaled = types.collect { case (c, _: DecimalType) => c }.toSet)
-      .map(_.path).toSet
-    graft.txn.TableWrites.appendPositionDeletes(tableDir, positions,
-      catalog = catalog, requiredDataPaths = candidatePaths)
+    val cond = filters.flatMap(graft.sql.Filters.toColumn(_)).reduceOption(_ && _)
+    graft.sources.TableReader.readOption(org.apache.spark.sql.SparkSession.active,
+        tableDir, catalog = catalog, filter = cond).foreach { df =>
+      // ONE pruning decision serves the read and the pin set: the files
+      // the scan planned are the only ones the positions can reference,
+      // and pinning them aborts the delete if a concurrent compaction
+      // rewrote one (committing would orphan the references and silently
+      // resurrect the rows); files it pruned stay unpinned, so unrelated
+      // concurrent rewrites cause no false aborts
+      val planned = graft.sources.TableReader.plannedDataEntries(df)
+      // every task with a match writes one delete file, and a scan task
+      // reads one file or one row-group split: pack a small-file backlog
+      // into split-target-sized tasks (a narrow coalesce, no shuffle)
+      val tasks = (planned.map(_.sizeBytes).sum + DefaultSplitTargetBytes - 1) /
+        DefaultSplitTargetBytes
+      val positions = df
+        .select(col(FileColumn).as("file_path"), col(PosColumn).as("pos"))
+        .coalesce(math.max(1L, tasks).toInt)
+        // the sort stays within a task (no shuffle) and lands SORTED
+        // delete files: row-group stats then let readers skip other
+        // files' positions
+        .sortWithinPartitions(col("file_path"), col("pos"))
+      // commits nothing when no position matched
+      graft.txn.TableWrites.appendPositionDeletes(tableDir, positions,
+        catalog = catalog, requiredDataPaths = planned.map(_.path).toSet)
+    }
   }
 }
 

@@ -471,7 +471,7 @@ object IcebergTableCatalog extends TableCatalog {
       else {
         val (rows, mm) = graft.sources.ParquetStats.fileStats(
           f.path, if (wantBounds) boundCols else Nil)
-        mm.filter(_.nonEmpty).foreach(m => boundsByPath(f.path) = m)
+        if (mm.nonEmpty) boundsByPath(f.path) = mm
         if (f.recordCount >= 0) f else f.copy(recordCount = rows)
       }
     }

@@ -5,7 +5,7 @@ import graft.txn.{CommitManager, TableMetadata, TableSnapshot}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, Phaser, TimeUnit, TimeoutException}
 import java.util.concurrent.atomic.AtomicInteger
 
 /** The store-native conditional-put seam, end-to-end: an in-memory
@@ -27,28 +27,38 @@ class ConditionalPutSpec extends AnyFunSuite {
     val puts = new AtomicInteger(0)
     val conflicts = new AtomicInteger(0)
     private val reserved = new ConcurrentHashMap[String, java.lang.Boolean]()
-    // rendezvous: when armed, the next TWO putIfAbsent calls wait for
-    // each other before reserving. At race start every committer
-    // attempts the same next-version key, so the pair is guaranteed to
-    // contend — one organic AlreadyExists per run, no scheduler luck
-    // (an unforced 8-way race CAN legally serialize with zero
-    // conflicts, which made the organic-conflict assert flaky before).
-    private val gatePasses = new AtomicInteger(0)
-    private val gate = new java.util.concurrent.CyclicBarrier(2)
-    def armGate(): Unit = gatePasses.set(2)
+    // lock-step rounds: when armed, every live committer's put waits for
+    // the others', so a round's puts all target the same next-version
+    // key — one wins, writes, and deregisters; the rest throw only once
+    // that write is visible, so each retry reloads the new version and
+    // the next round again has exactly one winner. Of n committers, the
+    // last one loses n - 1 times: no scheduler luck decides whether a
+    // conflict happens or whether the retry budget suffices. The waits
+    // are timed, and a timeout drops the gate rather than hang the run.
+    @volatile private var gate: Phaser = null
+    def armGate(committers: Int): Unit = gate = new Phaser(committers)
+    private def awaitRound(g: Phaser, phase: Int): Unit =
+      try g.awaitAdvanceInterruptibly(phase, 30, TimeUnit.SECONDS)
+      catch { case _: TimeoutException => g.forceTermination() }
     override def putIfAbsent(path: String, content: Array[Byte]): Unit = {
-      if (gatePasses.getAndDecrement() > 0) {
-        try gate.await(30, java.util.concurrent.TimeUnit.SECONDS)
-        catch { case _: Exception => () } // never deadlock the test
+      val g = gate
+      val gated = g != null && !g.isTerminated
+      if (gated) awaitRound(g, g.arrive()) // round start: every live put
+      val won = reserved.putIfAbsent(path, java.lang.Boolean.TRUE) == null
+      if (won) {
+        val p = Paths.get(path)
+        Files.createDirectories(p.getParent)
+        Files.write(p, content) // plain PUT: no rename, no link, no fsync
+        puts.incrementAndGet()
       }
-      if (reserved.putIfAbsent(path, java.lang.Boolean.TRUE) != null) {
+      if (gated) {
+        // round end: the winner leaves, the losers wait for its write
+        if (won) g.arriveAndDeregister() else awaitRound(g, g.arrive())
+      }
+      if (!won) {
         conflicts.incrementAndGet()
         throw new FileIO.AlreadyExists(path)
       }
-      val p = Paths.get(path)
-      Files.createDirectories(p.getParent)
-      Files.write(p, content) // plain PUT: no rename, no link, no fsync
-      puts.incrementAndGet()
     }
   }
 
@@ -61,8 +71,8 @@ class ConditionalPutSpec extends AnyFunSuite {
     try {
       TableMetadata.commit(dir, TableSnapshot(1, 1, 0, Nil))
       assert(fake.puts.get() == 1, "bootstrap commit must route through the seam")
-      fake.armGate() // next two puts rendezvous -> guaranteed contention
       val threads = 8
+      fake.armGate(threads) // lock-step rounds -> guaranteed contention
       val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
       val results = (0 until threads).map { i =>
         pool.submit(new java.util.concurrent.Callable[Boolean] {
@@ -85,13 +95,13 @@ class ConditionalPutSpec extends AnyFunSuite {
       (0 until threads).foreach(i => assert(paths.contains(s"/t/c$i.parquet"),
         s"committer $i's file must survive the race"))
       // the seam did the arbitration: 9 winning puts (bootstrap + 8
-      // versions), and the armed rendezvous guarantees the conflict
-      // path ran ORGANICALLY (two live committers, same version key,
-      // one 412) — not just via the duplicate-reservation probe below
+      // versions), and the lock-step rounds guarantee the conflict
+      // path ran ORGANICALLY (live committers, same version key, 412s)
+      // — not just via the duplicate-reservation probe below
       assert(fake.puts.get() == 9,
         s"expected 9 winning puts, got ${fake.puts.get()}")
       assert(fake.conflicts.get() >= 1,
-        "the rendezvoused pair must produce at least one organic " +
+        "the lock-step rounds must produce at least one organic " +
           s"AlreadyExists (got ${fake.conflicts.get()})")
       info(s"organic put conflicts observed during the race: " +
         s"${fake.conflicts.get()}")

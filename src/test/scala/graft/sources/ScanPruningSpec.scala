@@ -92,6 +92,11 @@ class ScanPruningSpec extends AnyFunSuite {
     assert(prune("id >= 11").count(_.content == "data") == 1)
     // spanning range keeps both
     assert(prune("id >= 5 AND id <= 15").count(_.content == "data") == 2)
+    // a bounded column without trustworthy integral stats (string `v`)
+    // keeps files on that column only: `id` still prunes f2
+    assert(ScanPruning.pruneDataFilesWithBounds(files,
+      Map("id" -> (Long.MinValue, 7L), "v" -> (0L, 0L)))
+      .filter(_.content == "data").map(_.path) == Seq(f1.path))
   }
 
   test("all-pruned reads NO data files; schema resolves from the snapshot") {

@@ -205,6 +205,36 @@ class TableReaderSpec extends AnyFunSuite {
     }
   }
 
+  test("a timestamp range filter prunes files by their stamped MICROS bounds") {
+    val dir = Files.createTempDirectory("reader-ts-range").toString
+    FileTableCatalog.commitCas(dir, TableSnapshot(1, 1, 0, Nil))
+    // two DSv2 appends (MICROS-encoded, bounds stamped): disjoint years
+    for (year <- Seq(2020, 2021))
+      spark.sql(s"""SELECT * FROM VALUES
+        (${year}1L, TIMESTAMP'$year-01-01 00:00:00',
+            TIMESTAMP_NTZ'$year-01-01 00:00:00'),
+        (${year}2L, TIMESTAMP'$year-12-31 23:59:59.999999',
+            TIMESTAMP_NTZ'$year-12-31 23:59:59.999999')
+        AS t(id, ts, ntz)""").coalesce(1)
+        .write.format("graft").mode("append").save(dir)
+    val files = dataFiles(dir)
+    assert(files.size == 2)
+    val expected = spark.read.parquet(files: _*)
+    def ids(df: DataFrame): Seq[Long] = df.select("id").as[Long].collect().toSeq.sorted
+    val cut = "2021-01-01 00:00:00"
+    val filters = Seq(
+      col("ts") >= lit(java.sql.Timestamp.valueOf(cut)),
+      col("ts") < lit(java.sql.Timestamp.valueOf(cut)),
+      col("ntz") >= lit(java.time.LocalDateTime.parse(cut.replace(' ', 'T'))))
+    // java8API turns the pushed TimestampType literal into an Instant
+    for (java8 <- Seq("false", "true"); f <- filters) withConf(
+        "spark.sql.datetime.java8API.enabled" -> java8) {
+      val df = TableReader.read(spark, dir, filter = Some(f))
+      assert(TableReader.plannedDataFiles(df).size == 1, s"$f (java8API=$java8)")
+      assert(ids(df) == ids(expected.filter(f)) && ids(df).size == 2, f)
+    }
+  }
+
   test("a history-less table's schema does not follow the session's " +
     "parquet read settings") {
     val dir = Files.createTempDirectory("reader-schema").toString

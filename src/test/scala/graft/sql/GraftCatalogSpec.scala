@@ -475,9 +475,10 @@ class GraftCatalogSpec extends AnyFunSuite {
     sql("CREATE NAMESPACE IF NOT EXISTS gsql.db9")
     sql("CREATE TABLE gsql.db9.e (id BIGINT, name STRING)")
     sql("INSERT INTO gsql.db9.e VALUES (1, 'a'), (2, 'b'), (3, 'c')")
-    // evolve: existing files now need per-file column maps, which the
-    // metadata-delete path cannot carry — canDeleteWhere must answer
-    // false so Spark routes this through the row-level operation
+    // evolve: existing files now need per-file column maps. The name
+    // describes the old routing: the metadata-delete path reads through
+    // the DSv2 scan, which maps old layouts by field id, so this now
+    // commits position deletes (DeleteFromSpec checks that routing)
     sql("ALTER TABLE gsql.db9.e RENAME COLUMN name TO label")
     sql("DELETE FROM gsql.db9.e WHERE id IN (2)")
     assert(sql("SELECT id, label FROM gsql.db9.e ORDER BY id")
