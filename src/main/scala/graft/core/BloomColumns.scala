@@ -19,9 +19,9 @@ package graft.core
   * distincts). Top-level columns only.
   *
   * The READ side needs no table configuration: parquet-mr's row-group
-  * filter consults bloom filters by default whenever the vectorized
+  * filter consults bloom filters by default whenever Spark's parquet
   * reader pushes an equality predicate ([[graft.sources
-  * .ParquetPredicate]]).
+  * .SparkFileReader]]).
   */
 object BloomColumns {
 

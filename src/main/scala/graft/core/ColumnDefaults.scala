@@ -13,8 +13,9 @@ import org.apache.spark.sql.types._
   * cast losslessly to the column type; what is stored is
   * `Literal(value, type).sql`, which round-trips through the parser on
   * any executor with no session state. Readers then evaluate the stored
-  * text ONCE per task ([[catalystValue]] / [[jvmValue]]) — never per
-  * row.
+  * text ONCE per task ([[catalystValue]]) — never per row — and emit it
+  * as a constant column, which equality-delete keys compare like a
+  * stored value.
   *
   * Supported types are the flat primitives the engine's write path
   * carries (int, bigint, float, double, boolean, string, date,
@@ -78,18 +79,4 @@ object ColumnDefaults {
       s"stored default '$text' is not a literal — metadata corruption?")
     Cast(parsed, dt, Some("UTC"), EvalMode.ANSI).eval(null)
   }
-
-  /** The stored canonical text in the ROW reader's boxed-JVM
-    * representation ([[graft.sources.GraftBatchScan.groupValue]] rules:
-    * plain String for strings; Int/Long/Float/Double/Boolean boxed;
-    * Int days / Long micros for date/timestamp; Spark `Decimal` for
-    * decimals — exactly what a read value of the same column yields, so
-    * equality-delete key comparison treats default-filled rows like
-    * physically-stored ones). */
-  def jvmValue(text: String, dt: DataType): Any =
-    catalystValue(text, dt) match {
-      case null => null
-      case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-      case other => other // Int/Long/Float/Double/Boolean/Decimal as-is
-    }
 }

@@ -51,9 +51,9 @@ object GraftBatchWrite {
   /** Type support of the engine's table model, checked up front by the
     * DSv2 write ([[validateSchema]]) and the catalog's CREATE/CTAS
     * ([[graft.sql.GraftCatalog]]): the primitive lattice plus
-    * ARRAY/STRUCT/MAP compositions of it. Nested columns ride the row
-    * read path — [[graft.sources.GraftMorColumnarReader.supportedSchema]]
-    * gates them off the vectorized fill. */
+    * ARRAY/STRUCT/MAP compositions of it. Reads decode every one of
+    * these through Spark's parquet reader ([[graft.sources
+    * .SparkFileReader]]), columnar wherever Spark's batch gate allows. */
   private[graft] def supportedType(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | DoubleType | FloatType | StringType |
          BooleanType | TimestampType | TimestampNTZType | DateType |

@@ -2,23 +2,13 @@ package graft.sources
 
 import graft.core.CompactionError
 import graft.txn.{FileEntry, TableCatalog, TableSnapshot}
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.execution.datasources.parquet.graftbridge.Int96Bridge
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import java.util.OptionalLong
-import scala.jdk.CollectionConverters._
 
 /** DSv2 BATCH read of a graft table — `spark.read.format("graft")
   * .load(tableDir)`, SQL and [[TableReader.read]] return the table's
@@ -41,8 +31,8 @@ import scala.jdk.CollectionConverters._
   *  - *Filters* ([[SupportsPushDownFilters]]) are used for FILE-level
   *    min/max pruning (write-time stamped bounds, footer stats as the
   *    fallback — [[ScanPruning]]) and for ROW-GROUP statistics skipping
-  *    inside the vectorized reader ([[ParquetPredicate]], ordinals kept
-  *    file-absolute via the page store's row index offset); everything
+  *    inside Spark's parquet reader (under each file's physical names;
+  *    `_pos` is Spark's file-absolute row index either way); everything
   *    is returned to Spark as residuals — `Inexact` pushdown, the same
   *    contract as the reference's provider (SURVEY §2.2 P2).
   *  - Per-task delete load is bounded by the live delete backlog, which
@@ -84,333 +74,48 @@ object GraftBatchScan {
       case f if f.dataType == StringType => f.name
     }.toSet
 
-  /** Spark-type-driven extraction of one field from a parquet example
-    * [[Group]], tolerant of INT32-backed long columns and of INT96
-    * timestamps (what Spark's own writer emits under a default session,
-    * and what imported Hive tables hold); dates and timestamps go
-    * through the file's `cal`. Shared by the batch reader and the
-    * streaming tail reader. */
-  private[graft] def groupValue(g: Group, gi: Int, dt: DataType, name: String,
-      cal: FileCalendar): Any =
-    if (g.getFieldRepetitionCount(gi) == 0) null
-    else dt match {
-      case LongType | TimestampType | TimestampNTZType =>
-        val pt = g.getType.getType(gi).asPrimitiveType()
-        val v = storedLong(g, gi, pt.getPrimitiveTypeName)
-        val fix = cal.longFix(pt, dt, name)
-        if (fix == null) v else fix(v)
-      case DateType =>
-        val fix = cal.dateFix(dt)
-        if (fix == null) g.getInteger(gi, 0) else fix(g.getInteger(gi, 0))
-      case IntegerType => g.getInteger(gi, 0)
-      case ShortType   => g.getInteger(gi, 0).toShort
-      case ByteType    => g.getInteger(gi, 0).toByte
-      case StringType  => g.getString(gi, 0)
-      case DoubleType  => // FLOAT physical = a file predating a widen
-        g.getType.getType(gi).asPrimitiveType().getPrimitiveTypeName match {
-          case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.FLOAT =>
-            g.getFloat(gi, 0).toDouble
-          case _ => g.getDouble(gi, 0)
-        }
-      case FloatType   => g.getFloat(gi, 0)
-      case BooleanType => g.getBoolean(gi, 0)
-      case BinaryType  => g.getBinary(gi, 0).getBytes
-      case d: DecimalType =>
-        // parquet's decimal physical ladder, as graft's writers emit
-        // it: INT32/INT64 carry the unscaled value,
-        // FLBA/BINARY a two's-complement big-endian encoding
-        g.getType.getType(gi).asPrimitiveType().getPrimitiveTypeName match {
-          case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32 =>
-            Decimal(g.getInteger(gi, 0).toLong, d.precision, d.scale)
-          case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64 =>
-            Decimal(g.getLong(gi, 0), d.precision, d.scale)
-          case _ =>
-            val bytes = g.getBinary(gi, 0).getBytes
-            Decimal(new java.math.BigDecimal(
-              new java.math.BigInteger(bytes), d.scale), d.precision, d.scale)
-        }
-      // nested compositions (the standard 3-level LIST / MAP / struct
-      // group shapes graft's writers emit) build CATALYST values directly
-      // — unlike the primitive cases there is no later [[toCatalyst]]
-      // boxing pass inside an array
-      case ArrayType(et, _) =>
-        val lg = g.getGroup(gi, 0)
-        requireChild(lg, "list", name)
-        val n = lg.getFieldRepetitionCount(0)
-        val out = new Array[Any](n)
-        var i = 0
-        while (i < n) {
-          val entry = lg.getGroup(0, i)
-          out(i) =
-            if (entry.getFieldRepetitionCount(0) == 0) null
-            else toCatalyst(groupValue(entry, 0, et, s"$name.element", cal))
-          i += 1
-        }
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-      case MapType(kt, vt, _) =>
-        val mg = g.getGroup(gi, 0)
-        requireChild(mg, "key_value", name)
-        val n = mg.getFieldRepetitionCount(0)
-        val keys = new Array[Any](n); val vals = new Array[Any](n)
-        var i = 0
-        while (i < n) {
-          val kv = mg.getGroup(0, i)
-          keys(i) = toCatalyst(groupValue(kv, 0, kt, s"$name.key", cal))
-          vals(i) =
-            if (kv.getFieldRepetitionCount(1) == 0) null
-            else toCatalyst(groupValue(kv, 1, vt, s"$name.value", cal))
-          i += 1
-        }
-        new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(keys),
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(vals))
-      case st: StructType =>
-        val sg = g.getGroup(gi, 0)
-        val vals = new Array[Any](st.length)
-        var i = 0
-        while (i < st.length) {
-          // resolve struct members by NAME against the file's group —
-          // robust to member reordering by other writers; a missing
-          // member is a loud schema error, not a silent null (nested
-          // evolution is out of scope — columns evolve as a whole)
-          val idx =
-            try sg.getType.getFieldIndex(st(i).name)
-            catch { case _: org.apache.parquet.io.InvalidRecordException =>
-              throw CompactionError.Config(
-                s"struct member ${st(i).name} absent from column $name in the file")
-            }
-          vals(i) = toCatalyst(groupValue(sg, idx, st(i).dataType, s"$name.${st(i).name}", cal))
-          i += 1
-        }
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-      case other => throw CompactionError.Config(
-        s"graft source supports primitive and array/struct/map columns; " +
-          s"column $name has unsupported type $other")
-    }
-
-  /** A long or timestamp leaf's value as stored: INT32-backed longs
-    * widen, INT96 timestamps decode to epoch micros. */
-  private def storedLong(g: Group, gi: Int,
-      prim: org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName): Long =
-    prim match {
-      case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32 =>
-        g.getInteger(gi, 0).toLong
-      case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96 =>
-        Int96Bridge.micros(g.getInt96(gi, 0))
-      case _ => g.getLong(gi, 0)
-    }
-
-  /** The nested group shapes this reader resolves are positional under
-    * a NAMED wrapper (list / key_value); a different wrapper name means
-    * a legacy 2-level or nonstandard encoding — refuse loudly rather
-    * than misread. */
-  private def requireChild(g: Group, expect: String, col: String): Unit = {
-    val t = g.getType
-    if (t.getFieldCount != 1 || t.getType(0).getName != expect)
-      throw CompactionError.Config(
-        s"column $col uses a nonstandard parquet nested encoding " +
-          s"(expected a single repeated '$expect' group in ${t.getName})")
-  }
-
-  /** One equality-delete file's per-row probe, specialized once against
-    * the file's group type: key components extract (pre-normalized via
-    * [[eqKeyExtractor]]) into a REUSED buffer wrapped by a REUSED Seq
-    * view — zero per-row key-tuple allocation (the old path built two
-    * Seqs and re-ran name→index + type dispatch per row per delete
-    * file). The view's structural Seq equality/hash matches the List
-    * keys [[loadEqKeySets]] builds (`EqProbeSpec` pins this). */
-  private[graft] final class EqProbe(extract: Array[Group => Any],
-      set: java.util.HashSet[Seq[Any]]) {
-    private val buf = new Array[Any](extract.length)
-    private val view: scala.collection.Seq[Any] =
-      scala.collection.mutable.ArraySeq.make(buf)
-    /** true = the row SURVIVES this delete file. */
-    def live(g: Group): Boolean = {
-      var i = 0
-      while (i < extract.length) {
-        val v = extract(i)(g)
-        if (v == null) return true // a null key component never matches
-        buf(i) = v
-        i += 1
-      }
-      !set.contains(view)
-    }
-  }
-
-  /** Catalyst boxing for [[groupValue]] output (strings → UTF8String). */
-  private[graft] def toCatalyst(v: Any): Any = v match {
-    case s: String => UTF8String.fromString(s)
-    case other     => other
-  }
-
-  /** [[groupValue]]+[[toCatalyst]] SPECIALIZED for one field of a known
-    * file group type: the per-row Spark-type dispatch, physical-type
-    * probes, and name→index lookups all hoist out of the row loop into
-    * closure construction (once per reader, not once per value). Strings
-    * build the UTF8String straight from the stored UTF-8 bytes — no
-    * String decode/encode round-trip; byte-identical output (the engine
-    * writes well-formed UTF-8, under which fromBytes ∘ encode =
-    * fromString ∘ decode). Decimal/nested shapes delegate to
-    * [[groupValue]] per row — cold next to the primitive columns.
-    * Extractors return CATALYST values (no [[toCatalyst]] needed). */
-  private[graft] def fieldExtractor(
-      fileType: org.apache.parquet.schema.GroupType,
-      gi: Int, dt: DataType, name: String, cal: FileCalendar): Group => Any = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    def prim = fileType.getType(gi).asPrimitiveType().getPrimitiveTypeName
-    dt match {
-      case LongType | TimestampType | TimestampNTZType =>
-        val (p, fix) = (prim, cal.longFix(fileType.getType(gi).asPrimitiveType(), dt, name))
-        if (fix == null && p == PrimitiveTypeName.INT64)
-          g => if (g.getFieldRepetitionCount(gi) == 0) null
-               else g.getLong(gi, 0)
-        else if (fix == null)
-          g => if (g.getFieldRepetitionCount(gi) == 0) null
-               else storedLong(g, gi, p)
-        else
-          g => if (g.getFieldRepetitionCount(gi) == 0) null
-               else fix(storedLong(g, gi, p))
-      case IntegerType | DateType =>
-        val fix = cal.dateFix(dt)
-        if (fix == null)
-          g => if (g.getFieldRepetitionCount(gi) == 0) null
-               else g.getInteger(gi, 0)
-        else
-          g => if (g.getFieldRepetitionCount(gi) == 0) null
-               else fix(g.getInteger(gi, 0))
-      case StringType =>
-        g => if (g.getFieldRepetitionCount(gi) == 0) null
-             else UTF8String.fromBytes(g.getBinary(gi, 0).getBytes)
-      case DoubleType =>
-        if (prim == PrimitiveTypeName.FLOAT)
-          g => if (g.getFieldRepetitionCount(gi) == 0) null
-               else g.getFloat(gi, 0).toDouble
-        else
-          g => if (g.getFieldRepetitionCount(gi) == 0) null
-               else g.getDouble(gi, 0)
-      case FloatType =>
-        g => if (g.getFieldRepetitionCount(gi) == 0) null
-             else g.getFloat(gi, 0)
-      case BooleanType =>
-        g => if (g.getFieldRepetitionCount(gi) == 0) null
-             else g.getBoolean(gi, 0)
-      case BinaryType =>
-        g => if (g.getFieldRepetitionCount(gi) == 0) null
-             else g.getBinary(gi, 0).getBytes
-      case _ =>
-        g => toCatalyst(groupValue(g, gi, dt, name, cal))
-    }
-  }
-
-  /** [[fieldExtractor]]'s twin for EQUALITY-DELETE KEY probes: returns
-    * the [[groupValue]] JVM representation (strings as String, not
-    * UTF8String — the loaded key sets are built through groupValue)
-    * already normalized through [[eqKeyComponent]] (NaN → [[NaNKey]],
-    * byte arrays → content-equality Binary), so the per-row probe is
-    * extractor calls into a reused buffer — no name→index lookup, no
-    * type dispatch, no normalization pass per row. */
-  private[graft] def eqKeyExtractor(
-      fileType: org.apache.parquet.schema.GroupType,
-      gi: Int, dt: DataType, name: String, cal: FileCalendar): Group => Any = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    def prim = fileType.getType(gi).asPrimitiveType().getPrimitiveTypeName
-    dt match {
-      // boxed longs, ints and booleans are already the key representation
-      case LongType | TimestampType | TimestampNTZType | IntegerType |
-           DateType | BooleanType =>
-        fieldExtractor(fileType, gi, dt, name, cal)
-      case StringType =>
-        g => if (g.getFieldRepetitionCount(gi) == 0) null
-             else g.getString(gi, 0)
-      case DoubleType =>
-        if (prim == PrimitiveTypeName.FLOAT)
-          g => if (g.getFieldRepetitionCount(gi) == 0) null
-               else {
-                 val d = g.getFloat(gi, 0).toDouble
-                 if (d.isNaN) NaNKey else java.lang.Double.valueOf(d)
-               }
-        else
-          g => if (g.getFieldRepetitionCount(gi) == 0) null
-               else {
-                 val d = g.getDouble(gi, 0)
-                 if (d.isNaN) NaNKey else java.lang.Double.valueOf(d)
-               }
-      case FloatType =>
-        g => if (g.getFieldRepetitionCount(gi) == 0) null
-             else {
-               val f = g.getFloat(gi, 0)
-               if (f.isNaN) NaNKey else java.lang.Float.valueOf(f)
-             }
-      case _ =>
-        g => if (g.getFieldRepetitionCount(gi) == 0) null
-             else eqKeyComponent(groupValue(g, gi, dt, name, cal))
-    }
-  }
-
-  /** Dead-ordinal membership for one task: a window-filtered hash set
-    * from parquet position-delete files, plus (when the file carries a
-    * deletion vector) a roaring bitmap probed directly — the bitmap IS
-    * the compact representation, so it needs no window filter. Both can
-    * be present on one file (parquet deletes from before a format
-    * switch). Instances are task-local; probes are single-threaded. */
+  /** Dead-position membership for one task: the task window's ordinals
+    * from parquet position-delete files (sorted, binary-searched), plus
+    * (when the file carries a deletion vector) a roaring bitmap probed
+    * directly — the bitmap IS the compact representation, so it needs no
+    * window. Both can be present on one file (parquet deletes from
+    * before a format switch). Probed with each row's row index.
+    * Instances are task-local; probes are single-threaded. */
   private[graft] final class DeadPositions(
-      set: java.util.HashSet[Long],
+      sorted: Array[Long],
       bitmap: org.roaringbitmap.longlong.Roaring64Bitmap) {
-    def isEmpty: Boolean = set.isEmpty && (bitmap == null || bitmap.isEmpty)
+    def isEmpty: Boolean = sorted.isEmpty && (bitmap == null || bitmap.isEmpty)
     def contains(pos: Long): Boolean =
-      set.contains(pos) || (bitmap != null && bitmap.contains(pos))
-
-    /** Batch form for the columnar reader: `keep(i) = !dead(base+i)`
-      * for the window `[base, base+n)`. The bitmap path walks the range
-      * ONCE — run-encoded stretches fill the mask in O(runs), not a
-      * tree probe per row; the hash-set path stays per-row. */
-    def fillAlive(base: Long, n: Int, keep: Array[Boolean]): Unit = {
-      if (isEmpty) { java.util.Arrays.fill(keep, 0, n, true); return }
-      if (bitmap == null) java.util.Arrays.fill(keep, 0, n, true)
-      else bitmap.forAllInRange(base, n, new org.roaringbitmap.RelativeRangeConsumer {
-        override def acceptPresent(rel: Int): Unit = keep(rel) = false
-        override def acceptAbsent(rel: Int): Unit = keep(rel) = true
-        override def acceptAllPresent(from: Int, to: Int): Unit =
-          java.util.Arrays.fill(keep, from, to, false)
-        override def acceptAllAbsent(from: Int, to: Int): Unit =
-          java.util.Arrays.fill(keep, from, to, true)
-      })
-      if (!set.isEmpty) {
-        var i = 0
-        while (i < n) {
-          if (keep(i) && set.contains(base + i)) keep(i) = false
-          i += 1
-        }
-      }
-    }
+      java.util.Arrays.binarySearch(sorted, pos) >= 0 ||
+        (bitmap != null && bitmap.contains(pos))
   }
 
-  /** Ordinals of this split's rows killed by its position-delete files
+  /** Positions of this split's rows killed by its position-delete files
     * (only the `[baseOrdinal, ordinalEnd)` window — bounds memory when
     * a large file fans out into many range tasks) and/or its deletion
-    * vector. Shared by the row and columnar readers. Parquet delete
-    * files parse once per JVM through [[DeleteFileCache]] with a
-    * per-task binary-search window; deletion-vector BLOB BYTES cache
-    * once per JVM (one ranged read of this file's own blob — O(own
-    * blob), never the table's whole delete corpus) and each task
-    * deserializes its own bitmap, because roaring bitmaps are not safe
-    * for concurrent probing. */
+    * vector. Parquet delete files parse once per JVM through
+    * [[DeleteFileCache]] with a per-task binary-search window;
+    * deletion-vector BLOB BYTES cache once per JVM (one ranged read of
+    * this file's own blob — O(own blob), never the table's whole delete
+    * corpus) and each task deserializes its own bitmap, because roaring
+    * bitmaps are not safe for concurrent probing. */
   private[graft] def loadDeadPositions(part: GraftMorPartition,
-      taskConf: Configuration): DeadPositions = {
+      files: SparkFileReader): DeadPositions = {
     val dataPathNorm = ScanPlanner.normalizePath(part.dataPath)
-    val set = new java.util.HashSet[Long]()
+    val window = new scala.collection.mutable.ArrayBuilder.ofLong
     part.posDeletes.foreach { pd =>
-      val byPath = DeleteFileCache.getOrLoad(pd.path, pd.sizeBytes, "pos") {
-        parsePosDeleteFile(pd.path, taskConf)
-      }
-      val arr = byPath.get(dataPathNorm)
+      val arr = DeleteFileCache.getOrLoad(pd.path, pd.sizeBytes, "pos") {
+        parsePosDeleteFile(pd.path, files)
+      }.get(dataPathNorm)
       if (arr != null) {
         var i = lowerBound(arr, part.baseOrdinal)
         while (i < arr.length && arr(i) < part.ordinalEnd) {
-          set.add(arr(i)); i += 1
+          window += arr(i); i += 1
         }
       }
     }
+    val sorted = window.result()
+    java.util.Arrays.sort(sorted)
     val bitmap = part.dv.map { d =>
       // same plausibility window readDvBlob enforces — an implausible
       // snapshot-recorded size must fail as a deliberate error, not a
@@ -421,12 +126,12 @@ object GraftBatchScan {
             s"for ${d.path}@${d.contentOffset}")
       val bytes = DeleteFileCache.getOrLoad(
         d.path, d.sizeStamp, s"dv:${d.contentOffset}") {
-        graft.io.FileIO.readBytesRange(
-          d.path, d.contentOffset, d.contentSizeBytes.toInt, taskConf)
+        graft.io.FileIO.readBytesRange(d.path, d.contentOffset,
+          d.contentSizeBytes.toInt, files.hadoopConf)
       }
       graft.io.Puffin.decodeDvBlob(bytes, s"${d.path}@${d.contentOffset}")
     }.orNull
-    new DeadPositions(set, bitmap)
+    new DeadPositions(sorted, bitmap)
   }
 
   /** NORMALIZED data-file paths a position-delete file references —
@@ -435,35 +140,32 @@ object GraftBatchScan {
     * (same "pos" cache slot the task readers use, so one parse per JVM
     * serves both) scopes a pos-delete commit to exactly the files it
     * touches instead of every older-or-equal common file. */
-  private[graft] def posDeleteReferencedPaths(path: String, sizeBytes: Long,
-      conf: Configuration): Set[String] = {
+  private[graft] def posDeleteReferencedPaths(path: String,
+      sizeBytes: Long): Set[String] = {
     import scala.jdk.CollectionConverters._
     DeleteFileCache.getOrLoad(path, sizeBytes, "pos") {
-      parsePosDeleteFile(path, conf)
+      parsePosDeleteFile(path, SparkFileReader())
     }.keySet.asScala.toSet
   }
+
+  /** The columns of a position-delete file. */
+  private[graft] val PosDeleteSchema = StructType(Seq(
+    StructField("file_path", StringType), StructField("pos", LongType)))
 
   /** Parse one position-delete file completely: normalized data-file
     * path → its deleted ordinals, sorted ascending (enables the window
     * binary search above). Built once per file per JVM and shared
     * read-only across tasks. */
-  private def parsePosDeleteFile(path: String, taskConf: Configuration)
+  private def parsePosDeleteFile(path: String, files: SparkFileReader)
       : java.util.HashMap[String, Array[Long]] = {
     val tmp = new java.util.HashMap[String, scala.collection.mutable.ArrayBuilder.ofLong]()
-    val r = projectedReader(path, Seq("file_path", "pos"), taskConf)
-    try {
-      var g = r.read()
-      while (g != null) {
-        val fp = groupValue(g, g.getType.getFieldIndex("file_path"),
-          StringType, "file_path", FileCalendar.Gregorian).asInstanceOf[String]
-        if (fp != null) {
-          val p = groupValue(g, g.getType.getFieldIndex("pos"),
-            LongType, "pos", FileCalendar.Gregorian).asInstanceOf[Long]
-          tmp.computeIfAbsent(ScanPlanner.normalizePath(fp),
-            _ => new scala.collection.mutable.ArrayBuilder.ofLong) += p
-        }
-        g = r.read()
-      }
+    requireColumns(path, PosDeleteSchema.fieldNames.toSeq, files)
+    val r = files.rows(path, PosDeleteSchema)
+    try while (r.next()) {
+      val row = r.get()
+      if (!row.isNullAt(0) && !row.isNullAt(1))
+        tmp.computeIfAbsent(ScanPlanner.normalizePath(row.getUTF8String(0).toString),
+          _ => new scala.collection.mutable.ArrayBuilder.ofLong) += row.getLong(1)
     } finally r.close()
     val out = new java.util.HashMap[String, Array[Long]](
       math.max(16, tmp.size() * 2))
@@ -471,6 +173,20 @@ object GraftBatchScan {
       val a = b.result(); java.util.Arrays.sort(a); out.put(k, a)
     }
     out
+  }
+
+  /** A delete file must store every column it is read by: Spark's reader
+    * would read an absent one as null, which deletes nothing. */
+  private def requireColumns(path: String, cols: Seq[String],
+      files: SparkFileReader): Unit = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), files.hadoopConf))
+    val schema = try r.getFooter.getFileMetaData.getSchema finally r.close()
+    val missing = cols.filterNot(schema.containsField)
+    if (missing.nonEmpty) throw CompactionError.Config(
+      s"columns ${missing.mkString(", ")} absent from $path " +
+        "(file/metadata schema drift — was the file replaced outside a commit?)")
   }
 
   /** First index in sorted `a` whose value is ≥ `target`. */
@@ -483,37 +199,21 @@ object GraftBatchScan {
     lo
   }
 
-  /** Canonical sentinel for NaN equality-key components — Spark's `===`
-    * (and Iceberg's eq-delete semantics) treat NaN = NaN, but boxed
-    * Scala `==` does not; both set build and probes normalize through
-    * [[eqKeyComponent]] so the readers agree with the plan-level
-    * anti-join. */
-  private[graft] case object NaNKey
+  /** One equality-delete file's keys: its current key column names and
+    * the set of non-null keys, as [[EqKeyProbe]] compares them. */
+  private[graft] final case class EqKeys(columns: Seq[String],
+      set: java.util.HashSet[org.apache.spark.sql.catalyst.expressions.UnsafeRow])
 
-  /** Normalize one equality-key component for set/probe equality: byte
-    * arrays wrap in content-equality [[org.apache.parquet.io.api
-    * .Binary]] (raw arrays compare by reference inside Seq keys), NaN
-    * canonicalizes to [[NaNKey]]. Applied at the set build AND every
-    * probe. */
-  private[graft] def eqKeyComponent(v: Any): Any = v match {
-    case b: Array[Byte] =>
-      org.apache.parquet.io.api.Binary.fromConstantByteArray(b)
-    case d: java.lang.Double if d.isNaN => NaNKey
-    case f: java.lang.Float if f.isNaN  => NaNKey
-    case x => x
-  }
-
-  /** Per applicable equality-delete file: (current key column names,
-    * key set). Keys read under the DELETE file's physical names, typed
-    * by the current schema (`readTypes`), normalized through
-    * [[eqKeyComponent]]. Keys containing null are dropped — they can
-    * never match (`===` anti-join semantics) — and files whose set
-    * comes out empty are dropped wholesale (a no-op file must not keep
-    * cursors alive). Shared by the row and columnar readers; callers
-    * pre-filter files keyed on columns the data file lacks. */
+  /** Per applicable equality-delete file, its [[EqKeys]]: read through
+    * Spark's reader under the DELETE file's physical names, typed by the
+    * current schema (`readTypes`), so a key written before a widen reads
+    * widened. Keys containing null are dropped — they can never match
+    * (`===` anti-join semantics) — and files whose set comes out empty
+    * are dropped wholesale. Callers pre-filter files keyed on columns
+    * the data file lacks. */
   private[graft] def loadEqKeySets(eqDeletes: Seq[EqDeleteSpec],
       readTypes: Map[String, DataType],
-      taskConf: Configuration): Seq[(Seq[String], java.util.HashSet[Seq[Any]])] =
+      files: SparkFileReader): Seq[EqKeys] =
     eqDeletes.map { e =>
       val curNames = e.keyCols.map(_._1)
       val types = curNames.map { c =>
@@ -528,53 +228,19 @@ object GraftBatchScan {
         e.keyCols.map { case (c, p) => s"$c=$p" }.mkString(",") + ";" +
         types.map(_.catalogString).mkString(",")
       val set = DeleteFileCache.getOrLoad(e.path, e.sizeBytes, variant) {
-        val s = new java.util.HashSet[Seq[Any]]()
-        val rs = new FileCalendar.ReadSupportWithCalendar
-        val r = projectedReader(e.path, e.keyCols.map(_._2), taskConf, support = rs)
-        try {
-          var g = r.read()
-          while (g != null) {
-            val key = e.keyCols.zip(types).map { case ((_, phys), t) =>
-              groupValue(g, g.getType.getFieldIndex(phys), t, phys, rs.calendar)
-            }
-            if (!key.contains(null)) s.add(key.map(eqKeyComponent))
-            g = r.read()
-          }
+        val s = new java.util.HashSet[org.apache.spark.sql.catalyst.expressions.UnsafeRow]()
+        val keyOf = EqKeyProbe.keyOf(types)
+        requireColumns(e.path, e.keyCols.map(_._2), files)
+        val r = files.rows(e.path, StructType(e.keyCols.map(_._2).zip(types)
+          .map { case (phys, t) => StructField(phys, t) }))
+        try while (r.next()) {
+          val k = keyOf(r.get())
+          if (k != null) s.add(k)
         } finally r.close()
         s
       }
-      (curNames, set)
-    }.filter(_._2.size() > 0)
-
-  /** Build a ParquetReader over `path` restricted to `cols`, with the
-    * requested projection derived from the FILE's own schema (exact
-    * types/repetitions, so parquet's containment check always passes).
-    * `base` must carry the session's hadoop settings
-    * ([[graft.io.FileIO.confFrom]] on executors) — a bare Configuration
-    * cannot open object-store paths. */
-  private[graft] def projectedReader(
-      path: String, cols: Seq[String],
-      base: Configuration,
-      range: Option[(Long, Long)] = None,
-      support: GroupReadSupport = new GroupReadSupport()): ParquetReader[Group] = {
-    val conf = new Configuration(base)
-    val inFile = HadoopInputFile.fromPath(new HPath(path), conf)
-    val fileSchema: MessageType = {
-      val r = ParquetFileReader.open(inFile)
-      try r.getFooter.getFileMetaData.getSchema finally r.close()
-    }
-    val missing = cols.filterNot(c => fileSchema.containsField(c))
-    if (missing.nonEmpty) throw CompactionError.Config(
-      s"columns ${missing.mkString(", ")} absent from $path " +
-        "(file/metadata schema drift — was the file replaced outside a commit?)")
-    val projection = new MessageType(fileSchema.getName,
-      cols.map(c => fileSchema.getType(fileSchema.getFieldIndex(c))).asJava)
-    conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-    val b = ParquetReader.builder(support, new HPath(path))
-      .withConf(conf)
-    range.foreach { case (s, e) => b.withFileRange(s, e) }
-    b.build()
-  }
+      EqKeys(curNames, set)
+    }.filter(_.set.size() > 0)
 }
 
 /** One equality-delete file applicable to a task's data file. Keys are
@@ -604,15 +270,15 @@ final case class DvSpec(path: String, contentOffset: Long,
 /** One data file plus exactly the delete files that can affect it.
   * `columnMap` resolves each CURRENT column to its physical name in
   * THIS file (None = the file predates the column → null-fill), so a
-  * read straddling renames/adds/drops needs no join or union — the
-  * mapping is applied row-by-row in the reader.
+  * read straddling renames/adds/drops needs no join or union — the task
+  * reads the file under its physical names ([[DeleteFilter]]).
   *
   * A LARGE file is split into several partitions over row-group-aligned
   * byte ranges: `[rangeStart, rangeEnd)` selects the row groups whose
-  * midpoint falls inside (parquet's file-range rule) and `baseOrdinal`
-  * is the count of rows in all PRECEDING row groups, so each split's
-  * running position stays the file-absolute ordinal that
-  * position-delete semantics require. */
+  * midpoint falls inside (parquet's file-range rule). Rows keep their
+  * file-absolute position (Spark's row index); `baseOrdinal` is the
+  * count of rows in all PRECEDING row groups, which only windows the
+  * position deletes a split loads. */
 final case class GraftMorPartition(
     dataPath: String,
     dataSeq: Long,
@@ -628,8 +294,8 @@ final case class GraftMorPartition(
       * groups added to `baseOrdinal`) — bounds the position-delete
       * ordinals the split's reader needs to hold in memory. */
     ordinalEnd: Long = Long.MaxValue,
-    /** Pushed filters, for ROW-GROUP statistics skipping in the
-      * vectorized reader ([[ParquetPredicate]]). Purely an optimization:
+    /** Pushed filters, for ROW-GROUP statistics skipping in Spark's
+      * parquet reader ([[DeleteFilter]]). Purely an optimization:
       * every filter is also re-applied by Spark above the scan. */
     filters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
     /** Initial-DEFAULT fills for current columns THIS file predates
@@ -671,8 +337,9 @@ final class GraftScanBuilder(
       * groups that were read. */
     cowOwner: Option[graft.sinks.RowLevelScanOwner] = None,
     splitTargetBytes: Long = GraftBatchScan.DefaultSplitTargetBytes,
-    /** Escape hatch (`.option("vectorizedRead", false)`): force the
-      * row readers even where the columnar gate would allow batches. */
+    /** Escape hatch (`.option("vectorizedRead", false)`): force Spark's
+      * parquet-mr row reader even where its batch gate would allow
+      * batches. */
     vectorizedRead: Boolean = true,
     /** Streaming CDC mode ([[graft.streaming.ChangelogStream]]). */
     changelog: Boolean = false,
@@ -853,7 +520,7 @@ final class GraftScan(
     vectorizedRead: Boolean = true,
     pushedEqCandidates: Map[String, Seq[Any]] = Map.empty,
     /** The pushed `sources.Filter`s verbatim — shipped to every task for
-      * row-group statistics skipping ([[ParquetPredicate]]). */
+      * row-group statistics skipping in Spark's parquet reader. */
     pushedSourceFilters: Seq[sources.Filter] = Nil,
     /** Streaming CDC mode ([[graft.streaming.ChangelogStream]]):
       * microbatches emit change rows; batch reads refuse. */
@@ -1612,193 +1279,47 @@ final class GraftScan(
     }.toSeq
   }
 
+  private lazy val files = SparkFileReader(vectorizedRead)
+
   /** Columnar is all-or-nothing per scan (Spark refuses mixed row/
-    * columnar partitions), so the gate is scan-level and depends only
-    * on TYPES: outputs always, plus the full table schema when any
-    * equality delete exists (its key columns decode inside the batch
-    * fill). Stable under runtime filtering — it only removes files. */
-  private lazy val columnarOk: Boolean =
-    vectorizedRead && GraftMorColumnarReader.supportedSchema(requiredSchema) &&
-      (snap.files.forall(_.content != "equality-deletes") ||
-        GraftMorColumnarReader.supportedSchema(tableSchema))
+    * columnar partitions), so the gate is scan-level: Spark's batch gate
+    * over every column a task may decode — the outputs, plus the full
+    * table schema when any equality delete exists (its key columns
+    * decode too), and the row index. It depends only on types, so it is
+    * stable under runtime filtering, which only removes files. */
+  private lazy val columnarOk: Boolean = {
+    val decoded =
+      if (snap.files.exists(_.content == "equality-deletes")) tableSchema
+      else requiredSchema
+    files.batchable(StructType(
+      (decoded.fields ++ readSchema().fields).distinctBy(_.name) :+
+        SparkFileReader.RowIndexField))
+  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftMorReaderFactory(requiredSchema, tableSchema, includeFileColumn,
-      graft.io.FileIO.hadoopConfEntries(), includePosColumn, columnarOk)
+      includePosColumn, files, columnarOk)
 }
 
 final class GraftMorReaderFactory(
     requiredSchema: StructType, tableSchema: StructType,
-    includeFileColumn: Boolean = false,
-    confEntries: Array[(String, String)] = Array.empty,
-    includePosColumn: Boolean = false,
-    columnar: Boolean = false)
+    includeFileColumn: Boolean,
+    includePosColumn: Boolean,
+    files: SparkFileReader,
+    columnar: Boolean)
     extends PartitionReaderFactory {
-  private def unwrap(partition: InputPartition): GraftMorPartition =
-    partition match {
+  private def filter(partition: InputPartition): DeleteFilter =
+    new DeleteFilter(partition match {
       case k: GraftMorKeyedPartition => k.inner
       case p => p.asInstanceOf[GraftMorPartition]
-    }
+    }, requiredSchema, tableSchema, includeFileColumn, includePosColumn, files)
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = unwrap(partition)
-    new GraftMorPartitionReader(p, requiredSchema, tableSchema, includeFileColumn,
-      graft.io.FileIO.confFrom(confEntries), includePosColumn)
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new MorRowReader(filter(partition))
 
   override def supportColumnarReads(partition: InputPartition): Boolean = columnar
 
-  override def createColumnarReader(
-      partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = unwrap(partition)
-    new GraftMorColumnarReader(p, requiredSchema, tableSchema, includeFileColumn,
-      graft.io.FileIO.confFrom(confEntries), includePosColumn)
-  }
-}
-
-/** Streams one data file, dropping rows dead under the task's deletes:
-  * position ordinals collected for THIS file, equality keys per delete
-  * file with `deleteSeq > dataSeq` (the J2 sequence rule). Null equality
-  * keys never match (`===` join semantics on the DataFrame path). */
-final class GraftMorPartitionReader(
-    part: GraftMorPartition,
-    requiredSchema: StructType,
-    tableSchema: StructType,
-    includeFileColumn: Boolean = false,
-    taskConf: Configuration = new Configuration(),
-    includePosColumn: Boolean = false
-) extends PartitionReader[InternalRow] {
-  import GraftBatchScan._
-
-  private val deadPositions: GraftBatchScan.DeadPositions =
-    GraftBatchScan.loadDeadPositions(part, taskConf)
-
-  private val readTypes: Map[String, DataType] =
-    tableSchema.fields.map(f => f.name -> f.dataType).toMap
-
-  // initial-DEFAULT constants for columns this file predates, in the
-  // reader's boxed representation — evaluated once per task, never per
-  // row ([[graft.core.ColumnDefaults]])
-  private val defaultJvm: Map[String, Any] =
-    part.defaultFill.map { case (c, text) =>
-      c -> graft.core.ColumnDefaults.jvmValue(text, readTypes(c))
-    }
-
-  private val eqKeySets: Seq[(Seq[String], java.util.HashSet[Seq[Any]])] =
-    GraftBatchScan.loadEqKeySets(
-      // a file keyed on a NULL-filled column it predates can never
-      // match (the key would contain null) — skip its IO entirely; a
-      // DEFAULT-filled column compares like a stored value, so its
-      // deletes stay applicable
-      part.eqDeletes.filter(_.keyCols.forall(kc =>
-        part.columnMap.getOrElse(kc._1, Some(kc._1)).isDefined ||
-          defaultJvm.contains(kc._1))),
-      readTypes, taskConf)
-
-  // columns to materialize = output ∪ equality keys (current names, in
-  // table order); read from the file under their PHYSICAL names —
-  // current columns the file predates are null, not read
-  private val neededCurrent: Seq[String] = {
-    val need = requiredSchema.fieldNames.toSet ++ eqKeySets.flatMap(_._1)
-    tableSchema.fields.map(_.name).filter(need.contains).toSeq
-  }
-  private val physicalCols: Seq[String] =
-    neededCurrent.flatMap(c => part.columnMap.getOrElse(c, None))
-  private val outCols: Array[String] = requiredSchema.fieldNames
-
-  private val range: Option[(Long, Long)] =
-    if (part.rangeStart == 0L && part.rangeEnd == Long.MaxValue) None
-    else Some((part.rangeStart, part.rangeEnd))
-
-  // the file's date/timestamp storage, known from the first record on
-  private val readSupport = new FileCalendar.ReadSupportWithCalendar
-  private val reader: ParquetReader[Group] =
-    if (physicalCols.isEmpty) {
-      // nothing to materialize from this file (bare count, or every
-      // needed column postdates it) — full rows, only ordinals consumed
-      val b = ParquetReader.builder(readSupport, new HPath(part.dataPath))
-        .withConf(new Configuration(taskConf))
-      range.foreach { case (s, e) => b.withFileRange(s, e) }
-      b.build()
-    } else projectedReader(part.dataPath, physicalCols, taskConf, range, readSupport)
-
-  // running FILE-ABSOLUTE ordinal: a range split starts at the row
-  // count of every preceding row group (position-delete semantics)
-  private var pos: Long = part.baseOrdinal - 1L
-  private var current: InternalRow = _
-  private val filePathValue = UTF8String.fromString(part.dataPath)
-  private val outLen = outCols.length + (if (includeFileColumn) 1 else 0) +
-    (if (includePosColumn) 1 else 0)
-
-  // per-output-column extractors, specialized ONCE against the file's
-  // group type (every Group of one file shares it): hoists the
-  // column-map/read-type/name→index lookups and type dispatch that
-  // the old per-row lookup paid per VALUE out of the row loop. Columns the file
-  // predates materialize their default (or null) as a constant.
-  private var outExtract: Array[Group => Any] = _
-
-  private var eqProbes: Array[GraftBatchScan.EqProbe] = _
-  private def buildEqProbes(t: org.apache.parquet.schema.GroupType)
-      : Array[GraftBatchScan.EqProbe] =
-    eqKeySets.map { case (cols, set) =>
-      new GraftBatchScan.EqProbe(cols.toArray.map { c =>
-        part.columnMap.getOrElse(c, Some(c)) match {
-          case None =>
-            val v = defaultJvm.get(c)
-              .map(GraftBatchScan.eqKeyComponent).orNull
-            (_: Group) => v
-          case Some(phys) =>
-            GraftBatchScan.eqKeyExtractor(
-              t, t.getFieldIndex(phys), readTypes(c), phys, readSupport.calendar)
-        }
-      }, set)
-    }.toArray
-  private def buildOutExtract(t: org.apache.parquet.schema.GroupType)
-      : Array[Group => Any] =
-    outCols.map { c =>
-      part.columnMap.getOrElse(c, Some(c)) match {
-        case None =>
-          val v = toCatalyst(defaultJvm.getOrElse(c, null))
-          (_: Group) => v
-        case Some(phys) =>
-          GraftBatchScan.fieldExtractor(
-            t, t.getFieldIndex(phys), readTypes(c), phys, readSupport.calendar)
-      }
-    }
-
-  override def next(): Boolean = {
-    var g = reader.read()
-    while (g != null) {
-      pos += 1
-      if (eqProbes == null) eqProbes = buildEqProbes(g.getType)
-      if (!deadPositions.contains(pos) && liveUnderEqDeletes(g)) {
-        if (outExtract == null) outExtract = buildOutExtract(g.getType)
-        val vals = new Array[Any](outLen)
-        var i = 0
-        while (i < outCols.length) {
-          vals(i) = outExtract(i)(g)
-          i += 1
-        }
-        if (includeFileColumn) { vals(i) = filePathValue; i += 1 }
-        if (includePosColumn) vals(i) = pos
-        current =
-          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-        return true
-      }
-      g = reader.read()
-    }
-    false
-  }
-
-  private def liveUnderEqDeletes(g: Group): Boolean = {
-    var i = 0
-    while (i < eqProbes.length) {
-      if (!eqProbes(i).live(g)) return false
-      i += 1
-    }
-    true
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
+  override def createColumnarReader(partition: InputPartition)
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    new MorBatchReader(filter(partition))
 }

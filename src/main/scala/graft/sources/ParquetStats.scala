@@ -157,10 +157,9 @@ object ParquetStats {
       val untrusted = scala.collection.mutable.Set[String]()
       val nulls = scala.collection.mutable.Map[String, Long]()
       val nullsUntrusted = scala.collection.mutable.Set[String]()
-      // Julian-calendar dates/timestamps (FileCalendar) read back rebased
-      // — their stored stats are not bounds of the values read
-      val julian =
-        FileCalendar.of(reader.getFooter.getFileMetaData.getKeyValueMetaData).legacyDatetime
+      // Julian-calendar dates/timestamps read back rebased — their
+      // stored stats are not bounds of the values read
+      val julian = julianDatetime(reader)
       for (block <- reader.getFooter.getBlocks.asScala if block.getRowCount > 0;
            cc <- block.getColumns.asScala) {
         val name = cc.getPath.toDotString
@@ -330,6 +329,16 @@ object ParquetStats {
   def unsignedLe(a: Array[Byte], b: Array[Byte]): Boolean =
     !unsignedLt(b, a)
 
+  /** Whether Spark wrote this file's dates and INT64 timestamps in the
+    * Julian calendar (before 3.0, or under a LEGACY rebase), which its
+    * reader rebases — decided from the footer as Spark's reader decides. */
+  private def julianDatetime(reader: ParquetFileReader): Boolean = {
+    val meta = reader.getFooter.getFileMetaData.getKeyValueMetaData
+    org.apache.spark.sql.execution.datasources.DataSourceUtils
+      .datetimeRebaseSpec(meta.get _, "CORRECTED").mode ==
+      org.apache.spark.sql.internal.LegacyBehaviorPolicy.LEGACY
+  }
+
   /** Footer (min, max) per requested column, and the requested columns
     * some non-empty row group lacks trustworthy integral stats for. */
   private def minMaxOf(reader: ParquetFileReader, cols: Seq[String],
@@ -337,8 +346,7 @@ object ParquetStats {
       : (Map[String, (Long, Long)], Set[String]) = {
     val acc = scala.collection.mutable.Map[String, (Long, Long)]()
     val untrusted = scala.collection.mutable.Set[String]()
-    val julian =
-      FileCalendar.of(reader.getFooter.getFileMetaData.getKeyValueMetaData).legacyDatetime
+    val julian = julianDatetime(reader)
     for (block <- reader.getFooter.getBlocks.asScala if block.getRowCount > 0;
          cc <- block.getColumns.asScala) {
       val name = cc.getPath.toDotString

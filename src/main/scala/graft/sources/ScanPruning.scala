@@ -272,6 +272,39 @@ object ScanPruning {
     else r
   }
 
+  /** A pushed literal in its column's stats domain — unscaled decimals,
+    * epoch micros, epoch days. None when the literal does not convert
+    * exactly. */
+  private def unscaled(d: DecimalType, v: Any): Option[Long] = {
+    val bd: Option[java.math.BigDecimal] = v match {
+      case b: java.math.BigDecimal  => Some(b)
+      case b: scala.math.BigDecimal => Some(b.bigDecimal)
+      case dec: Decimal             => Some(dec.toJavaBigDecimal)
+      case _ => None
+    }
+    bd.flatMap { b =>
+      try Some(b.setScale(d.scale).unscaledValue().longValueExact())
+      catch { case _: ArithmeticException => None }
+    }
+  }
+
+  private def micros(v: Any): Option[Long] = {
+    import org.apache.spark.sql.catalyst.util.DateTimeUtils
+    v match {
+      case t: java.sql.Timestamp      => Some(DateTimeUtils.fromJavaTimestamp(t))
+      case i: java.time.Instant       => Some(DateTimeUtils.instantToMicros(i))
+      case l: java.time.LocalDateTime => Some(DateTimeUtils.localDateTimeToMicros(l))
+      case _ => None
+    }
+  }
+
+  private def epochDay(v: Any): Option[Int] = v match {
+    case d: java.sql.Date       =>
+      Some(org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaDate(d))
+    case d: java.time.LocalDate => Some(Math.toIntExact(d.toEpochDay))
+    case _ => None
+  }
+
   /** Pushed `sources.Filter`s → integral [lo, hi] bounds: integral
     * comparisons, plus decimals of ≤18 digits compared in UNSCALED space
     * (order-preserving at the column's fixed scale; the footer stats of
@@ -284,12 +317,12 @@ object ScanPruning {
       colTypes: Map[String, DataType]): Bounds = {
     import org.apache.spark.sql.sources
     def lit(a: String, v: Any): Option[Long] = colTypes.get(a) match {
-      case Some(d: DecimalType) if d.precision <= 18 => ParquetPredicate.unscaled(d, v)
+      case Some(d: DecimalType) if d.precision <= 18 => unscaled(d, v)
       case Some(_: DecimalType) => None // FLBA-backed: stats untrusted
       // date stats are INT32 epoch days; timestamp bounds are stamped
       // from MICROS columns only (ParquetStats.fileFacts)
-      case Some(DateType) => ParquetPredicate.epochDay(v).map(_.toLong)
-      case Some(TimestampType | TimestampNTZType) => ParquetPredicate.micros(v)
+      case Some(DateType) => epochDay(v).map(_.toLong)
+      case Some(TimestampType | TimestampNTZType) => micros(v)
       case _ => v match {
         case i: Int => Some(i.toLong); case l: Long => Some(l)
         case s: Short => Some(s.toLong); case _ => None

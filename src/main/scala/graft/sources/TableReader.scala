@@ -166,7 +166,7 @@ object TableReader {
     val posScopes: Seq[(FileEntry, Option[Set[String]])] =
       changedDeleteEntries.filter(_.content == "position-deletes").map { e =>
         e -> (try Some(GraftBatchScan.posDeleteReferencedPaths(
-            e.path, e.sizeBytes, graft.io.FileIO.hadoopConf))
+            e.path, e.sizeBytes))
           catch { case scala.util.control.NonFatal(_) => None })
       }
     val exactTargets: Set[String] =
@@ -751,7 +751,7 @@ object TableReader {
               .getOrElse(return None))
           case _ =>
             GraftBatchScan.posDeleteReferencedPaths(
-              e.path, e.sizeBytes, graft.io.FileIO.hadoopConf).toSeq
+              e.path, e.sizeBytes).toSeq
         }
       }.toSet
       catch { case scala.util.control.NonFatal(_) => return None }

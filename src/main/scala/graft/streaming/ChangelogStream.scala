@@ -2,12 +2,9 @@ package graft.streaming
 
 import graft.core.CompactionError
 import graft.txn.{FileEntry, TableSnapshot}
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import graft.sources.SparkFileReader
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -108,31 +105,15 @@ object ChangelogStream {
     out.result()
   }
 
-  /** Change-row materializer for one file: each column by NAME (null
-    * when the file lacks one — an equality-delete's non-key columns),
-    * then the change-type/commit-version constants. Specialized ONCE
-    * against the file's group type (every Group of one file shares it),
-    * hoisting the per-row name→index lookups and type dispatch the old
-    * per-row helper paid per VALUE. */
-  private[streaming] def rowMaterializer(
-      t: org.apache.parquet.schema.GroupType, base: StructType,
-      changeType: String, commitVersion: Long,
-      cal: graft.sources.FileCalendar): Group => InternalRow = {
-    val ctVal = UTF8String.fromString(changeType)
-    val extract: Array[Group => Any] = Array.tabulate(base.length) { i =>
-      val f = base(i)
-      if (!t.containsField(f.name)) (_: Group) => null
-      else graft.sources.GraftBatchScan.fieldExtractor(
-        t, t.getFieldIndex(f.name), f.dataType, f.name, cal)
-    }
-    g => {
-      val values = new Array[Any](base.length + 2)
-      var i = 0
-      while (i < base.length) { values(i) = extract(i)(g); i += 1 }
-      values(base.length) = ctVal
-      values(base.length + 1) = commitVersion
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(values)
-    }
+  /** The change rows of one file's rows: the table columns (read by
+    * NAME — null where the file lacks one, as an equality-delete's
+    * non-key columns), then the change-type/commit-version constants. */
+  private[streaming] def changeRows(rows: Iterator[InternalRow],
+      changeType: String, commitVersion: Long): Iterator[InternalRow] = {
+    val meta = new GenericInternalRow(
+      Array[Any](UTF8String.fromString(changeType), commitVersion))
+    val joined = new JoinedRow()
+    rows.map(joined(_, meta))
   }
 }
 
@@ -153,127 +134,67 @@ final case class DvChangePartition(puffinPath: String, offset: Long,
     size: Long, targetPath: String, commitVersion: Long) extends InputPartition
 
 final class ChangelogReaderFactory(fullSchema: StructType,
-    confEntries: Array[(String, String)]) extends PartitionReaderFactory {
-  private def conf = graft.io.FileIO.confFrom(confEntries)
+    files: SparkFileReader) extends PartitionReaderFactory {
+  private val base = ChangelogStream.baseSchema(fullSchema)
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    p match {
+    new FileRowsReader(files, in => p match {
       case ChangeFilePartition(path, ct, v) =>
-        new ChangeFileReader(path, fullSchema, ct, v, conf)
+        ChangelogStream.changeRows(in.rows(path, base), ct, v)
       case PosDeleteChangePartition(path, v) =>
-        new PosDeleteChangeReader(path, fullSchema, v, conf)
+        // the delete file's (file_path, pos) rows, grouped per target
+        val byTarget = scala.collection.mutable.TreeMap.empty[String,
+          scala.collection.mutable.ArrayBuilder.ofLong]
+        in.rows(path, graft.sources.GraftBatchScan.PosDeleteSchema).foreach { r =>
+          byTarget.getOrElseUpdate(r.getUTF8String(0).toString,
+            new scala.collection.mutable.ArrayBuilder.ofLong) += r.getLong(1)
+        }
+        byTarget.iterator.flatMap { case (target, ords) =>
+          deletedRows(in, target, ords.result(), v)
+        }
       case DvChangePartition(pp, off, sz, target, v) =>
         val bm = graft.io.Puffin.readDvBlob(pp, off, sz)
         val ords = new Array[Long](bm.getIntCardinality)
         val it = bm.getLongIterator
         var i = 0
         while (it.hasNext) { ords(i) = it.next(); i += 1 }
-        new OrdinalDeleteReader(target, ords, fullSchema, v, conf)
-    }
+        deletedRows(in, target, ords, v)
+    })
+
+  /** The rows of `target` at `ordinals` as `delete` change rows, matched
+    * by Spark's row index. */
+  private def deletedRows(in: FileRowsReader, target: String,
+      ordinals: Array[Long], v: Long): Iterator[InternalRow] = {
+    java.util.Arrays.sort(ordinals)
+    val idx = base.length
+    val dropIndex = UnsafeProjection.create(base.fields.toSeq.zipWithIndex.map {
+      case (f, i) => BoundReference(i, f.dataType, nullable = true) })
+    ChangelogStream.changeRows(
+      in.rows(target, base.add(SparkFileReader.RowIndexField))
+        .filter(r => java.util.Arrays.binarySearch(ordinals, r.getLong(idx)) >= 0)
+        .map(dropIndex),
+      "delete", v)
+  }
 }
 
-/** Row-by-row reader of one parquet file, tolerant of missing columns,
-  * appending the change-type/commit-version constants. */
-final class ChangeFileReader(path: String, fullSchema: StructType,
-    changeType: String, commitVersion: Long, taskConf: Configuration)
+/** A partition reader over the rows `plan` derives from files it opens
+  * through `in.rows`; each file closes when exhausted or with the reader. */
+final class FileRowsReader(files: SparkFileReader,
+    plan: FileRowsReader => Iterator[InternalRow])
     extends PartitionReader[InternalRow] {
-  private val base = ChangelogStream.baseSchema(fullSchema)
-  private val readSupport = new graft.sources.FileCalendar.ReadSupportWithCalendar
-  private val reader: ParquetReader[Group] =
-    ParquetReader.builder(readSupport, new HPath(path))
-      .withConf(taskConf).build()
-  private var current: Group = _
-  private var mat: Group => InternalRow = _
-  override def next(): Boolean = { current = reader.read(); current != null }
-  override def get(): InternalRow = {
-    if (mat == null) mat = ChangelogStream.rowMaterializer(
-      current.getType, base, changeType, commitVersion, readSupport.calendar)
-    mat(current)
-  }
-  override def close(): Unit = reader.close()
-}
+  private val opened = scala.collection.mutable.Set.empty[PartitionReader[InternalRow]]
+  private lazy val out = plan(this)
+  private var current: InternalRow = _
 
-/** Emits the rows of `targetPath` at `ordinals` (sorted ascending) as
-  * `delete` change rows — one sequential scan with a row counter, the
-  * position-delete resolution shape. */
-final class OrdinalDeleteReader(targetPath: String, ordinals0: Array[Long],
-    fullSchema: StructType, commitVersion: Long, taskConf: Configuration)
-    extends PartitionReader[InternalRow] {
-  private val base = ChangelogStream.baseSchema(fullSchema)
-  private val readSupport = new graft.sources.FileCalendar.ReadSupportWithCalendar
-  private val reader: ParquetReader[Group] =
-    ParquetReader.builder(readSupport, new HPath(targetPath))
-      .withConf(taskConf).build()
-  // sorted AND deduplicated: position-delete files are not key-distinct
-  // (a row can be named twice), and a duplicate ordinal equal to an
-  // already-passed rowIdx would otherwise stall the cursor to EOF,
-  // silently dropping every later delete
-  private val ordinals: Array[Long] = {
-    java.util.Arrays.sort(ordinals0)
-    val out = new Array[Long](ordinals0.length)
-    var n = 0
-    var i = 0
-    while (i < ordinals0.length) {
-      if (n == 0 || out(n - 1) != ordinals0(i)) { out(n) = ordinals0(i); n += 1 }
-      i += 1
-    }
-    java.util.Arrays.copyOf(out, n)
+  /** Every row of `path` under `schema` (by name; absent columns null). */
+  def rows(path: String, schema: StructType): Iterator[InternalRow] = {
+    val r = files.rows(path, schema)
+    opened += r
+    Iterator.continually(r)
+      .takeWhile(r => r.next() || { r.close(); opened -= r; false })
+      .map(_.get())
   }
-  private var rowIdx = -1L
-  private var ordIdx = 0
-  private var current: Group = _
-  override def next(): Boolean = {
-    while (ordIdx < ordinals.length) {
-      current = reader.read()
-      rowIdx += 1
-      if (current == null) return false // ordinal past EOF: nothing more
-      if (rowIdx == ordinals(ordIdx)) { ordIdx += 1; return true }
-    }
-    false
-  }
-  private var mat: Group => InternalRow = _
-  override def get(): InternalRow = {
-    if (mat == null) mat = ChangelogStream.rowMaterializer(
-      current.getType, base, "delete", commitVersion, readSupport.calendar)
-    mat(current)
-  }
-  override def close(): Unit = reader.close()
-}
 
-/** Reads a position-delete file's (file_path, pos) rows, groups the
-  * ordinals per referenced data file, and replays each target through
-  * [[OrdinalDeleteReader]] semantics sequentially. Delete files are
-  * small (keys/positions only), so the grouping is reader-local. */
-final class PosDeleteChangeReader(deletePath: String, fullSchema: StructType,
-    commitVersion: Long, taskConf: Configuration)
-    extends PartitionReader[InternalRow] {
-  private val byTarget: Iterator[(String, Array[Long])] = {
-    val r = ParquetReader.builder(new GroupReadSupport(), new HPath(deletePath))
-      .withConf(taskConf).build()
-    val m = scala.collection.mutable.Map.empty[String, scala.collection.mutable.ArrayBuffer[Long]]
-    try {
-      var g = r.read()
-      while (g != null) {
-        val fi = g.getType.getFieldIndex("file_path")
-        val pi = g.getType.getFieldIndex("pos")
-        m.getOrElseUpdate(g.getString(fi, 0),
-          scala.collection.mutable.ArrayBuffer.empty[Long]) += g.getLong(pi, 0)
-        g = r.read()
-      }
-    } finally r.close()
-    m.toSeq.sortBy(_._1).map { case (t, os) => t -> os.toArray }.iterator
-  }
-  private var cur: OrdinalDeleteReader = _
-  override def next(): Boolean = {
-    while (true) {
-      if (cur != null && cur.next()) return true
-      if (cur != null) { cur.close(); cur = null }
-      if (!byTarget.hasNext) return false
-      val (target, ords) = byTarget.next()
-      cur = new OrdinalDeleteReader(target, ords, fullSchema, commitVersion,
-        taskConf)
-    }
-    false
-  }
-  override def get(): InternalRow = cur.get()
-  override def close(): Unit = if (cur != null) cur.close()
+  override def next(): Boolean = out.hasNext && { current = out.next(); true }
+  override def get(): InternalRow = current
+  override def close(): Unit = { opened.foreach(_.close()); opened.clear() }
 }

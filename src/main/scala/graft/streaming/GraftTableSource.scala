@@ -2,10 +2,6 @@ package graft.streaming
 
 import graft.core.CompactionError
 import graft.txn.{FileTableCatalog, SchemaEvolution, TableCatalog, TableSnapshot}
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDelete, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.write.{RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo}
@@ -16,7 +12,6 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 import java.util
 import scala.jdk.CollectionConverters._
@@ -47,9 +42,8 @@ import scala.jdk.CollectionConverters._
   *
   * Scale: planning walks snapshot metadata only (no file IO); each
   * appended file becomes one input partition, so read parallelism is
-  * the append fan-out. Flat primitive schemas (the primitive part of
-  * [[graft.sinks.GraftBatchWrite.supportedType]]) — nested types
-  * would need the vectorized reader.
+  * the append fan-out. Files decode through Spark's parquet reader
+  * ([[graft.sources.SparkFileReader]]), by column name.
   */
 class GraftTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft"
@@ -422,8 +416,8 @@ final class GraftMicroBatchStream(
 
   override def createReaderFactory(): PartitionReaderFactory =
     if (changelog)
-      new ChangelogReaderFactory(schema, graft.io.FileIO.hadoopConfEntries())
-    else new GraftReaderFactory(schema, graft.io.FileIO.hadoopConfEntries())
+      new ChangelogReaderFactory(schema, graft.sources.SparkFileReader())
+    else new GraftReaderFactory(schema, graft.sources.SparkFileReader())
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -432,56 +426,9 @@ final class GraftMicroBatchStream(
 final case class GraftInputPartition(path: String) extends InputPartition
 
 final class GraftReaderFactory(schema: StructType,
-    confEntries: Array[(String, String)] = Array.empty)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new GroupPartitionReader(
-      partition.asInstanceOf[GraftInputPartition].path, schema,
-      graft.io.FileIO.confFrom(confEntries))
-}
-
-/** Row-by-row parquet reader over the example Group model — the exact
-  * READ side of the DSv2 writer's encoding; flat
-  * primitive schemas, resolved by column NAME. */
-final class GroupPartitionReader(path: String, schema: StructType,
-    taskConf: Configuration = new Configuration())
-    extends PartitionReader[InternalRow] {
-
-  private val readSupport = new graft.sources.FileCalendar.ReadSupportWithCalendar
-  private val reader: ParquetReader[Group] =
-    ParquetReader.builder(readSupport, new HPath(path))
-      .withConf(taskConf)
-      .build()
-  private var current: Group = _
-
-  // per-field extractors, specialized ONCE against the file's group
-  // type (every Group of one file shares it): hoists the name→index
-  // lookup and type dispatch the old per-row loop paid per VALUE
-  private var extract: Array[Group => Any] = _
-
-  override def next(): Boolean = {
-    current = reader.read()
-    current != null
+    files: graft.sources.SparkFileReader) extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val path = partition.asInstanceOf[GraftInputPartition].path
+    new FileRowsReader(files, _.rows(path, schema))
   }
-
-  override def get(): InternalRow = {
-    val g = current
-    if (extract == null) {
-      val t = g.getType
-      extract = Array.tabulate(schema.length) { i =>
-        val f = schema(i)
-        graft.sources.GraftBatchScan.fieldExtractor(
-          t, t.getFieldIndex(f.name), f.dataType, f.name, readSupport.calendar)
-      }
-    }
-    val values = new Array[Any](schema.length)
-    var i = 0
-    while (i < schema.length) {
-      values(i) = extract(i)(g)
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(values)
-  }
-
-  override def close(): Unit = reader.close()
 }

@@ -52,11 +52,10 @@ object TableWrites {
     else BloomColumns.of(Some(cur))
 
   /** Equality-delete key columns must be primitive (the Iceberg spec's
-    * own restriction on equality field ids): the readers' key-set
-    * normalization ([[graft.sources.GraftBatchScan.eqKeyComponent]])
-    * canonicalizes NaN/binary at the TOP level only, so an array/struct/
-    * map key could compare differently between the set probe and the
-    * plan-level anti-join — refuse rather than risk divergence. */
+    * own restriction on equality field ids): the readers' key probe
+    * ([[graft.sources.EqKeyProbe]]) compares binary keys, so an array/
+    * struct/map key could compare differently between the set probe and
+    * the plan-level anti-join — refuse rather than risk divergence. */
   private def requirePrimitiveKeys(df: DataFrame, cols: Seq[String]): Unit =
     cols.foreach { c =>
       df.schema.fields.find(_.name == c).foreach { f =>

@@ -4,10 +4,9 @@ import graft.sql.GraftCatalog
 import graft.txn.FileTableCatalog
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.sources
-import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
@@ -25,11 +24,6 @@ class BloomFilterSpec extends AnyFunSuite {
   }
   private def sql(q: String) = spark.sql(q)
   private def wh = spark.conf.get("spark.sql.catalog.gbl.warehouse")
-
-  private val schema = StructType(Seq(
-    StructField("id", LongType), StructField("v", StringType)))
-  private val idMap: Map[String, Option[String]] =
-    schema.fieldNames.map(n => n -> Some(n)).toMap
 
   private def hconf = spark.sparkContext.hadoopConfiguration
 
@@ -72,10 +66,8 @@ class BloomFilterSpec extends AnyFunSuite {
     val files = FileTableCatalog.loadOrThrow(dir).files.filter(_.content == "data")
     assert(files.nonEmpty)
 
-    val absent = ParquetPredicate.build(
-      Seq(sources.EqualTo("id", 19999L)), schema, idMap).get // odd, in range
-    val present = ParquetPredicate.build(
-      Seq(sources.EqualTo("id", 19998L)), schema, idMap).get // even, present
+    val absent = FilterApi.eq(FilterApi.longColumn("id"), java.lang.Long.valueOf(19999L)) // odd, in range
+    val present = FilterApi.eq(FilterApi.longColumn("id"), java.lang.Long.valueOf(19998L)) // even, present
     files.foreach { f =>
       val (keptAbsent, hasBloom) = probe(f.path, absent)
       assert(hasBloom, s"${f.path} must carry an id bloom filter")
@@ -103,8 +95,7 @@ class BloomFilterSpec extends AnyFunSuite {
       .build().compact()
     val files = FileTableCatalog.loadOrThrow(dir).files.filter(_.content == "data")
     assert(files.nonEmpty)
-    val absent = ParquetPredicate.build(
-      Seq(sources.EqualTo("id", 19997L)), schema, idMap).get
+    val absent = FilterApi.eq(FilterApi.longColumn("id"), java.lang.Long.valueOf(19997L))
     files.foreach { f =>
       val (kept, hasBloom) = probe(f.path, absent)
       assert(hasBloom, s"compacted ${f.path} must still carry the id bloom")

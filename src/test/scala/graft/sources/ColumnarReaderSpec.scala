@@ -190,6 +190,18 @@ class ColumnarReaderSpec extends AnyFunSuite {
     val ids = q.select("id").as[Long].collect().sorted
     assert(ids.length == 19900 && !ids.contains(5050L) && ids.contains(4999L))
     assert(ids.sum == (0L until 20000L).sum - (5000L until 5100L).sum)
+    // _pos is the file-absolute row index in every split, on both
+    // readers, also where a filter skips row groups (write order: pos == id)
+    for (vec <- Seq(true, false); skip <- Seq(false, true)) {
+      val df = spark.read.format("graft").option("splitTargetBytes", "65536")
+        .option("vectorizedRead", vec).load(dir)
+      val read = (if (skip) df.filter($"id" >= 12000L) else df).select("id", "_pos")
+      assert(scanOf(read).partitions.size > 1)
+      val rows = read.as[(Long, Long)].collect()
+      assert(rows.length == (if (skip) 8000 else 19900), s"vectorized=$vec skip=$skip")
+      assert(rows.forall { case (id, pos) => id == pos },
+        s"_pos drifted from the row's file position (vectorized=$vec skip=$skip)")
+    }
   }
 
   test("columnar and row readers agree on randomized tables") {

@@ -1,59 +1,52 @@
 package graft.sources
 
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, UnsafeRow}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The equality-delete probe's key equality is CROSS-TYPE: loaded key
-  * sets hold immutable `List`s ([[GraftBatchScan.loadEqKeySets]]) while
-  * each row probes through one reused mutable `ArraySeq` view. Scala's
-  * structural `Seq` equality and hash make the two meet; these checks
-  * pin that, so a collection-library or key-construction change that
-  * breaks it fails here instead of silently keeping deleted rows. */
+/** The equality-delete probe's key equality: loaded key sets hold COPIED
+  * binary keys ([[EqKeyProbe.keyOf]]) while each row probes through one
+  * projection whose output buffer is reused. Binary equality and hash
+  * make the two meet once floats are normalized as Spark's join keys
+  * are; these checks pin that, so a key-construction change that breaks
+  * it fails here instead of silently keeping deleted rows. */
 class EqProbeSpec extends AnyFunSuite {
-  private val fileType = MessageTypeParser.parseMessageType(
-    """message row {
-      |  optional int64 id;
-      |  optional binary s (STRING);
-      |  optional double d;
-      |}""".stripMargin)
-  private val factory = new SimpleGroupFactory(fileType)
+  private val types: Seq[DataType] = Seq(LongType, StringType, DoubleType)
 
-  private def row(id: Option[Long], s: String, d: Double) = {
-    val g = factory.newGroup()
-    id.foreach(g.add("id", _))
-    g.add("s", s)
-    g.add("d", d)
-    g
-  }
+  private def row(id: Option[Long], s: String, d: Double): InternalRow =
+    new GenericInternalRow(Array[Any](id.orNull, UTF8String.fromString(s), d))
 
-  private val extract = Array(
-    GraftBatchScan.eqKeyExtractor(fileType, 0, LongType, "id", FileCalendar.Gregorian),
-    GraftBatchScan.eqKeyExtractor(fileType, 1, StringType, "s", FileCalendar.Gregorian),
-    GraftBatchScan.eqKeyExtractor(fileType, 2, DoubleType, "d", FileCalendar.Gregorian))
+  private val keyOf = EqKeyProbe.keyOf(types)
+
+  private def probe(set: java.util.HashSet[UnsafeRow]) = new EqKeyProbe(
+    types.zipWithIndex.map { case (t, i) => BoundReference(i, t, nullable = true) }, set)
 
   test("a probe through the reused ArraySeq view hits a List-keyed HashSet") {
-    val set = new java.util.HashSet[Seq[Any]]()
-    set.add(List[Any](5L, "x", 1.5).map(GraftBatchScan.eqKeyComponent))
-    set.add(List[Any](7L, "y", Double.NaN).map(GraftBatchScan.eqKeyComponent))
-    val probe = new GraftBatchScan.EqProbe(extract, set)
-    assert(!probe.live(row(Some(5L), "x", 1.5)))
-    assert(!probe.live(row(Some(7L), "y", Double.NaN))) // NaN keys match
+    val set = new java.util.HashSet[UnsafeRow]()
+    set.add(keyOf(row(Some(5L), "x", 1.5)))
+    set.add(keyOf(row(Some(7L), "y", Double.NaN)))
+    val p = probe(set)
+    assert(!p.live(row(Some(5L), "x", 1.5)))
+    assert(!p.live(row(Some(7L), "y", Double.NaN))) // NaN keys match
     // the reused buffer must not leak one row's key into the next probe
-    assert(probe.live(row(Some(5L), "y", 1.5)))
-    assert(probe.live(row(Some(6L), "x", 1.5)))
-    assert(!probe.live(row(Some(5L), "x", 1.5)))
+    assert(p.live(row(Some(5L), "y", 1.5)))
+    assert(p.live(row(Some(6L), "x", 1.5)))
+    assert(!p.live(row(Some(5L), "x", 1.5)))
     // a null key component never matches
-    assert(probe.live(row(None, "x", 1.5)))
+    assert(p.live(row(None, "x", 1.5)))
   }
 
   test("the view and a List key agree on equality and hash") {
-    val buf = Array[Any](java.lang.Long.valueOf(5L), "x")
-    val view: scala.collection.Seq[Any] =
-      scala.collection.mutable.ArraySeq.make(buf)
-    val key: Seq[Any] = List[Any](5L, "x")
+    // the probe's reused projection output and a stored (copied) key
+    val view = EqKeyProbe.projection(
+      types.zipWithIndex.map { case (t, i) => BoundReference(i, t, nullable = true) })(
+      row(Some(5L), "x", -0.0))
+    val key = keyOf(row(Some(5L), "x", 0.0))
     assert(view == key && key == view)
     assert(view.hashCode == key.hashCode)
+    // a key with a null component is never stored
+    assert(keyOf(row(None, "x", 0.0)) == null)
   }
 }

@@ -307,9 +307,10 @@ class GraftBatchSourceSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-batch-nan").toString
     FileTableCatalog.commitCas(dir, TableSnapshot(1, 1, 0, Nil))
     TableWrites.appendData(dir,
-      Seq((1L, 1.5), (2L, Double.NaN), (3L, 3.5), (4L, Double.NaN))
+      Seq((1L, 1.5), (2L, Double.NaN), (3L, 3.5), (4L, Double.NaN), (5L, -0.0))
         .toDF("id", "v").coalesce(1))
-    TableWrites.appendEqualityDeletes(dir, Seq(Double.NaN).toDF("v"), Seq("v"))
+    // a 0.0 key deletes the -0.0 row too (Spark's join equality)
+    TableWrites.appendEqualityDeletes(dir, Seq(Double.NaN, 0.0).toDF("v"), Seq("v"))
     // both reader paths and the plan-level anti-join must agree
     val vec = dsv2(dir).select("id").as[Long].collect().sorted.toSeq
     val row = spark.read.format("graft").option("vectorizedRead", false)
@@ -318,6 +319,10 @@ class GraftBatchSourceSpec extends AnyFunSuite {
     assert(row == Seq(1L, 3L), s"row reader kept NaN rows: $row")
     assert(graft.sources.TableReader.read(spark, dir)
       .select("id").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
+    val antiJoin = graft.compaction.SparkCompactionExecutor.liveRows(spark,
+      ScanPlanner.toInputTasks(FileTableCatalog.loadOrThrow(dir).files.map(_.toTask)))
+    assert(antiJoin.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 3L),
+      "anti-join kept NaN or -0.0 rows")
   }
 
   test("append schema is validated by name against the table") {

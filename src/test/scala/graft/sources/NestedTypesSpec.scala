@@ -108,8 +108,9 @@ class NestedTypesSpec extends AnyFunSuite {
     val (a, b) = (comparable(back), comparable(expect))
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
 
-    // projections into the nested values go through groupValue's
-    // recursive decode: element, struct member, map lookup, empty/null
+    // projections into the nested values go through Spark's parquet
+    // reader's nested decode: element, struct member, map lookup,
+    // empty/null
     import org.apache.spark.sql.functions._
     val flat = back.select(col("id"),
       element_at(col("tags"), 1).as("t1"),

@@ -2,10 +2,13 @@ package graft.sources
 
 import graft.txn.{FileTableCatalog, TableSnapshot, TableWrites}
 import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.DataSourceUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFilters, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types._
@@ -13,8 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 
-/** Row-group statistics skipping on the vectorized MoR path:
-  * [[ParquetPredicate]] conversion rules, actual group pruning against a
+/** Row-group statistics skipping on the MoR path: Spark's
+  * `ParquetFilters` conversion rules, actual group pruning against a
   * multi-group file, and — the part that can silently corrupt results —
   * file-absolute position tracking (`_pos`, position deletes) when
   * groups are skipped mid-file. */
@@ -25,32 +28,71 @@ class RowGroupPruningSpec extends AnyFunSuite {
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("s", StringType),
     StructField("d", DoubleType), StructField("dec", DecimalType(10, 2))))
-  private val idMap: Map[String, Option[String]] =
-    schema.fieldNames.map(n => n -> Some(n)).toMap
 
   test("conversion: typed predicates, absent columns, And/Or semantics") {
+    // the cases go through Spark's own ParquetFilters over the same
+    // schema, as the scan hands them to Spark's parquet reader
+    def filtersOver(st: StructType) = new ParquetFilters(
+      new SparkToParquetSchemaConverter().convert(st),
+      true, true, true, true,
+      spark.sessionState.conf.parquetFilterPushDownInFilterThreshold, false,
+      DataSourceUtils.datetimeRebaseSpec(_ => null, "CORRECTED"))
+    val filters = filtersOver(schema)
     def conv(fs: sources.Filter*) =
-      ParquetPredicate.build(fs, schema, idMap)
+      fs.flatMap(filters.createFilter).reduceOption(FilterApi.and)
     assert(conv(sources.EqualTo("id", 5L)).get.toString.contains("id"))
-    assert(conv(sources.GreaterThan("id", 5)).isDefined) // Int literal on Long col
+    // Spark types the literal strictly (Catalyst casts it to the column's
+    // type before pushdown, so a Long column always sees a Long)
+    assert(conv(sources.GreaterThan("id", 5L)).isDefined)
+    assert(conv(sources.GreaterThan("id", 5)).isEmpty)
     assert(conv(sources.LessThanOrEqual("s", "m")).isDefined)
     assert(conv(sources.EqualTo("dec", new java.math.BigDecimal("12.34"))).isDefined)
     assert(conv(sources.IsNull("s")).isDefined)
     assert(conv(sources.IsNotNull("d")).isDefined)
-    // NaN never pushes
-    assert(conv(sources.EqualTo("d", Double.NaN)).isEmpty)
     // absent column (file predates it): no predicate
-    assert(ParquetPredicate.build(Seq(sources.EqualTo("id", 5L)), schema,
-      Map("id" -> None)).isEmpty)
+    assert(filtersOver(StructType(schema.filterNot(_.name == "id")))
+      .createFilter(sources.EqualTo("id", 5L)).isEmpty)
     // And keeps the convertible side; Or requires both
-    val mixedAnd = conv(sources.And(
-      sources.EqualTo("id", 5L), sources.StringStartsWith("s", "x")))
-    assert(mixedAnd.isDefined && !mixedAnd.get.toString.contains("starts"))
-    assert(conv(sources.Or(
-      sources.EqualTo("id", 5L), sources.StringStartsWith("s", "x"))).isEmpty)
+    val unconvertible = sources.EqualTo("id", "not a long")
+    val mixedAnd = conv(sources.And(sources.EqualTo("id", 5L), unconvertible))
+    assert(mixedAnd.isDefined && !mixedAnd.get.toString.contains("not a long"))
+    assert(conv(sources.Or(sources.EqualTo("id", 5L), unconvertible)).isEmpty)
     assert(conv(sources.In("id", Array[Any](1L, 2L, 3L))).isDefined)
-    // oversized In drops out (the or-chain would dwarf the stats check)
-    assert(conv(sources.In("id", (1L to 40L).map(x => x: Any).toArray)).isEmpty)
+    // an oversized In builds no or-chain (Spark pushes its range instead)
+    val longIn = conv(sources.In("id", (1L to 40L).map(x => x: Any).toArray))
+    assert(longIn.forall(p => "or\\(".r.findAllIn(p.toString).size < 39),
+      s"40-term or-chain built: $longIn")
+
+    // NaN: whatever Spark pushes, a multi-group file holding NaN rows
+    // still returns every matching row
+    val dir = Files.createTempDirectory("graft-rg-nan").toString
+    FileTableCatalog.commitCas(dir, TableSnapshot(1, 1, 0, Nil))
+    val n = 6000L
+    def d(i: Long): Option[Double] =
+      if (i % 97 == 0) None else if (i % 13 == 0) Some(Double.NaN) else Some(i * 0.5)
+    val prev = spark.sparkContext.hadoopConfiguration.get("parquet.block.size")
+    spark.sparkContext.hadoopConfiguration.set("parquet.block.size", "4096")
+    try TableWrites.appendData(dir,
+      (0L until n).map(i => (i, d(i))).toDF("id", "d").coalesce(1))
+    finally {
+      if (prev == null)
+        spark.sparkContext.hadoopConfiguration.unset("parquet.block.size")
+      else spark.sparkContext.hadoopConfiguration.set("parquet.block.size", prev)
+    }
+    def ids(c: org.apache.spark.sql.Column, vectorized: Boolean) =
+      spark.read.format("graft").option("vectorizedRead", vectorized).load(dir)
+        .filter(c).select("id").as[Long].collect().sorted.toSeq
+    for (vec <- Seq(true, false)) {
+      assert(ids($"d".isNaN, vec) ==
+        (0L until n).filter(i => d(i).exists(_.isNaN)), s"d = NaN ($vec)")
+      assert(ids($"d" === Double.NaN, vec) ==
+        (0L until n).filter(i => d(i).exists(_.isNaN)), s"d = NaN ($vec)")
+      // Spark orders NaN above every double
+      assert(ids($"d" > 1.0, vec) ==
+        (0L until n).filter(i => d(i).exists(x => x.isNaN || x > 1.0)), s"d > 1.0 ($vec)")
+      assert(ids($"d".isNull, vec) == (0L until n).filter(i => d(i).isEmpty),
+        s"d IS NULL ($vec)")
+    }
   }
 
   /** One data file with MANY small row groups over sorted ids (so
@@ -83,9 +125,9 @@ class RowGroupPruningSpec extends AnyFunSuite {
 
   test("a selective predicate skips most row groups of the file") {
     val (dir, file, total) = mkMultiGroupTable(20000L)
-    val pred = ParquetPredicate.build(
-      Seq(sources.And(sources.GreaterThanOrEqual("id", 100L),
-        sources.LessThan("id", 300L))), schema, idMap).get
+    val pred = FilterApi.and(
+      FilterApi.gtEq(FilterApi.longColumn("id"), java.lang.Long.valueOf(100L)),
+      FilterApi.lt(FilterApi.longColumn("id"), java.lang.Long.valueOf(300L)))
     val conf = spark.sparkContext.hadoopConfiguration
     val opts = HadoopReadOptions.builder(conf, new org.apache.hadoop.fs.Path(file))
       .withRecordFilter(FilterCompat.get(pred)).build()
