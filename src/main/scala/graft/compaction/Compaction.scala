@@ -5,21 +5,23 @@ import graft.io.FileIO
 import graft.sources.ScanPlanner
 import graft.txn.{CommitManager, FileTableCatalog, TableCatalog}
 import graft.validate.Validator
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Full-compaction driver — the reference's `Compaction::compact()`
   * lifecycle (core/src/compaction/mod.rs:197-352) on Spark:
   *
   *  1. load the current table snapshot (catalog resolve);
   *  2. plan: classify snapshot files into data / pos-delete / eq-delete
-  *     scan tasks (S1+S2);
-  *  3. read data with hidden columns attached only as needed (S3/S5 —
-  *     `needSeqNum` iff eq-deletes exist, `needFilePathAndPos` iff
-  *     pos-deletes exist, mirroring datafusion_processor.rs:506-507);
-  *  4. assemble live rows via the anti-join chain (J1-J3, P3);
-  *  5. write size-targeted parquet (S7-S9, X2);
-  *  6. commit the atomic rewrite with retry + schema guard (T1/T2);
-  *  7. optionally validate (V1); record metrics (M1).
+  *     scan tasks (S1+S2) and select the file groups to rewrite;
+  *  3. read each group's live rows through a DSv2 scan pinned to the
+  *     snapshot and scoped to the group's data files: each task applies
+  *     its file's position deletes, deletion vector and equality deletes
+  *     as it streams the file (J1-J3, P3 — the engine every read uses);
+  *  4. write size-targeted parquet (S7-S9, X2);
+  *  5. commit the atomic rewrite with retry + schema guard (T1/T2);
+  *  6. optionally validate (V1): a fresh count of the same pinned,
+  *     scoped read against the committed files' footer record counts;
+  *     record metrics (M1).
   *
   * Empty table (no snapshot / no files) short-circuits to empty stats,
   * like the reference's early exit (mod.rs:227-232).
@@ -154,7 +156,8 @@ final class Compaction(
         val outDir = s"$tableDir/data/${config.dataFilePrefix}-" +
           java.util.UUID.randomUUID().toString.take(8)
         val request = RewriteFilesRequest(tasks, null, config, outDir,
-          schemas = snap.schemas, currentSchemaId = snap.schemaId)
+          schemas = snap.schemas, currentSchemaId = snap.schemaId,
+          source = Some(SnapshotRef(tableDir, snap.version, catalog)))
         val startingSeq = tasks.dataFiles.map(_.sequenceNumber).max
         val response = executor.rewriteFiles(spark, request, startingSeq)
         val written = response.dataFiles
@@ -218,23 +221,29 @@ final class Compaction(
                 graft.core.WriteOrderCodec.encode(config.sortBy)
               else "")
 
-        // validate (V1). Fanout data files carry every original column
-        // (the writer partitions by mirrored __p_ columns), so committed
-        // leaf files read plainly; an empty rewrite validates as 0 rows
-        // instead of crashing the schema-less parquet read.
+        // validate (V1): the group's live rows, counted by a NEW pinned,
+        // scoped scan (nothing reused from the write's plan; with no
+        // delete file the scoped snapshot's record counts answer it),
+        // against the rows of the files this commit added, from the
+        // footer record counts the commit stamped. A custom executor is
+        // checked against the same pinned input.
         if (config.enableValidateCompaction) {
-          val input = SparkCompactionExecutor.liveRows(spark, tasks,
-            schemas = snap.schemas, currentSchemaId = snap.schemaId)
-          // validate the ADDED files against the rewritten inputs' live
-          // rows (for Incremental, untouched data files are out of scope
-          // on both sides)
-          val committedPaths = committed.files.map(_.path).toSet
-          val dataPaths = written.map(_.filePath).filter(committedPaths.contains)
-          val outputDf =
-            if (dataPaths.isEmpty) input.limit(0)
-            else spark.read.parquet(dataPaths: _*)
-          val aligned = outputDf.select(input.columns.map(org.apache.spark.sql.functions.col): _*)
-          Validator.validate(input, aligned, strict = config.strictValidation)
+          val input = SparkCompactionExecutor.groupRows(spark, request)
+          val writtenPaths = written.map(_.filePath).toSet
+          val added = committed.files.filter(f => writtenPaths(f.path))
+          if (config.strictValidation) {
+            // fanout data files carry every original column, so the
+            // committed leaf files read plainly; an empty rewrite
+            // validates as 0 rows instead of a schema-less read
+            val output =
+              if (added.isEmpty) input.limit(0)
+              else spark.read.parquet(added.map(_.path): _*)
+                .select(input.columns.map(org.apache.spark.sql.functions.col): _*)
+            Validator.validate(input, output, strict = true)
+          } else
+            Validator.validateCounts(input.count(), added.map(f =>
+              if (f.recordCount >= 0) f.recordCount
+              else graft.txn.TableWrites.parquetRowCount(f.path)).sum)
         }
 
         // stats: rewrittenFilesCount is the reference's INPUT-file

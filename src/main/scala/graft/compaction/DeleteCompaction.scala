@@ -127,8 +127,10 @@ object DeleteCompaction {
     if (config.enableValidateCompaction) {
       // the conversion is an identity on live rows BY CONSTRUCTION; with
       // validation on, prove it before committing: |data| - |dead| must
-      // equal the live-row count of the current MoR chain
-      val liveBefore = SparkCompactionExecutor.liveRows(spark, tasks).count()
+      // equal the live-row count of a read pinned to the planned snapshot
+      val liveBefore = graft.sources.TableReader
+        .readOption(spark, tableDir, Some(snap.version), catalog)
+        .fold(0L)(_.count())
       val totalRows = dataRowCount(spark, tasks)
       if (totalRows - deadCount != liveBefore)
         throw CompactionError.Validation(

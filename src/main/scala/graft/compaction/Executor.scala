@@ -3,7 +3,7 @@ package graft.compaction
 import graft.core._
 import graft.plans.{MergeOnRead, SchemaReconcile}
 import graft.sinks.RollingWriter
-import graft.sources.ScanPlanner
+import graft.sources.{ScanPlanner, TableReader}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -17,20 +17,19 @@ trait CompactionExecutor {
       sequenceNumber: Long): RewriteFilesResponse
 }
 
-/** The Spark executor: merge-on-read anti-join assembly + size-targeted
-  * write (the analog of the reference's DataFusion executor,
-  * core/src/executor/datafusion/). */
+/** The Spark executor: the group's live rows from a DSv2 scan pinned to
+  * the request's snapshot and scoped to its data files (per-task delete
+  * application, the engine every read uses), then a size-targeted
+  * write — the analog of the reference's DataFusion executor
+  * (core/src/executor/datafusion/) and of Iceberg's Spark
+  * `rewrite_data_files`, which reads each file group through its own
+  * source scan. */
 object SparkCompactionExecutor extends CompactionExecutor {
 
   override def rewriteFiles(spark: SparkSession, request: RewriteFilesRequest,
       sequenceNumber: Long): RewriteFilesResponse = {
-    // on an evolved table the rewrite reads through schema reconciliation,
-    // so the output files carry the CURRENT schema — compaction migrates
-    // old-layout files as a side effect
-    val live = liveRows(spark, request.tasks,
-      schemas = request.schemas, currentSchemaId = request.currentSchemaId)
-    val written = RollingWriter.write(live, request, sequenceNumber,
-      partitionSpec = request.config.partitionSpec)
+    val written = RollingWriter.write(groupRows(spark, request), request,
+      sequenceNumber, partitionSpec = request.config.partitionSpec)
     RewriteFilesResponse(
       dataFiles = written,
       stat = RewriteFilesStat(
@@ -41,9 +40,26 @@ object SparkCompactionExecutor extends CompactionExecutor {
         rewrittenBytes = request.tasks.inputTotalBytes))
   }
 
-  /** Merge-on-read live rows for the given tasks (reference §3.1 steps
-    * 3-6): hidden columns only as needed, delete tables broadcast when
-    * their file bytes are under the session broadcast threshold.
+  /** Live rows of the request's data files: a read pinned to
+    * `request.source` and scoped to those files, each read in full
+    * under every delete file of the snapshot. Evolved tables read by
+    * field id, so the output carries the CURRENT schema — a rewrite
+    * migrates old-layout files as a side effect. Each call plans a new
+    * scan: nothing is reused from an earlier call's plan. */
+  def groupRows(spark: SparkSession, request: RewriteFilesRequest): DataFrame = {
+    val src = request.source.getOrElse(throw CompactionError.Config(
+      "rewrite request names no source snapshot (RewriteFilesRequest.source)"))
+    TableReader.read(spark, src.tableDir, Some(src.version), src.catalog,
+      dataFiles = Some(request.tasks.dataFiles.map(_.filePath).toSet),
+      splitTargetBytes = request.config.splitTargetBytes)
+  }
+
+  /** Merge-on-read live rows for the given tasks through the anti-join
+    * chain (reference §3.1 steps 3-6): hidden columns only as needed,
+    * delete tables broadcast when their file bytes are under the session
+    * broadcast threshold. Compaction reads through [[groupRows]]
+    * instead; the batch changelog ([[TableReader.changes]] and
+    * [[TableReader.changelog]]) still builds its live rows here.
     * `keepLineage` retains `sys_hidden_file_path`/`sys_hidden_pos` in
     * the output — `TableReader.changelog` stamps a folded append run's
     * commit versions from the file path and matches a position-delete

@@ -111,8 +111,17 @@ final case class RewriteFilesRequest(
       * rewrite MIGRATES old-layout files, exactly like Iceberg's
       * rewrite_data_files on an evolved table. */
     schemas: Seq[TableSchema] = Nil,
-    currentSchemaId: Long = -1L
+    currentSchemaId: Long = -1L,
+    /** The table snapshot `tasks` were planned from. The Spark executor
+      * reads the data files' live rows through a scan pinned to it
+      * ([[graft.compaction.SparkCompactionExecutor.groupRows]]). */
+    source: Option[SnapshotRef] = None
 )
+
+/** One committed snapshot of one table: where it lives, its version and
+  * the catalog that resolves it. */
+final case class SnapshotRef(tableDir: String, version: Long,
+    catalog: graft.txn.TableCatalog)
 
 /** Metadata of one written data file. */
 final case class DataFileMeta(

@@ -66,6 +66,25 @@ object GraftBatchScan {
     * default, realized here for the DSv2 path). */
   val DefaultSplitTargetBytes: Long = 128L * 1024 * 1024
 
+  /** `snap` as a table that holds only the data files in `scope` (every
+    * delete file stays and applies as usual) — what a file-scoped scan
+    * reads: pruning, metadata aggregates, statistics and LIMIT/TopN
+    * truncation all see the scoped file set, never the whole snapshot.
+    * A scoped path the snapshot does not hold fails the read: its rows
+    * would silently go missing. */
+  private[graft] def scopedSnapshot(snap: TableSnapshot,
+      scope: Option[Set[String]]): TableSnapshot = scope.fold(snap) { paths =>
+    val want = paths.map(ScanPlanner.normalizePath)
+    val in = snap.files.filter(f =>
+      f.content != "data" || want.contains(ScanPlanner.normalizePath(f.path)))
+    val missing = want -- in.filter(_.content == "data")
+      .map(f => ScanPlanner.normalizePath(f.path))
+    if (missing.nonEmpty) throw CompactionError.Config(
+      s"${missing.size} scoped data file(s) not in snapshot v${snap.version} " +
+        s"of its table (e.g. ${missing.head})")
+    snap.copy(files = in)
+  }
+
   /** String columns eligible for byte-bound pruning — THE definition,
     * shared by the builder's pushdown acceptance and the scan's
     * plan-time/runtime pruning so they can never diverge. */
@@ -345,7 +364,10 @@ final class GraftScanBuilder(
     changelog: Boolean = false,
     /** Transformed partition-value pruning handed down by the table
       * ([[graft.streaming.GraftTable]]'s `partitionFieldCandidates`). */
-    partitionFieldCandidates: Map[String, Set[String]] = Map.empty
+    partitionFieldCandidates: Map[String, Set[String]] = Map.empty,
+    /** The data files the table holds for this scan
+      * ([[graft.streaming.GraftTable]]'s `dataFileScope`). */
+    dataFileScope: Option[Set[String]] = None
 ) extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
@@ -420,8 +442,9 @@ final class GraftScanBuilder(
     // change rows — fall through to the (refusing) batch path instead
     if (cowOwner.nonEmpty || pushed.nonEmpty || changelog) None
     else
-      try MetadataAgg.tryCompute(
-        agg, TableReader.snapshot(tableDir, asOfVersion, catalog), tableSchema)
+      try MetadataAgg.tryCompute(agg, GraftBatchScan.scopedSnapshot(
+        TableReader.snapshot(tableDir, asOfVersion, catalog), dataFileScope),
+        tableSchema)
       catch { case scala.util.control.NonFatal(_) => None }
 
   override def supportCompletePushDown(
@@ -500,7 +523,8 @@ final class GraftScanBuilder(
         vectorizedRead, equalityCandidates(pushed.toSeq), pushed.toSeq,
         changelog = changelog, pushedLimit = pushedLimitN,
         pushedTopN = pushedTopNCol,
-        partitionFieldCandidates = partitionFieldCandidates)
+        partitionFieldCandidates = partitionFieldCandidates,
+        dataFileScope = dataFileScope)
   }
 }
 
@@ -532,7 +556,9 @@ final class GraftScan(
     /** Pushed `ORDER BY col [DESC] LIMIT n` leading key: file truncation
       * by stamped bounds ([[ScanPruning.truncateForTopN]]). */
     pushedTopN: Option[(String, Boolean)] = None,
-    partitionFieldCandidates: Map[String, Set[String]] = Map.empty
+    partitionFieldCandidates: Map[String, Set[String]] = Map.empty,
+    /** Data-file scope ([[GraftBatchScan.scopedSnapshot]]). */
+    dataFileScope: Option[Set[String]] = None
 ) extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering with SupportsReportPartitioning
     with SupportsReportOrdering {
@@ -638,7 +664,8 @@ final class GraftScan(
       tableDir, tableSchema, startingVersion, skipDeletes, catalog,
       changelog = changelog)
 
-  private lazy val snap: TableSnapshot = TableReader.snapshot(tableDir, asOfVersion, catalog)
+  private lazy val snap: TableSnapshot = GraftBatchScan.scopedSnapshot(
+    TableReader.snapshot(tableDir, asOfVersion, catalog), dataFileScope)
 
   /** Footer stats are keyed by PHYSICAL column names, so pruning only
     * applies to files written under the current schema; older files
@@ -957,16 +984,17 @@ final class GraftScan(
     * position deletes (equality-delete selectivity is unknowable without
     * reading keys — leaving it out overestimates, which only errs on the
     * safe side of a broadcast decision). Position deletes are subtracted
-    * only for an UNPRUNED scan — decided by comparing the surviving file
-    * set against the snapshot's, so EVERY pruning mechanism (bounds,
-    * partition, null-count) disables the subtraction: after file pruning
-    * the deletes targeting pruned-away files would deflate the estimate
-    * below the truth, and an underestimate is the dangerous direction
-    * (it invites broadcasting a large side). */
+    * only for an UNPRUNED, unscoped scan — decided by comparing the
+    * surviving file set against the snapshot's, so EVERY pruning
+    * mechanism (bounds, partition, null-count) disables the subtraction:
+    * after file pruning or scoping the deletes targeting left-out files
+    * would deflate the estimate below the truth, and an underestimate is
+    * the dangerous direction (it invites broadcasting a large side). */
   override def estimateStatistics(): Statistics = {
     val bytes = prunedDataFiles.map(_.sizeBytes).sum
     val posDeleted =
-      if (prunedDataFiles.size != snap.files.count(_.content == "data")) 0L
+      if (dataFileScope.nonEmpty ||
+          prunedDataFiles.size != snap.files.count(_.content == "data")) 0L
       else snap.files.filter(f => f.content == "position-deletes" ||
           f.content == "deletion-vectors")
         .map(_.recordCount).sum

@@ -216,7 +216,7 @@ object MetadataAgg {
         // a group whose files are ALL empty holds no rows — no group
         .filter(_._2.exists(_._2.recordCount != 0L))
         // deterministic output order (Spark re-sorts above if needed)
-        .sortBy(_._1.map(v => if (v == null) "" else v.toString).mkString(" "))
+        .sortBy(_._1.map(v => if (v == null) "" else v.toString).mkString("\u0000"))
       val rows = groups.map { case (key, fs) =>
         aggRow(fs.map(_._2)) match {
           case Some(rs) => (key, rs)

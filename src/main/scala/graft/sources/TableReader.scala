@@ -17,11 +17,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *  - [[read]] / [[readOption]] read through the DSv2 scan
   *    ([[GraftScan]]): per-task delete application, file pruning from the
   *    pushed filters, no join and no shuffle — the same scan SQL and
-  *    `format("graft")` use;
+  *    `format("graft")` use, and, scoped to a file group, compaction's
+  *    input and validation;
   *  - [[changes]] and the [[changelog]] family read scoped file subsets
-  *    with the anti-join chain ([[SparkCompactionExecutor.liveRows]]),
-  *    which compaction and validation also use: a delete backlog there
-  *    may shuffle instead of having to fit in task memory.
+  *    with the anti-join chain ([[SparkCompactionExecutor.liveRows]]).
   *
   * Time travel: pass `asOfVersion` to read any retained snapshot
   * (snapshots exist until [[graft.txn.CommitManager.expireSnapshots]]
@@ -72,16 +71,29 @@ object TableReader {
         * name → allowed rendered values), see
         * [[graft.streaming.GraftTable]]. Callers must guarantee the rows
         * they consume can only live in the named partitions. */
-      partitionFieldCandidates: Map[String, Set[String]] = Map.empty
+      partitionFieldCandidates: Map[String, Set[String]] = Map.empty,
+      /** Read only these data files of the snapshot, each in full, under
+        * every delete file (see [[graft.streaming.GraftTable]]'s
+        * `dataFileScope`) — a compaction file group's live rows. */
+      dataFiles: Option[Set[String]] = None,
+      /** Files above this size split into row-group-aligned tasks. */
+      splitTargetBytes: Long = GraftBatchScan.DefaultSplitTargetBytes
   ): Option[DataFrame] = {
     val snap = snapshot(tableDir, asOfVersion, catalog)
-    if (!snap.files.exists(_.content == "data")) None
+    if (!GraftBatchScan.scopedSnapshot(snap, dataFiles).files
+        .exists(_.content == "data")) None
     else {
       val table = new GraftTable(tableDir, GraftTableSource.schemaOf(snap),
         pinnedVersion = Some(snap.version), catalog = catalog,
-        partitionFieldCandidates = partitionFieldCandidates)
+        partitionFieldCandidates = partitionFieldCandidates,
+        dataFileScope = dataFiles)
+      val options =
+        if (splitTargetBytes == GraftBatchScan.DefaultSplitTargetBytes)
+          org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()
+        else new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+          java.util.Map.of("splitTargetBytes", splitTargetBytes.toString))
       val df = DatasetBridge.ofRows(spark,
-        DataSourceV2Relation.create(table, None, None))
+        DataSourceV2Relation.create(table, None, None, options))
       Some(filter.fold(df)(df.filter))
     }
   }
@@ -93,10 +105,12 @@ object TableReader {
       asOfVersion: Option[Long] = None,
       catalog: TableCatalog = FileTableCatalog,
       filter: Option[Column] = None,
-      partitionFieldCandidates: Map[String, Set[String]] = Map.empty
+      partitionFieldCandidates: Map[String, Set[String]] = Map.empty,
+      dataFiles: Option[Set[String]] = None,
+      splitTargetBytes: Long = GraftBatchScan.DefaultSplitTargetBytes
   ): DataFrame =
     readOption(spark, tableDir, asOfVersion, catalog, filter,
-      partitionFieldCandidates).getOrElse(
+      partitionFieldCandidates, dataFiles, splitTargetBytes).getOrElse(
       throw CompactionError.Config(
         s"table has no data files at the requested version under $tableDir"))
 

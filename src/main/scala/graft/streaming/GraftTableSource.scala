@@ -134,7 +134,14 @@ final class GraftTable(tableDir: String, tblSchema: StructType,
       * pruning ([[graft.sources.PartitionPruning.pruneByFieldValues]]).
       * Purely an IO optimization: the caller guarantees the rows it
       * consumes can only live in the named partitions. */
-    partitionFieldCandidates: Map[String, Set[String]] = Map.empty)
+    partitionFieldCandidates: Map[String, Set[String]] = Map.empty,
+    /** When set, the table holds only these data files of its snapshot
+      * (every delete file still applies): a file-group read such as a
+      * compaction's input. Unlike a filter this skips no row inside a
+      * scoped file, and every consumer of the file set — pruning,
+      * metadata COUNT(*)/MIN/MAX, statistics, LIMIT truncation — sees
+      * the scoped files only ([[graft.sources.GraftBatchScan.scopedSnapshot]]). */
+    dataFileScope: Option[Set[String]] = None)
     extends Table with SupportsRead with SupportsWrite with SupportsDelete
     with SupportsMetadataColumns with SupportsRowLevelOperations {
   /** The table's directory — the identity the materialized-view
@@ -183,7 +190,8 @@ final class GraftTable(tableDir: String, tblSchema: StructType,
     new graft.sources.GraftScanBuilder(tableDir, scanSchema, asOfVersion,
       catalog, startingVersion, skipDeletes,
       splitTargetBytes = splitTarget, vectorizedRead = vectorized,
-      changelog = changelog, partitionFieldCandidates = partitionFieldCandidates)
+      changelog = changelog, partitionFieldCandidates = partitionFieldCandidates,
+      dataFileScope = dataFileScope)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {

@@ -4,10 +4,11 @@ import graft.core.CompactionError
 import org.apache.spark.sql.DataFrame
 
 /** Post-compaction validation — reference V1 (`CompactionValidator`,
-  * core/src/compaction/validator.rs:36-166): re-scan the input through the
-  * same merge-on-read path and the output files, and compare TOTAL ROW
-  * COUNTS; error on mismatch. Runs only when
-  * `enableValidateCompaction` (2x read cost).
+  * core/src/compaction/validator.rs:36-166): compare the input's live
+  * row count against the output's TOTAL ROW COUNT; error on mismatch.
+  * Runs only when `enableValidateCompaction`. Compaction counts its
+  * input with one pinned scan and takes the output count from the
+  * committed files' footer record counts ([[validateCounts]]).
   *
   * `strict` upgrades the check to full multiset equality via ONE
   * signed-tag aggregate (input rows +1, output rows -1, grouped on all
@@ -20,12 +21,16 @@ import org.apache.spark.sql.DataFrame
 object Validator {
   final case class Result(inputRows: Long, outputRows: Long, valid: Boolean)
 
-  def validate(inputLive: DataFrame, output: DataFrame, strict: Boolean = false): Result = {
-    val in = inputLive.count()
-    val out = output.count()
+  /** The count compare alone, over counts the caller already has. */
+  def validateCounts(in: Long, out: Long): Result = {
     if (in != out)
       throw CompactionError.Validation(
         s"row count mismatch after compaction: input=$in output=$out")
+    Result(in, out, valid = true)
+  }
+
+  def validate(inputLive: DataFrame, output: DataFrame, strict: Boolean = false): Result = {
+    val counted = validateCounts(inputLive.count(), output.count())
     if (strict) {
       // ONE-SHUFFLE multiset diff (the TableReader.changes discipline):
       // tag input rows +1 and output rows -1, aggregate per distinct
@@ -61,6 +66,6 @@ object Validator {
         throw CompactionError.Validation(
           s"content mismatch after compaction: missing=$missing extra=$extra")
     }
-    Result(in, out, valid = true)
+    counted
   }
 }

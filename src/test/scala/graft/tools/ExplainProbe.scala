@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * queries — the plan-iteration loop for new operators.
   *
   * Usage:
-  *   sbt "runMain graft.tools.ExplainProbe <sfDir> <query>[,<query>...]"
+  *   sbt "Test/runMain graft.tools.ExplainProbe <sfDir> <query>[,<query>...]"
   *
   * With SPARK_GRAFT_PLAN_DIR=<dir> set, additionally writes each
   * query's `.explain("formatted")` text (initial plan — stable operator

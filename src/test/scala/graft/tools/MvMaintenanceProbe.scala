@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * exactly the one new commit (marker → current), i.e. per-batch cost
   * scales with the batch, never the table history.
   *
-  * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain
+  * Usage: SPARK_GRAFT_SF_DIR=<sf0.1 fixture dir> sbt "Test/runMain
   * graft.tools.MvMaintenanceProbe"
   */
 object MvMaintenanceProbe {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   * One untimed warm-up per query absorbs whole-stage-codegen compile
   * spikes (first-task JIT reads as a phantom straggler otherwise).
   *
-  * Usage: `runMain graft.tools.ScaleProbe <sfDir> <q1,q2,…>` */
+  * Usage: `sbt "Test/runMain graft.tools.ScaleProbe <sfDir> <q1,q2,…>"` */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ScaleProbe <sfDir> <q1,q2,...>")
